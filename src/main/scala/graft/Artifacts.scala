@@ -98,24 +98,21 @@ object Artifacts {
   def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val mode = spark.conf.getOption("spark.graft.materialize").getOrElse("auto")
-    val reliable = mode match {
+    val reliable = GraftConf.materialize(spark) match {
       case "local"    => false
       case "reliable" => true
-      case "auto"     => !sc.isLocal
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize must be auto|local|reliable, got '$other'")
+      case _          => !sc.isLocal // auto
     }
     if (!reliable) df.localCheckpoint(eager = true)
     else {
       if (sc.getCheckpointDir.isEmpty) {
-        spark.conf.getOption("spark.graft.checkpointDir") match {
+        GraftConf.checkpointDir(spark) match {
           case Some(dir) => sc.setCheckpointDir(dir)
           case None => throw new IllegalStateException(
             "Reliable artifact materialization needs a checkpoint " +
               "directory on shared storage: call " +
-              "SparkContext.setCheckpointDir or set " +
-              "spark.graft.checkpointDir. (localCheckpoint would lose " +
+              s"SparkContext.setCheckpointDir or set ${GraftConf.checkpointDir.name}. " +
+              "(localCheckpoint would lose " +
               "the only copy of this artifact on executor loss.)")
         }
       }

@@ -1,105 +1,16 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  /** Parse the SPARK_GRAFT_CONF passthrough — semicolon-separated
-    * key=value pairs — failing LOUDLY on a pair without '=' (the
-    * previous inline destructure died in an anonymous MatchError,
-    * which is a miserable way to learn you typed a comma). */
-  private[graft] def parseConf(raw: String): Seq[(String, String)] =
-    raw.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
-      val i = kv.indexOf('=')
-      require(i > 0,
-        s"SPARK_GRAFT_CONF entry '$kv' is not key=value (semicolon-separated pairs)")
-      (kv.substring(0, i), kv.substring(i + 1))
-    }
-
-  /** Locale-independent fixed-point formatting: the f interpolator uses
-    * the JVM default locale, which under e.g. de_DE emits a decimal
-    * comma — invalid JSON. Shared by every artifact writer in the
-    * package (Bench, RecallProbe). */
-  private[graft] def num(v: Double, digits: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-  private[graft] def num4(v: Double): String = num(v, 4)
-
-  /** Minimal JSON string-content escaper, shared by every artifact
-    * writer that embeds free text (e.g. the SPARK_GRAFT_CONF
-    * passthrough): backslash and quote escaped, control characters
-    * \\u-encoded — a conf value containing any of them must not
-    * produce an invalid artifact. */
-  private[graft] def jsonStr(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"
-      case '"'  => "\\\""
-      case c if c < ' ' =>
-        String.format(java.util.Locale.ROOT, "\\u%04x", Integer.valueOf(c.toInt))
-      case c => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // partition count defaults to the thread count (the committed
-    // methodology) but can be raised independently for scale probes:
-    // per-partition volume, not thread count, is what drifts out of the
-    // memory regime when the same 32 partitions carry ×100 the data
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // state-backend override, mirroring Verify: times the streaming
-    // family under RocksDB instead of the local default
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(spark.conf.set("spark.graft.stateStore", _))
-    // materialization-mode override, mirroring Verify
-    sys.env.get("SPARK_GRAFT_MATERIALIZE")
-      .foreach(spark.conf.set("spark.graft.materialize", _))
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.conf.set("spark.graft.checkpointDir", _))
-    // generic conf passthrough for targeted probes, e.g.
-    // SPARK_GRAFT_CONF="spark.graft.hardNegatives.exactMax=0"
-    // (semicolon-separated key=value pairs)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      parseConf(_).foreach { case (k, v) => spark.conf.set(k, v) })
-    // Two passes, min per query: a single shared-JVM pass occasionally
-    // eats a multi-second GC/JIT storm on one arbitrary query; min-of-two
-    // reports steady-state per-query cost (what a warmed executor does).
-    // optional comma-separated filter for targeted timing runs
-    // Timed action. `count` is the driver's committed methodology, but
-    // Catalyst prunes computed columns nothing references (a heavy
-    // decimal column can cost ~0 under count — the q218 class).
-    // `checksum` forces EVERY output column through an aggregate
-    // (bit_xor of xxhash64 over the whole row struct — xor, not sum:
-    // summing 2^63-scale hashes overflows under ANSI mode), so the
-    // timed number is the full cost of producing the advertised output
-    // — the honest absolute, used for the committed checksum baseline.
-    val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "count")
-    require(action == "count" || action == "checksum",
-      s"SPARK_GRAFT_BENCH_ACTION must be count|checksum, got '$action'")
-    def timedAction(df: DataFrame): Unit = action match {
-      case "count" => df.count(); ()
-      case "checksum" =>
-        import org.apache.spark.sql.functions.{bit_xor, xxhash64, struct, col}
-        df.agg(bit_xor(xxhash64(struct(col("*"))))).head(); ()
-    }
+    val sfDir = Harness.env.sfDir
+    val action = Harness.env.action
+    val spark = Harness.session("graft-bench")
     // CPU-steal instrumentation (see StealMeter): per-query and per-run
     // stolen fractions ride in the artifact so a slow entry carries its
     // own environmental adjudication.
     import StealMeter.{cpuTicks, stealFrac}
+    import Harness.num4
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in registry: ${unknown.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val selected = Harness.selected
     // a FAILED query is recorded as a NEGATIVE elapsed (sentinel in the
     // artifact itself, not just a stderr line) and excluded from the
     // cross-pass min and the total — a fast time-to-exception must never
@@ -117,7 +28,7 @@ object Bench {
         val s0 = cpuTicks()
         val t0 = System.nanoTime()
         val ok =
-          try { timedAction(fn(spark, sfDir)); true } catch { case e: Throwable =>
+          try { Harness.timedAction(fn(spark, sfDir)); true } catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
           }

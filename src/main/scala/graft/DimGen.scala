@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** High-dimension embedding synthesizer for the d-scaling probe: q218 /
@@ -17,14 +16,7 @@ object DimGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: DimGen <inSfDir> <outDir> <dims>")
     val (in, out, d) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-dimgen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-dimgen")
     val src = spark.read.parquet(s"$in/embeddings.parquet")
     val d0 = src.select(size(col("embedding"))).head().getInt(0)
     val reps = (d + d0 - 1) / d0

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Document-LENGTH scaling probe data: same corpus bytes, ×factor longer
@@ -24,14 +23,7 @@ object LenGen {
     require(args.length >= 3, "usage: LenGen <inSfDir> <outDir> <factor>")
     val Array(in, out, f) = args.take(3)
     val factor = f.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-lengen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-lengen")
     val docs = spark.read.parquet(s"$in/documents.parquet")
     // full documents schema: the probe dataset must be a drop-in
     // replacement for the whole registry, not just the SA family —

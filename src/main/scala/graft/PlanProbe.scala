@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 /** Scale-residual adjudication probe: run named queries under the Bench
@@ -18,7 +17,9 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
   * q152/q100/q146: a broadcast-threshold crossover shows up as
   * BroadcastHashJoin→SortMergeJoin flips between scale points in (a);
   * a GC regime shift shows up as a rising gcFrac in (b) with an
-  * unchanged join census.
+  * unchanged join census. The dumps are also the plan audit: whether
+  * filters reach the scan, small sides broadcast, and aggregates keep
+  * their partial phase before the shuffle.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/tmp/sf1 SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.PlanProbe q152_kcore q100_triangle_count"
@@ -41,20 +42,11 @@ object PlanProbe {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanProbe <query> [query ...]")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
+    val sfDir = Harness.env.sfDir
     val outDir = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT",
       s"/tmp/graft-plans/${java.nio.file.Paths.get(sfDir).getFileName}"))
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-plan-probe")
 
     val unknown = args.toSet.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
@@ -99,20 +91,10 @@ object PlanProbe {
         "Exchange hashpartitioning")
         .map(op => op -> op.r.findAllMatchIn(text).size).toMap
 
-    // Timed action mirrors Bench: `count` is the committed methodology,
-    // `checksum` prices every advertised output column. Probing BOTH
-    // modes is how a count-only plan pathology (column pruning shifting
-    // AQE's estimates into a worse join strategy) is told apart from an
-    // unpriced-column defect (the q82 class).
-    val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "count")
-    require(action == "count" || action == "checksum",
-      s"SPARK_GRAFT_BENCH_ACTION must be count|checksum, got '$action'")
-    def timedAction(df: org.apache.spark.sql.DataFrame): Unit = action match {
-      case "count" => df.count(); ()
-      case "checksum" =>
-        import org.apache.spark.sql.functions.{bit_xor, xxhash64, struct, col}
-        df.agg(bit_xor(xxhash64(struct(col("*"))))).head(); ()
-    }
+    // Probing under both bench actions tells a count-only plan pathology
+    // (column pruning shifting AQE's estimates into a worse join
+    // strategy) apart from an unpriced-column defect (the q82 class).
+    val action = Harness.env.action
 
     args.foreach { name =>
       plans.clear()
@@ -120,7 +102,7 @@ object PlanProbe {
       Artifacts.clearAll()
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      timedAction(SparkEntry.queries(name)(spark, sfDir))
+      Harness.timedAction(SparkEntry.queries(name)(spark, sfDir))
       val elapsed = (System.nanoTime() - t0) / 1e9
       // The listener bus is async and, at sf10, AQE plan-update events
       // carry multi-MB plan strings — a fixed sleep can read the census

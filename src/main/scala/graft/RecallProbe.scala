@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN quality probe for q69's hard-negative auto-delegation: runs the
@@ -20,22 +19,11 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RecallProbe <sfDir> [outJson]")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // generic conf passthrough, same contract as Bench — e.g.
-    // SPARK_GRAFT_CONF="spark.graft.hardNegatives.nprobe=16" for the
-    // recall/latency tuning sweeps
-    val conf = sys.env.get("SPARK_GRAFT_CONF")
-    conf.foreach(Bench.parseConf(_).foreach { case (k, v) => spark.conf.set(k, v) })
+    // the harness's SPARK_GRAFT_CONF passthrough (e.g.
+    // spark.graft.hardNegatives.nprobe=16) drives the tuning sweeps
+    val spark = Harness.session("graft-recall-probe")
+    val conf = Harness.env.confRaw
+    val exactMax = GraftConf.hardNegatives.exactMax.name
 
     val q = SparkEntry.queries("q69_hard_negatives")
 
@@ -45,7 +33,7 @@ object RecallProbe {
       (a, (System.nanoTime() - t0) / 1e9)
     }
 
-    spark.conf.set("spark.graft.hardNegatives.exactMax", Long.MaxValue.toString)
+    spark.conf.set(exactMax, Long.MaxValue.toString)
     val (exact, exactSec) = timed {
       val df = q(spark, sfDir)
         .select(col("vec_id"), col("hard_negative").as("ex_nb"),
@@ -54,7 +42,7 @@ object RecallProbe {
       df.count()
       df
     }
-    spark.conf.set("spark.graft.hardNegatives.exactMax", "0")
+    spark.conf.set(exactMax, "0")
     val (ann, annSec) = timed {
       val df = q(spark, sfDir)
         .select(col("vec_id"), col("hard_negative").as("ann_nb"),
@@ -85,7 +73,7 @@ object RecallProbe {
 
     val n = r.getLong(0)
     val covered = r.getLong(1)
-    def d6(v: Double) = Bench.num(v, 6)
+    def d6(v: Double) = Harness.num(v, 6)
     // total dropout leaves every gap aggregate SQL NULL — the probe
     // must still emit the artifact (the dropout count IS the finding)
     def gap(i: Int) = if (r.isNullAt(i)) "null" else d6(r.getDouble(i))
@@ -93,7 +81,7 @@ object RecallProbe {
     // the same null treatment as the gap aggregates
     def ratio(i: Int) = if (n == 0) "null" else d6(r.getLong(i).toDouble / n)
     val line = Seq(
-      s""""sf":"${Bench.jsonStr(sfDir)}"""",
+      s""""sf":"${Harness.jsonStr(sfDir)}"""",
       s""""n":$n""",
       s""""covered":$covered""",
       s""""dropout":${n - covered}""",
@@ -106,7 +94,7 @@ object RecallProbe {
       s""""gap_min":${gap(8)}""",
       s""""exact_sec":${d6(exactSec)}""",
       s""""ann_sec":${d6(annSec)}"""
-    ).++(conf.map(c => s""""conf":"${Bench.jsonStr(c)}"""").toSeq)
+    ).++(conf.map(c => s""""conf":"${Harness.jsonStr(c)}"""").toSeq)
       .mkString("{", ",", "}")
     println(line)
     args.lift(1).foreach { out =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Key-SKEW stress corpus: same tables, adversarial key distribution.
@@ -41,14 +40,7 @@ object SkewGen {
     val Array(in, out) = args.take(2)
     val skewOrders = args.drop(2).contains("orders")
     val skewParts = args.drop(2).contains("parts")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-skewgen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-skewgen")
 
     val events = spark.read.parquet(s"$in/events.parquet")
     val hot = events.groupBy("user_id").count()

@@ -1,68 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  * Deployment-shaped runs set the harness aliases (e.g.
+  * SPARK_GRAFT_STATE_STORE=rocksdb, or SPARK_GRAFT_MATERIALIZE=reliable
+  * with SPARK_GRAFT_CHECKPOINT_DIR=<dir>) to oracle-verify those paths. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // state-backend override for deployment-shaped runs (e.g.
-    // SPARK_GRAFT_STATE_STORE=rocksdb oracle-verifies the streaming
-    // family under the 100 TB backend; default: auto → hdfs locally)
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(spark.conf.set("spark.graft.stateStore", _))
-    // materialization-mode override (SPARK_GRAFT_MATERIALIZE=reliable
-    // with SPARK_GRAFT_CHECKPOINT_DIR=<dir> oracle-verifies the
-    // build-once artifact families under the cluster deployment path)
-    sys.env.get("SPARK_GRAFT_MATERIALIZE")
-      .foreach(spark.conf.set("spark.graft.materialize", _))
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.conf.set("spark.graft.checkpointDir", _))
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated filter for targeted runs (same contract
-    // as Bench: names trimmed and validated against the registry)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in registry: ${unknown.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    selected.foreach { case (name, fn) =>
+    Harness.selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // release any per-query persisted intermediates (same hygiene as
-      // Bench): a 145-query session must not accumulate cached state
+      // Bench): a 228-query session must not accumulate cached state
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped — a tab or CR in an oracle SQL string
+    // would otherwise make the json.load of the oracle compare fail
+    def q(s: String): String = "\"" + Harness.jsonStr(s) + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => Harness.env.only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

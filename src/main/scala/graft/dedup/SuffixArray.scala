@@ -250,8 +250,7 @@ object SuffixArray {
     // lead round does not — checkpointing a corpus-sized frame costs
     // more than re-running its single exchange.
     val input =
-      if (materializeInput) timed("  rankStep: input materialize")(
-        graft.Artifacts.materialize(df))
+      if (materializeInput) graft.Artifacts.materialize(df)
       else df
     // ONE materialization per round: the SLIM stitch frame — group/class
     // columns only, none of the (up to initK-byte) sort-key bytes — is
@@ -266,77 +265,64 @@ object SuffixArray {
         col("ambig")) ++
         (if (refine) Seq(col(keys.head), col("pos"), col("chg1"),
           col("loc1")) else Nil)
-    val slim = timed("  rankStep: sort+flag+slim materialize")(
-      graft.Artifacts.materialize(
-        sortAndFlag(input, keys).select(stitchCols: _*)))
-    timed("  rankStep: census+stitch") {
-      val aggs = Seq(
-        count(lit(1)).as("nr"), sum(col("chg")).as("ng"),
-        sum(when(col("ambig"), 1L).otherwise(0L)).as("nar"),
-        sum(when(col("ambig") && col("chg") === 1, 1L).otherwise(0L))
-          .as("nag"),
-        // rides along so ranksWithStats' maxLen needs no extra
-        // corpus-scan job after the base round
-        max(col("off")).as("mo")) ++ (if (refine) Seq(
-        min(col(keys.head)).as("fk"), max(col(keys.head)).as("lk"),
-        max(when(col("chg1") === 1, col("pos"))).as("lgs")) else Nil)
-      // bounded census: a handful of longs per partition
-      val byPid = slim.groupBy("pid").agg(aggs.head, aggs.tail: _*)
-        .collect().map(r => r.getInt(0) -> r).toMap
-      val maxPid = if (byPid.isEmpty) -1 else byPid.keys.max
-      val bases = new Array[Long](maxPid + 2)
-      val span = Array.fill[Long](maxPid + 2)(-1L)
-      var acc = 0L
-      var (ng, nar, nag) = (0L, 0L, 0L)
-      var maxOff = 0L
-      // the r-class open at the current partition boundary, for chaining
-      // spanning class starts (refine only)
-      var openR = 0L
-      var openStart = -1L
-      var havePrev = false
-      for (pid <- 0 to maxPid; r <- byPid.get(pid)) {
-        bases(pid) = acc
-        if (refine) {
-          val fk = r.getLong(r.fieldIndex("fk"))
-          val lk = r.getLong(r.fieldIndex("lk"))
-          val lgs = r.getLong(r.fieldIndex("lgs"))
-          if (havePrev && fk == openR) span(pid) = openStart
-          openStart =
-            if (lk == fk && span(pid) >= 0) span(pid) else acc + lgs
-          openR = lk
-          havePrev = true
-        }
-        acc += r.getLong(r.fieldIndex("nr"))
-        ng += r.getLong(r.fieldIndex("ng"))
-        nar += r.getLong(r.fieldIndex("nar"))
-        nag += r.getLong(r.fieldIndex("nag"))
-        val mo = r.fieldIndex("mo")
-        if (!r.isNullAt(mo)) maxOff = math.max(maxOff, r.getLong(mo))
+    val slim = graft.Artifacts.materialize(
+      sortAndFlag(input, keys).select(stitchCols: _*))
+    val aggs = Seq(
+      count(lit(1)).as("nr"), sum(col("chg")).as("ng"),
+      sum(when(col("ambig"), 1L).otherwise(0L)).as("nar"),
+      sum(when(col("ambig") && col("chg") === 1, 1L).otherwise(0L))
+        .as("nag"),
+      // rides along so ranksWithStats' maxLen needs no extra
+      // corpus-scan job after the base round
+      max(col("off")).as("mo")) ++ (if (refine) Seq(
+      min(col(keys.head)).as("fk"), max(col(keys.head)).as("lk"),
+      max(when(col("chg1") === 1, col("pos"))).as("lgs")) else Nil)
+    // bounded census: a handful of longs per partition
+    val byPid = slim.groupBy("pid").agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getInt(0) -> r).toMap
+    val maxPid = if (byPid.isEmpty) -1 else byPid.keys.max
+    val bases = new Array[Long](maxPid + 2)
+    val span = Array.fill[Long](maxPid + 2)(-1L)
+    var acc = 0L
+    var (ng, nar, nag) = (0L, 0L, 0L)
+    var maxOff = 0L
+    // the r-class open at the current partition boundary, for chaining
+    // spanning class starts (refine only)
+    var openR = 0L
+    var openStart = -1L
+    var havePrev = false
+    for (pid <- 0 to maxPid; r <- byPid.get(pid)) {
+      bases(pid) = acc
+      if (refine) {
+        val fk = r.getLong(r.fieldIndex("fk"))
+        val lk = r.getLong(r.fieldIndex("lk"))
+        val lgs = r.getLong(r.fieldIndex("lgs"))
+        if (havePrev && fk == openR) span(pid) = openStart
+        openStart =
+          if (lk == fk && span(pid) >= 0) span(pid) else acc + lgs
+        openR = lk
+        havePrev = true
       }
-      val b: Column = element_at(typedlit(bases.toSeq), col("pid") + 1)
-      val rOut: Column = if (!refine) b + col("loc") else {
-        val sp = element_at(typedlit(span.toSeq), col("pid") + 1)
-        // loc1 == 1 ⇔ the row sits in its partition's FIRST r-class,
-        // the only one that can have started in an earlier partition
-        val p1 = when(col("loc1") === 1 && sp >= 0, sp)
-          .otherwise(b + col("loc1"))
-        col("r") + ((b + col("loc")) - p1)
-      }
-      val out = slim
-        .select(col("doc_id"), col("off"), rOut.cast("long").as("r"),
-          col("ambig"))
-      (out, Census(acc, ng, nar, nag, maxOff))
+      acc += r.getLong(r.fieldIndex("nr"))
+      ng += r.getLong(r.fieldIndex("ng"))
+      nar += r.getLong(r.fieldIndex("nar"))
+      nag += r.getLong(r.fieldIndex("nag"))
+      val mo = r.fieldIndex("mo")
+      if (!r.isNullAt(mo)) maxOff = math.max(maxOff, r.getLong(mo))
     }
-  }
-
-  private val debug = sys.env.get("SPARK_GRAFT_SA_DEBUG").contains("1")
-  private def dbg(msg: => String): Unit =
-    if (debug) System.err.println(s"[sa] $msg")
-  private def timed[A](label: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val out = body
-    dbg(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    out
+    val b: Column = element_at(typedlit(bases.toSeq), col("pid") + 1)
+    val rOut: Column = if (!refine) b + col("loc") else {
+      val sp = element_at(typedlit(span.toSeq), col("pid") + 1)
+      // loc1 == 1 ⇔ the row sits in its partition's FIRST r-class,
+      // the only one that can have started in an earlier partition
+      val p1 = when(col("loc1") === 1 && sp >= 0, sp)
+        .otherwise(b + col("loc1"))
+      col("r") + ((b + col("loc")) - p1)
+    }
+    val out = slim
+      .select(col("doc_id"), col("off"), rOut.cast("long").as("r"),
+        col("ambig"))
+    (out, Census(acc, ng, nar, nag, maxOff))
   }
 
   /** Suffix ranks for every (doc, offset): `r` orders all suffixes of all
@@ -406,8 +392,6 @@ object SuffixArray {
         else if (amb16n <= CensusFrozenSafe * nS) 16
         else if (amb32n <= CensusFrozenSafe * nS) 32
         else 64
-      dbg(f"initK census: n=$nS amb16=${amb16n.toDouble / math.max(nS, 1)}%.3f " +
-        f"amb32=${amb32n.toDouble / math.max(nS, 1)}%.3f -> initK=$chosen")
       // keep the depth-32 ambiguity estimate: when the base rank runs
       // shallower than FirstBand(32), the annex cascade should size
       // itself by this, not by the (over-stated) depth-k0 ambiguity
@@ -455,17 +439,15 @@ object SuffixArray {
     // ambiguous classes. Ranks are a total order over suffixes, so the
     // starting depth changes round shape, never output.
     // A census runs whenever the base rank will be SHALLOWER than
-    // FirstBand — even for a caller-forced initK (SPARK_GRAFT_SA_INITK
-    // =16): without it the published dupFrac would be the over-stated
+    // FirstBand — even for a caller-forced initK (e.g. 16): without it the published dupFrac would be the over-stated
     // depth-k0 ambiguity, which can flip the annex cascade to
     // HeadBand-only and forfeit the FirstBand pre-pass saving. The
     // forced k0 is honored; only the ambiguity estimate is measured.
     val (k0, censusAmb32) =
       if (initK >= FirstBand) (initK, None: Option[Double])
       else if (initK > 0)
-        (initK, timed("initK census (forced shallow base)")(
-          censusInitK(spread, censusMinRows))._2)
-      else timed("initK census")(censusInitK(spread, censusMinRows))
+        (initK, censusInitK(spread, censusMinRows)._2)
+      else censusInitK(spread, censusMinRows)
     val prefixes = spread
       // sequence(1, 0) would DESCEND ([1, 0]) — empty docs must not
       // reach the explode (hence the length filter above)
@@ -474,10 +456,8 @@ object SuffixArray {
       .select(col("doc_id"), col("off32").cast("long").as("off"),
         expr(s"substr(text, off32, $k0)").as("pfx"))
 
-    val (state0, c0) = timed(s"base rank (initK=$k0)") {
-      rankStep(prefixes, Seq("pfx"), refine = false,
-        materializeInput = false)
-    }
+    val (state0, c0) = rankStep(prefixes, Seq("pfx"), refine = false,
+      materializeInput = false)
     def strip(df: DataFrame): DataFrame =
       df.select(col("doc_id"), col("off"), col("r"))
     // emptiness first: an empty/all-null corpus exits on the empty frame
@@ -613,14 +593,8 @@ object SuffixArray {
           .select((Seq("doc_id", "off", "r") ++ rCols).map(col): _*)
           .na.fill(-1L, rCols), "r" +: rCols)
       }
-      val mode =
-        if (!frozenMode) s"full, m=$mDoub"
-        else if (useExt) s"frozen ext=$extAdv, active=$nActive"
-        else s"frozen m=$mDoub, active=$nActive"
-      val (next, c) = timed(s"round $rounds (k=$k, $mode)") {
-        rankStep(paired, keys2, refine = true,
-          materializeInput = frozenMode)
-      }
+      val (next, c) = rankStep(paired, keys2, refine = true,
+        materializeInput = frozenMode)
       // exact early exit, free from the census: a no-refinement fixpoint
       // (identical-suffix classes only — see object doc; the argument
       // reads only the r@+k key, so extra keys — which can only split
@@ -694,9 +668,8 @@ object SuffixArray {
       // itself costs ~1.7 s/corpus. The census also showed a 16-char
       // base is never safe on prose (amb16 = 0.72 on the natural docs
       // corpus). On a network-shuffle cluster where bytes genuinely
-      // bill, set SPARK_GRAFT_SA_INITK=0 to re-enable the census.
-      val forced = sys.env.get("SPARK_GRAFT_SA_INITK").map(_.toInt).getOrElse(64)
-      val (df, dupFrac) = ranksWithStats(docs, docCol, textCol, initK = forced)
+      // bill, ranksWithStats(initK = 0) re-enables the census.
+      val (df, dupFrac) = ranksWithStats(docs, docCol, textCol, initK = 64)
       dupFracs.put(k, dupFrac)
       df
     }
@@ -916,8 +889,7 @@ object SuffixArray {
         .fold(0.0)(_.doubleValue())
       val bands =
         if (dupFrac > 0.2) Seq(HeadBand) else Seq(FirstBand, HeadBand)
-      builds.getOrElseUpdate(key)(
-        timed(s"adjacent-LCP annex (dupFrac=$dupFrac, bands=$bands)") {
+      builds.getOrElseUpdate(key) {
         val sorted = saSorted(sa).persist()
         val tiers = scala.collection.mutable.ArrayBuffer[DataFrame]()
         try {
@@ -928,7 +900,7 @@ object SuffixArray {
           tiers.foreach(_.unpersist())
           sorted.unpersist()
         }
-      })
+      }
     }
   }
 

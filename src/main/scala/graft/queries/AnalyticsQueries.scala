@@ -391,8 +391,7 @@ object AnalyticsQueries {
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"),
           graft.vector.VectorOps.asDouble(col("embedding")).as("vec"))
-      val exactMax =
-        s.conf.get("spark.graft.hardNegatives.exactMax", "5000").toLong
+      val exactMax = graft.GraftConf.hardNegatives.exactMax(s)
       val n = Tables.embeddings(s, dir).count()
       val top = if (n > exactMax) {
         // cell count balancing Lloyd training (3·n·k) against the probe
@@ -409,13 +408,11 @@ object AnalyticsQueries {
         // 0.534 → 0.700 for ~20% ANN wall, round-12 recall addendum),
         // and the delegation logs which value won so an operator learns
         // the knob exists without reading this comment.
-        val nprobe = math.max(1,
-          s.conf.getOption("spark.graft.hardNegatives.nprobe")
-            .map(_.toInt)
-            .getOrElse(graft.similarity.Ivf.defaultNprobe(n)))
+        val nprobe = graft.GraftConf.hardNegatives.nprobe(s)
+          .getOrElse(graft.similarity.Ivf.defaultNprobe(n))
         org.slf4j.LoggerFactory.getLogger("graft.q69").warn(
           s"q69 delegating $n vectors to IVF ANN with nprobe=$nprobe " +
-            "(knob: spark.graft.hardNegatives.nprobe; measured sf1 trade " +
+            s"(knob: ${graft.GraftConf.hardNegatives.nprobe.name}; measured sf1 trade " +
             "in BASELINE.md round-12 recall addendum: 16 buys recall@1 " +
             "0.534->0.700 over 8 for ~20% ANN wall)")
         val k = math.max(64L, math.min(4096L,

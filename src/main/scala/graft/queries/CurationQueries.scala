@@ -565,6 +565,15 @@ object CurationQueries {
     * re-aggregate (sum of per-doc counts ≡ the direct occurrence
     * count). Materialized like every build-once artifact; cleared per
     * bench pass via the Artifacts registry.
+    *
+    * Scale assumption: the frame is near tokenized-corpus-sized (one row
+    * per distinct word per doc) and is materialized even when only
+    * training runs, which needs just the vocabulary-sized type
+    * frequencies. The saving (one tokenization pass) was measured at
+    * sf0.1 only; at a scale where writing this checkpoint costs more
+    * than a second regex pass over the corpus, training should
+    * aggregate type frequencies directly and this frame should be built
+    * only for q233.
     */
   private val docCensus = graft.Artifacts.memo[org.apache.spark.sql.DataFrame]
 

@@ -474,12 +474,10 @@ object DedupQueries {
           transform(graft.vector.VectorOps.asDouble(col("embedding")),
             (x, i) => q6(x + lit(0.01) * sin(col("vec_id") + i))).as("vec"))
       val corpus = orig.unionAll(pert)
-      // k=16 is the committed/oracle config; the documented production
-      // response (k ∝ corpus, keeping Σ|cell|² bounded) is probeable
-      // directly via this knob — the sf1 scaling probe runs k=160 at
-      // ×10 data. The DuckDB oracle mirrors only the default.
-      val k = sys.env.get("SPARK_GRAFT_SEMDEDUP_K").map(_.toInt).getOrElse(16)
-      val model = graft.similarity.Ivf.train(corpus, "id", "vec", k = k, iters = 3)
+      // k=16 is the oracle config; the production response is k ∝
+      // corpus, keeping Σ|cell|² bounded (the sf1 scaling probe ran
+      // k=160 at ×10 data)
+      val model = graft.similarity.Ivf.train(corpus, "id", "vec", k = 16, iters = 3)
       val withCell = corpus
         .join(graft.similarity.Ivf.assign(corpus, "id", "vec", model), "id")
       val dropped = withCell.as("a").join(withCell.as("b"),

@@ -481,9 +481,7 @@ object GraphQueries {
         // 10 MB, because this relation is a long-keyed semi-join build
         // side rebuilt once per round, not a planner estimate; size it
         // to executor memory on a real cluster
-        val frontCapBytes = s.conf
-          .getOption("spark.graft.broadcastFrontMaxBytes")
-          .map(_.toLong).getOrElse(160L << 20)
+        val frontCapBytes = graft.GraftConf.broadcastFrontMaxBytes(s)
         val rem =
           if (removedCnt * 8L <= frontCapBytes) broadcast(removed)
           else removed

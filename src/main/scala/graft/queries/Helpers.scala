@@ -74,8 +74,7 @@ object Helpers {
     tracked.set(buf)
     try {
       val out = build
-      // diagnostic kill-switch: persists still happen, cleanup skipped
-      if (buf.isEmpty || sys.env.get("SPARK_GRAFT_NO_CACHE_SCOPE").contains("1")) out
+      if (buf.isEmpty) out
       else selfCleaning(out, buf.toSeq)
     } finally tracked.set(prev)
   }

@@ -145,6 +145,7 @@ object RankQueries {
     // table sparse; item counts broadcast; the scoring join touches
     // only the cohort's rows — never all-users × all-items.
     Q("q157_itemcf_recommend", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.types.DecimalType
       // ONE shuffle (on customer) builds the per-user item sets —
       // collect_set dedups in the partial aggregate, so no separate
@@ -184,23 +185,16 @@ object RankQueries {
         .groupBy(col("c"), col("j").as("item"))
         .agg(round(sum(col("sim").cast(DecimalType(20, 6))).cast("double"), 6)
           .as("score"))
-      // top-5 per user as an AGGREGATE, not a rank window (q211's
-      // committed shape): the window needed a full sort of the scored
-      // frame plus a WindowExec buffering pass just to discard all but
-      // 5 rows per user; the aggregate top-k folds in the same exchange
-      // that groups by user and never sorts the frame. Order inside the
-      // struct mirrors the window's (score DESC, item ASC): -score
-      // ascends = score descends (scores are sums of positive sims, so
-      // no -0.0/NaN edge), and (c, item) is unique, so the positions
-      // are the exact row_number ranks.
-      scored.groupBy("c")
-        .agg(slice(sort_array(collect_list(
-          struct((-col("score")).as("ns"), col("item"), col("score")))),
-          1, 5).as("top"))
-        .select(col("c").as("custkey"),
-          posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("custkey"), (col("pos") + 1).cast("long").as("rank"),
-          col("t.item").as("item"), col("t.score").as("score"))
+      // top-5 per user by a rank window: Spark 4 plans the rank <= 5
+      // filter as a partial WindowGroupLimit before the user exchange
+      // and a final one after it, so at most 5 rows per user per map
+      // partition cross the shuffle, and every sort and window buffer on
+      // the way can spill under user skew (PlanShapeSpec pins the shape)
+      scored.withColumn("rank", row_number().over(
+          Window.partitionBy("c").orderBy(desc("score"), asc("item")))
+          .cast("long"))
+        .filter(col("rank") <= 5)
+        .select(col("c").as("custkey"), col("rank"), col("item"), col("score"))
         .orderBy("custkey", "rank")
     }, Some(
       """WITH ui AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p

@@ -355,12 +355,14 @@ object RelationalQueries {
 
   // Aggregation-based top-k per group — the WINDOW-FREE top-k: rank
   // brands per nation by purchase count via sort_array + slice over a
-  // per-group collected array of (count, brand) structs. Unlike q03/
-  // q32's row_number window (which shuffles and sorts EVERY row), the
-  // state here is bounded by the group's distinct-brand census — at
-  // 100 TB the window form needs a full repartition-sort while this
-  // form partial-aggregates map-side and moves only (group, brand)
-  // counts. Output exploded back to rows.
+  // per-group collected array of (count, brand) structs. The collected
+  // array is a per-group buffer that cannot spill; it is safe here only
+  // because its input is already aggregated, so a nation holds at most
+  // its distinct-brand census (25 TPC-H brands). The general form is
+  // q03/q157's row_number window: Spark 4 plans its rank filter as a
+  // WindowGroupLimit that keeps k rows per group in each partition
+  // before the exchange, and its buffers spill. Output exploded back
+  // to rows.
   private def q211: Q = Q("q211_group_topk_agg", (s, dir) => {
     // orders/customer/part are fact-scaled — no broadcast hints; AQE
     // broadcasts when a side fits and shuffle-joins at 100 TB

@@ -249,17 +249,7 @@ object Ivf {
         .as[(Int, Long)].collect().toMap // ≤ k ≤ 4096 rows — driver-bounded
       val qCounts = queries.groupBy("cell").count()
         .as[(Int, Long)].collect().toMap // ≤ k ≤ 4096 rows — driver-bounded
-      val confWidth: Option[Int] =
-        spark.conf.getOption("spark.graft.hardNegatives.saltWidth").map { s =>
-          val w =
-            try s.trim.toLong
-            catch { case _: NumberFormatException =>
-              throw new IllegalArgumentException(
-                s"spark.graft.hardNegatives.saltWidth must be an integer, got '$s'")
-            }
-          math.min(64L, math.max(1L, w)).toInt
-        }
-      val widths: Map[Int, Int] = confWidth match {
+      val widths: Map[Int, Int] = graft.GraftConf.hardNegatives.saltWidth(spark) match {
         case Some(w) => iCounts.map { case (c, _) => c -> w } // forced global
         case None    => cellSaltWidths(iCounts, qCounts, nprobe)
       }

@@ -40,13 +40,10 @@ object EventsStream {
     * to pin at query start, or None to leave Spark's default.
     */
   private[graft] def stateStoreProvider(spark: SparkSession): Option[String] = {
-    val mode = spark.conf.getOption("spark.graft.stateStore").getOrElse("auto")
-    val rocks = mode match {
+    val rocks = graft.GraftConf.stateStore(spark) match {
       case "hdfs"    => false
       case "rocksdb" => true
-      case "auto"    => !spark.sparkContext.isLocal
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.stateStore must be auto|hdfs|rocksdb, got '$other'")
+      case _         => !spark.sparkContext.isLocal // auto
     }
     if (rocks) Some(RocksDbProvider) else None
   }
@@ -98,7 +95,7 @@ object EventsStream {
     * metric + WARN log with the dropped-row count) | `fail` (abort the
     * query on the first pre-epoch row) | `off`.
     */
-  private val PreEpochGuardKey = "spark.graft.preEpochGuard"
+  private val PreEpochGuardKey = graft.GraftConf.preEpochGuard.name
   private[graft] val PreEpochMetric = "graft_pre_epoch"
 
   // sessions whose StreamingQueryListener is already registered; weak so
@@ -130,7 +127,7 @@ object EventsStream {
     }
 
   private def guardPreEpoch(spark: SparkSession, df: DataFrame): DataFrame =
-    spark.conf.getOption(PreEpochGuardKey).getOrElse("warn") match {
+    graft.GraftConf.preEpochGuard(spark) match {
       case "off" => df
       case "fail" =>
         // wrap the canonical nanos column itself: event_ts derives from
@@ -143,12 +140,10 @@ object EventsStream {
             lit(") in a watermarked stream: stateful operators would drop " +
               s"it silently. Shift the corpus epoch or set $PreEpochGuardKey" +
               "=warn|off.")))))
-      case "warn" =>
+      case _ => // warn
         registerPreEpochWarnListener(spark)
         df.observe(PreEpochMetric,
           count(when(col("ts") < 0L, 1)).as("pre_epoch_rows"))
-      case other => throw new IllegalArgumentException(
-        s"$PreEpochGuardKey must be warn|fail|off, got '$other'")
     }
 
   /** readStream over a directory of events parquet. */

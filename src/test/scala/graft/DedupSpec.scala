@@ -546,7 +546,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("forced shallow initK still publishes a depth-≥FirstBand dupFrac") {
-    // round-8 advice: SPARK_GRAFT_SA_INITK=16 (initK > 0, so the
+    // round-8 advice: a caller-forced initK = 16 (initK > 0, so the
     // adaptive census used to be skipped) must NOT publish the
     // over-stated depth-16 ambiguity as dupFrac — that can flip the
     // annex cascade to HeadBand-only on low-duplication corpora. The

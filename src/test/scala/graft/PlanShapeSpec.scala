@@ -147,6 +147,14 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan.take(4000))
   }
 
+  test("item-item CF top-5 holds at most k rows per user (WindowGroupLimit, no collect_list)") {
+    // a per-group collect_list buffer cannot spill under user skew; the
+    // rank window's group limit keeps k rows per user in every partition
+    val plan = executedPlan("q157_itemcf_recommend")
+    assert(plan.contains("WindowGroupLimit"), plan.take(6000))
+    assert(!plan.contains("collect_list"), plan.take(6000))
+  }
+
   test("BM25 pushes the query-term filter into the scan side of tf") {
     val df = SparkEntry.queries("q146_bm25")(spark, sf)
     df.collect()

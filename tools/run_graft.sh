@@ -1,7 +1,9 @@
 #!/bin/bash
-# Run a graft main (graft.Verify / graft.Bench) outside sbt.
+# Run a graft main (graft.Verify, graft.Bench, graft.PlanProbe, ...)
+# outside sbt, on the compiled classes.
 # Usage: tools/run_graft.sh <mainClass> [args...]
-# Env: SPARK_GRAFT_ONLY, SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR pass through.
+# Env: every SPARK_GRAFT_* var passes through to graft.Harness (see the
+# table in README "Verify / bench locally").
 set -e
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java \
