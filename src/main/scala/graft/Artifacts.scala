@@ -1,9 +1,8 @@
 package graft
 
-import java.lang.ref.WeakReference
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The one materialization + memoization seam for build-once artifacts
@@ -34,61 +33,43 @@ import org.apache.spark.storage.StorageLevel
   *     build beats a silent durability hole that kills a 100 TB job
   *     hours in.
   *
-  *  2. '''Memo registry.''' Each build-once cache used to carry its own
-  *     `clearCache()` and Bench cleared them by an enumerated list — a
-  *     new memo that missed the list would silently bench warm-cache.
-  *     Every [[Memo]] now registers its own clear at construction, so
-  *     [[clearAll]] covers present AND FUTURE memos by construction and
-  *     Bench makes exactly one call.
+  *  2. '''Memo registry.''' Every build-once cache is a [[Memo]], and
+  *     [[clearAll]] is the one clear for all of them: Bench, PlanProbe
+  *     and tests make exactly one call, and a new memo cannot be missed.
+  *     Memos key by session (application id + session identity) plus a
+  *     caller key, so one JVM's sessions never share an artifact.
   */
 object Artifacts {
 
-  // Weak refs: a memo created outside object-level init (tests build
-  // several per run) must be collectable once unreachable — a strong
-  // clearer closure would pin the memo, its map, and any cached
-  // DataFrames forever. clearAll skips and prunes cleared refs.
-  private val clearers =
-    new java.util.concurrent.CopyOnWriteArrayList[WeakReference[Memo[_]]]()
+  // every production memo is an object-level val, so the registry only
+  // grows by the memos tests create
+  private val memos = new CopyOnWriteArrayList[Memo[_]]()
 
-  /** A build-once artifact cache. Constructing one registers its clear
-    * with [[clearAll]] — a memo cannot exist outside the per-pass clear.
-    * Scala object init is lazy, so a memo whose owner was never touched
-    * is unregistered but also necessarily empty: clearAll still clears
-    * every memo that can hold anything.
+  /** A build-once artifact cache. Constructing one registers it with
+    * [[clearAll]] — a memo cannot exist outside the per-pass clear.
     */
   final class Memo[V] private[Artifacts] () {
     private val m = new ConcurrentHashMap[String, V]()
-    clearers.add(new WeakReference[Memo[_]](this))
+    memos.add(this)
+    private def k(spark: SparkSession, key: String): String =
+      s"${spark.sparkContext.applicationId}|${System.identityHashCode(spark)}|$key"
     /** Atomic compute-if-absent: one build per key per clear epoch. */
-    def getOrElseUpdate(key: String)(build: => V): V =
-      m.computeIfAbsent(key, _ => build)
-    def get(key: String): Option[V] = Option(m.get(key))
-    def put(key: String, v: V): Unit = m.put(key, v)
-    def clear(): Unit = m.clear()
+    def getOrElseUpdate(spark: SparkSession, key: String)(build: => V): V =
+      m.computeIfAbsent(k(spark, key), _ => build)
+    def get(spark: SparkSession, key: String): Option[V] = Option(m.get(k(spark, key)))
+    def put(spark: SparkSession, key: String, v: V): Unit = m.put(k(spark, key), v)
     def size: Int = m.size
+    private[Artifacts] def clear(): Unit = m.clear()
   }
 
   def memo[V]: Memo[V] = new Memo[V]
 
-  /** Drop every registered memo (all sessions, all corpora). Bench calls
-    * this once per pass so each pass prices one honest build per
-    * artifact; tests call it to isolate builds. GC'd memos are pruned
-    * here so the registry itself stays bounded.
+  /** Drop every memo (all sessions, all corpora). Bench calls this once
+    * per pass so each pass prices one honest build per artifact; tests
+    * call it to isolate builds. The checkpoint blocks of dropped frames
+    * are reclaimed by the ContextCleaner once unreferenced.
     */
-  def clearAll(): Unit = {
-    clearers.forEach { ref =>
-      val memo = ref.get()
-      if (memo != null) memo.clear()
-    }
-    clearers.removeIf(ref => ref.get() == null)
-  }
-
-  /** Number of live registered memos — exposed for the registry test. */
-  private[graft] def registeredMemoCount: Int = {
-    var n = 0
-    clearers.forEach(ref => if (ref.get() != null) n += 1)
-    n
-  }
+  def clearAll(): Unit = memos.forEach(_.clear())
 
   /** Eagerly materialize a build-once artifact / iterative round with
     * the deployment-appropriate primitive (see object doc). All graft

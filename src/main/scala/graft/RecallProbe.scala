@@ -70,6 +70,8 @@ object RecallProbe {
       max(col("ex_sim") - col("ann_sim")).as("gap_max"),
       min(col("ex_sim") - col("ann_sim")).as("gap_min")
     ).head()
+    // release both probe frames and any intermediates q69 persisted
+    spark.catalog.clearCache()
 
     val n = r.getLong(0)
     val covered = r.getLong(1)

@@ -636,14 +636,11 @@ object SuffixArray {
     * holding the reference keeps the materialized blocks alive.
     *
     * Bench clears this cache at the start of each pass
-    * ([[clearCache]]), so the published artifact still prices exactly
-    * one build per suite pass — reuse within a pass is the design,
-    * a warm second pass hiding the build cost would not be.
+    * (`Artifacts.clearAll()`), so the published artifact still prices
+    * exactly one build per suite pass — reuse within a pass is the
+    * design, a warm second pass hiding the build cost would not be.
     */
   private val builds = graft.Artifacts.memo[DataFrame]
-
-  private def cacheKey(spark: SparkSession, corpusKey: String): String =
-    s"${spark.sparkContext.applicationId}|${System.identityHashCode(spark)}|$corpusKey"
 
   /** Duplication fraction measured by each memoized build (ambiguous
     * rows after the base rank / total — i.e. the share of suffixes
@@ -654,8 +651,7 @@ object SuffixArray {
 
   def build(spark: SparkSession, corpusKey: String, docs: => DataFrame,
             docCol: String, textCol: String): DataFrame = {
-    val k = cacheKey(spark, corpusKey)
-    builds.getOrElseUpdate(k) {
+    builds.getOrElseUpdate(spark, corpusKey) {
       // Default 64, NOT adaptive — the adaptive census (initK = 0) was
       // built and A/B-measured (round 8, same box, min-of-two): the
       // base round's cost is MATERIALIZATION-bound, not key-byte-bound
@@ -670,7 +666,7 @@ object SuffixArray {
       // corpus). On a network-shuffle cluster where bytes genuinely
       // bill, ranksWithStats(initK = 0) re-enables the census.
       val (df, dupFrac) = ranksWithStats(docs, docCol, textCol, initK = 64)
-      dupFracs.put(k, dupFrac)
+      dupFracs.put(spark, corpusKey, dupFrac)
       df
     }
   }
@@ -872,8 +868,8 @@ object SuffixArray {
     */
   def adjacentLcp(spark: SparkSession, corpusKey: String, docs: => DataFrame,
                   docCol: String, textCol: String): DataFrame = {
-    val key = cacheKey(spark, s"$corpusKey|adjlcp")
-    val cached = builds.get(key)
+    val key = s"$corpusKey|adjlcp"
+    val cached = builds.get(spark, key)
     if (cached.isDefined) cached.get
     else {
       // resolve the SA memo OUTSIDE computeIfAbsent: recursive updates
@@ -885,11 +881,11 @@ object SuffixArray {
       // majority of pairs and cuts the bulk exchange 8×; on heavily
       // duplicated corpora most pairs cap the first band and would pay
       // both passes, so go straight to HeadBand
-      val dupFrac = dupFracs.get(cacheKey(spark, corpusKey))
+      val dupFrac = dupFracs.get(spark, corpusKey)
         .fold(0.0)(_.doubleValue())
       val bands =
         if (dupFrac > 0.2) Seq(HeadBand) else Seq(FirstBand, HeadBand)
-      builds.getOrElseUpdate(key) {
+      builds.getOrElseUpdate(spark, key) {
         val sorted = saSorted(sa).persist()
         val tiers = scala.collection.mutable.ArrayBuffer[DataFrame]()
         try {
@@ -903,10 +899,4 @@ object SuffixArray {
       }
     }
   }
-
-  /** Drop all cached builds (bench pass isolation, test hygiene). The
-    * checkpoint blocks of dropped frames are reclaimed by the
-    * ContextCleaner once unreferenced.
-    */
-  def clearCache(): Unit = { builds.clear(); dupFracs.clear() }
 }

@@ -539,8 +539,8 @@ object AnalyticsQueries {
       val wout = edges.groupBy("src").agg(sum("w").as("wout"))
       // edges+degrees and the node list feed every iteration: persist
       // the tiny graph skeleton instead of re-deriving it 3x
-      val e2 = edges.join(wout, "src").scopedPersist
-      val nodes = edges.select(col("src").as("node")).distinct().scopedPersist
+      val e2 = edges.join(wout, "src").persist()
+      val nodes = edges.select(col("src").as("node")).distinct().persist()
       val n = nodes.count()
       var ranks = nodes.select(col("node"),
         floor(lit(1.0) / n * lit(1e12) + lit(0.5)).cast("long").as("rp"))
@@ -621,7 +621,7 @@ object AnalyticsQueries {
           col("l_partkey") === col("p_partkey"))
         .groupBy(col("o_custkey").as("c"), col("p_brand").as("b"))
         .agg(count(lit(1)).as("w"))
-        .scopedPersist
+        .persist()
       // MAX-normalization with a driver-side scalar (the q224/MMR
       // boundary pattern — a 1-row collect is the bounded kind): the
       // raw aggregate is persisted so the max job and the normalized
@@ -631,7 +631,7 @@ object AnalyticsQueries {
       // scheduling, not data.
       def normPico(df: org.apache.spark.sql.DataFrame,
                    keep: String*): org.apache.spark.sql.DataFrame = {
-        val p = df.scopedPersist
+        val p = df.persist()
         val r = p.agg(max(col("raw"))).head()
         val mx = if (r.isNullAt(0)) 1L else r.getLong(0)
         p.select(keep.map(col) :+
@@ -721,7 +721,7 @@ object AnalyticsQueries {
       val NanosPerHour = 3600L * 1000000000L
       val uht = EventQueries.events(s, dir)
         .select(col("user_id"), expr(s"ts div $NanosPerHour").as("hour"),
-          col("event_type")).distinct().scopedPersist
+          col("event_type")).distinct().persist()
       // context count stays lazy — one broadcast scalar in the plan
       // instead of an eager distinct-count job at construction time
       val nDf = uht.select("user_id", "hour").distinct()

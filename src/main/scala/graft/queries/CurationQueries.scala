@@ -86,7 +86,7 @@ object CurationQueries {
       val occ = Tables.documents(s, dir)
         .select(col("doc_id"),
           explode(TextOps.tokens(TextOps.cleanText(col("text")))).as("term"))
-        .scopedPersist
+        .persist()
       val total = occ.count()
       val counts = occ.groupBy("term").agg(count(lit(1)).as("cnt"))
       occ.join(broadcast(counts), "term")
@@ -279,7 +279,7 @@ object CurationQueries {
                   element_at(col("toks"), i + 1)).as("bg"))))
             .otherwise(array().cast("array<struct<w1:string,bg:string>>"))).as("g"))
         .select(col("doc_id"), col("g.w1").as("w1"), col("g.bg").as("bg"))
-        .scopedPersist
+        .persist()
       // vocabulary size stays lazy — one broadcast scalar in the plan
       // instead of an eager distinct-count job at construction time
       val vocab = base.select(explode(col("toks")).as("t"))
@@ -480,7 +480,7 @@ object CurationQueries {
         .filter(length(col("word")) >= 1)
         .select(col("doc_id"), col("source"),
           pmod(StableHash64(col("word")), lit(512L)).as("b"))
-        .scopedPersist
+        .persist()
       val lm = toks.groupBy("b").agg(
         sum(when(col("source").isin(targets: _*), 1L).otherwise(0L)).as("ct"),
         sum(when(col("source").isin(targets: _*), 0L).otherwise(1L)).as("cr"))
@@ -579,8 +579,7 @@ object CurationQueries {
 
   private def docWordCensus(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    docCensus.getOrElseUpdate(
-      s"${s.sparkContext.applicationId}|${System.identityHashCode(s)}|$dir")(
+    docCensus.getOrElseUpdate(s, dir)(
       graft.Artifacts.materialize(
         Tables.documents(s, dir)
           .select(col("doc_id"),
@@ -588,13 +587,9 @@ object CurationQueries {
           .filter(length(col("word")) >= 2 && col("word").rlike("^[a-z0-9]+$"))
           .groupBy("doc_id", "word").agg(count(lit(1)).as("n"))))
 
-  def clearCache(): Unit = { trained.clear(); docCensus.clear() }
-
   private def bpeTrain(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(Long, String, String, Long)], org.apache.spark.sql.DataFrame) =
-    trained.getOrElseUpdate(
-      s"${s.sparkContext.applicationId}|${System.identityHashCode(s)}|$dir")(
-      bpeTrainUncached(s, dir))
+    trained.getOrElseUpdate(s, dir)(bpeTrainUncached(s, dir))
 
   private def bpeTrainUncached(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(Long, String, String, Long)], org.apache.spark.sql.DataFrame) = {

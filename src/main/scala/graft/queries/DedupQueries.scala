@@ -265,7 +265,7 @@ object DedupQueries {
         .withColumn("cluster", coalesce(col("label"), col("id")))
         // persisted: feeds both the census and the argmax probe — without
         // it the whole LSH+connected-components pipeline runs twice
-        .scopedPersist
+        .persist()
       val agg = withC.groupBy("cluster")
         .agg(count(lit(1)).as("n_members"), max("len").as("keep_len"))
       val keep = withC.join(agg, "cluster")
@@ -331,7 +331,7 @@ object DedupQueries {
             sequence(lit(0), (col("n_tok") - n).cast("int")),
             i => StableHash64(array_join(slice(col("toks"), i + 1, lit(n)), " ")))))
         .select(col("doc_id"), col("pos"), col("col").as("h"))
-        .scopedPersist
+        .persist()
       val dupHashes =
         wins.groupBy("h").count().filter(col("count") >= 2).select("h")
       val covered = wins.join(dupHashes, Seq("h"), "left_semi")
@@ -729,7 +729,7 @@ object DedupQueries {
           org.apache.spark.sql.Row.fromSeq(row.toSeq ++ Seq(nr, lrun))
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
-        .scopedPersist
+        .persist()
       // partition-count-sized census → driver chains runs that span
       // partition boundaries (transitively, like the SA rank stitch)
       val census = flagged.groupBy("pid").agg(
@@ -872,7 +872,7 @@ object DedupQueries {
     Q("q236_apply_cuts", (s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       // the merge subtree feeds both segment kinds — persist it once
-      val merged = mergedRepeatSpans(s, dir, minLcp = 100).scopedPersist
+      val merged = mergedRepeatSpans(s, dir, minLcp = 100).persist()
       val w = Window.partitionBy("doc_id").orderBy("span_start")
       // kept segment before each span: [prev span_end (or 1), span_start)
       val mids = merged

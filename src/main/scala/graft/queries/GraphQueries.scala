@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.sources.Tables
-import graft.queries.Helpers.CacheScopeOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -64,14 +63,9 @@ object GraphQueries {
     */
   private val builds = graft.Artifacts.memo[DataFrame]
 
-  private[graft] def clearCache(): Unit = builds.clear()
-
-  private def coEdgeWeights(s: SparkSession, dir: String): DataFrame = {
-    val key = s"${s.sparkContext.applicationId}|" +
-      s"${System.identityHashCode(s)}|$dir|copurchase"
-    builds.getOrElseUpdate(key)(graft.Artifacts.materialize(
+  private def coEdgeWeights(s: SparkSession, dir: String): DataFrame =
+    builds.getOrElseUpdate(s, s"$dir|copurchase")(graft.Artifacts.materialize(
       coPairs(s, dir).groupBy("u", "v").agg(count(lit(1)).as("w"))))
-  }
 
   private def coEdges(s: SparkSession, dir: String): DataFrame =
     coEdgeWeights(s, dir).select("u", "v")
@@ -116,7 +110,7 @@ object GraphQueries {
     Q("q100_triangle_count", (s, dir) => {
       // undirected edge set, canonical u < v; feeds degree, orientation,
       // and the closing-edge probe — one build, three consumers
-      val e = coEdges(s, dir).scopedPersist
+      val e = coEdges(s, dir).persist()
       val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy("x").agg(count(lit(1)).as("dg"))
       val lower = col("du") < col("dv") ||
@@ -131,7 +125,7 @@ object GraphQueries {
         .withColumn("du", col("d1.dg")).withColumn("dv", col("d2.dg"))
         .select(when(lower, col("u")).otherwise(col("v")).as("src"),
           when(lower, col("v")).otherwise(col("u")).as("dst"))
-        .scopedPersist
+        .persist()
       // Edge-iterator count: T = Σ_{(u,v)∈ori} |N⁺(u) ∩ N⁺(v)| over the
       // oriented out-adjacency (each triangle counted once at its
       // rank-minimal apex). The adjacency table is |V|-sized with
@@ -214,7 +208,7 @@ object GraphQueries {
           struct(col("v").as("a"), col("u").as("b")))).as("p"))
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .repartition(col("a"))
-        .scopedPersist
+        .persist()
       val seed = adj.groupBy("a").agg(count(lit(1)).as("dg"))
         .orderBy(desc("dg"), asc("a")).limit(1).select(col("a").as("x"))
       var visited = seed
@@ -232,7 +226,7 @@ object GraphQueries {
           .unionByName(visited.select(col("x"), lit(0).as("f")))
           .groupBy("x").agg(min("f").as("mf"))
           .filter(col("mf") === 1).select("x")
-          .scopedPersist
+          .persist()
         // visited stays an UNPERSISTED union of the persisted layers —
         // no cache write per round; and the per-round visited count is
         // not re-counted against the cluster at all (see cumsum below)
@@ -284,12 +278,12 @@ object GraphQueries {
       // similarity floor), giving a partition worth a census
       val e = coEdgeWeights(s, dir)
         .filter(col("w") >= 2).select("u", "v")
-        .scopedPersist
+        .persist()
       val adj = e.select(explode(array(
           struct(col("u").as("a"), col("v").as("b")),
           struct(col("v").as("a"), col("u").as("b")))).as("p"))
         .select(col("p.a").as("a"), col("p.b").as("b"))
-        .scopedPersist
+        .persist()
       var lab = adj.select(col("a").as("x")).distinct()
         .withColumn("l", col("x"))
       for (_ <- 1 to 2) {
@@ -301,7 +295,7 @@ object GraphQueries {
           .groupBy(col("a").as("x")).agg(min("lb").as("nl"))
         lab = lab.join(nbrMin, Seq("x"), "left")
           .select(col("x"), least(col("l"), coalesce(col("nl"), col("l"))).as("l"))
-          .scopedPersist
+          .persist()
       }
       // lineage cut before the census fan-out: lab is referenced FOUR
       // times below (lu, lv, sizes, and through etab's two consumers),
@@ -314,7 +308,7 @@ object GraphQueries {
       val lu = lab.select(col("x").as("u"), col("l").as("lu"))
       val lv = lab.select(col("x").as("v"), col("l").as("lv"))
       // lu/lv are |V|-sized too — AQE's call, not a pinned broadcast
-      val etab = e.join(lu, "u").join(lv, "v").scopedPersist
+      val etab = e.join(lu, "u").join(lv, "v").persist()
       val ein = etab.filter(col("lu") === col("lv"))
         .groupBy(col("lu").as("l")).agg(count(lit(1)).as("e_in"))
       val degc = etab
@@ -327,7 +321,7 @@ object GraphQueries {
         .select(col("l"), col("size"),
           coalesce(col("e_in"), lit(0L)).as("e_in"),
           coalesce(col("d_c"), lit(0L)).as("d_c"))
-        .scopedPersist
+        .persist()
       val mod = comm.crossJoin(broadcast(m))
         .select(round(
           (col("e_in").cast("double") / col("m")) -
@@ -389,7 +383,7 @@ object GraphQueries {
     Q("q197_adamic_adar", (s, dir) => {
       val e = coEdgeWeights(s, dir)
         .filter(col("w") >= 2).select("u", "v")
-        .scopedPersist
+        .persist()
       val adj = e.select(explode(array(
           struct(col("u").as("a"), col("v").as("b")),
           struct(col("v").as("a"), col("u").as("b")))).as("p"))
@@ -407,7 +401,7 @@ object GraphQueries {
         .agg(sort_array(collect_set("b")).as("ps"))
         .withColumn("aa_w", round(lit(1.0) / log(size(col("ps"))), 9))
         .filter(size(col("ps")) >= 2)
-        .scopedPersist
+        .persist()
       val cand = Helpers.chunkedPairs(ctr, Seq("aa_w"))
         .groupBy(col("i").as("u"), col("j").as("v"))
         .agg(count(lit(1)).as("n_common"),
@@ -437,7 +431,7 @@ object GraphQueries {
     Q("q152_kcore", (s, dir) => {
       import s.implicits._
       val k = 3
-      val e = coEdges(s, dir).scopedPersist
+      val e = coEdges(s, dir).persist()
       // DELTA peel: degrees are aggregated from |E| exactly ONCE; each
       // round then subtracts only the contributions of edges incident to
       // NEWLY removed nodes. The |V|-sized degree table is checkpointed
@@ -452,7 +446,7 @@ object GraphQueries {
       // after the initial degree aggregation.
       var deg = e.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy("x").agg(count(lit(1)).as("dg"))
-        .scopedPersist
+        .persist()
       var edgesAlive = e.count()
       // one pass over the |V|-sized deg table yields every round scalar:
       // the front's size/degree mass and the alive degree mass — and by

@@ -9,23 +9,18 @@ import org.apache.spark.sql.types.DecimalType
   * driver's DuckDB oracle. Column names must match exactly (the driver
   * sorts columns by name before hashing).
   *
-  * Cache contract: a few queries persist an intermediate that feeds
-  * multiple branches of the same plan (e.g. q100's edge set) via
-  * [[Helpers.CacheScopeOps.scopedPersist]]. The cache is only needed
-  * while THAT query's action runs, so [[build]] wraps the body in
-  * [[Helpers.withScopedCaches]]: every scoped persist is unpersisted
-  * automatically after the first action that consumes the returned
-  * frame — an embedding caller leaks nothing. (A caller that runs the
-  * same returned frame twice re-computes on the second action; rebuild
-  * the frame from the registry instead, as Bench does.)
+  * Cache contract: a query may `.persist()` an intermediate that feeds
+  * several branches of its plan (e.g. q100's edge set). Those frames
+  * live in the session's cache until the caller's
+  * `spark.catalog.clearCache()`, which every runner of registry queries
+  * (Bench, Verify, PlanProbe, RecallProbe) calls after each query.
+  * Build-once artifacts (suffix-array index, BPE merges, edge table)
+  * are held in `Artifacts` memos and live until `Artifacts.clearAll()`.
   */
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None) {
-  def build: (SparkSession, String) => DataFrame =
-    (s, dir) => Helpers.withScopedCaches(fn(s, dir))
-}
+    oracle: Option[String] = None)
 
 /** Cross-engine determinism helpers.
   *
@@ -36,125 +31,6 @@ final case class Q(
   * order is reproducible on both engines.
   */
 object Helpers {
-
-  // ------------------------------------------------------- cache scope
-
-  private val tracked =
-    new ThreadLocal[scala.collection.mutable.Buffer[DataFrame]]
-
-  /** `.scopedPersist` = `.persist()` + registration with the enclosing
-    * [[withScopedCaches]] scope (no-op registration outside a scope, so
-    * library helpers can use it unconditionally).
-    */
-  implicit final class CacheScopeOps(private val df: DataFrame)
-      extends AnyVal {
-    def scopedPersist: DataFrame = {
-      df.persist()
-      val buf = tracked.get()
-      if (buf != null) buf += df
-      df
-    }
-  }
-
-  /** Build a query frame and arrange for every `.scopedPersist` made
-    * during the build to be unpersisted after the FIRST action that
-    * consumes the result (or any scoped intermediate): a
-    * QueryExecutionListener watches the session's completed executions
-    * and fires once on a plan that contains one of the scoped subtrees.
-    * Leaves no persisted RDDs behind in an embedding caller's session —
-    * the cache exists exactly for the duration of the query's action.
-    * Builds are synchronous on the calling thread (ThreadLocal scope);
-    * actions executed INSIDE the build (driver-side seeds, collected
-    * boundaries) fire nothing because the listener attaches after the
-    * build returns.
-    */
-  def withScopedCaches(build: => DataFrame): DataFrame = {
-    val prev = tracked.get()
-    val buf = scala.collection.mutable.Buffer.empty[DataFrame]
-    tracked.set(buf)
-    try {
-      val out = build
-      if (buf.isEmpty) out
-      else selfCleaning(out, buf.toSeq)
-    } finally tracked.set(prev)
-  }
-
-  /** Bounded registry of live cleanup scopes: a caller that builds a
-    * registry frame but never runs an action on it (explain-only, plan
-    * inspection, abandoned frame) would otherwise leak its persisted
-    * RDDs and its listener forever — and every later action would pay
-    * `sameResult` comparisons against the pile. Each new scope sweeps
-    * the registry: anything beyond [[MaxScopes]] or older than
-    * [[ScopeTtlNanos]] is force-released (unpersist + unregister).
-    */
-  private final class Scope(
-      val spark: SparkSession,
-      val cached: Seq[DataFrame],
-      val created: Long) {
-    @volatile var listener: org.apache.spark.sql.util.QueryExecutionListener = _
-    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def release(): Unit =
-      if (released.compareAndSet(false, true)) try {
-        cached.foreach(_.unpersist(false))
-        if (listener != null) spark.listenerManager.unregister(listener)
-      } catch { case _: Throwable => () }
-  }
-  private val scopes =
-    new java.util.concurrent.ConcurrentLinkedQueue[Scope]
-  private val MaxScopes = 16
-  private val ScopeTtlNanos = 10L * 60 * 1000 * 1000 * 1000
-
-  private def sweepScopes(): Unit = {
-    var head = scopes.peek()
-    while (head != null &&
-        (scopes.size > MaxScopes ||
-          System.nanoTime() - head.created > ScopeTtlNanos)) {
-      if (scopes.remove(head)) head.release()
-      head = scopes.peek()
-    }
-  }
-
-  /** Force-release every live scope — session-teardown hygiene for an
-    * embedding caller (and test isolation).
-    */
-  def releaseAllScopes(): Unit = {
-    var s = scopes.poll()
-    while (s != null) { s.release(); s = scopes.poll() }
-  }
-
-  /** Attach a once-firing listener that unpersists `cached` after the
-    * first completed action whose analyzed plan contains `result` or any
-    * cached subtree (match by `sameResult`, cheap on these plan sizes).
-    * The scope also enters the bounded registry above, so a frame that
-    * never executes still gets released by a later scope's sweep.
-    */
-  def selfCleaning(result: DataFrame, cached: Seq[DataFrame]): DataFrame = {
-    val spark = result.sparkSession
-    val plans = (result +: cached).map(_.queryExecution.analyzed)
-    val scope = new Scope(spark, cached, System.nanoTime())
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def fire(
-          qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        try {
-          if (scopes.contains(scope) &&
-              qe.analyzed.exists(n => plans.exists(_.sameResult(n)))) {
-            scopes.remove(scope)
-            scope.release()
-          }
-        } catch { case _: Throwable => () } // listener must never throw
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = fire(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = fire(qe)
-    }
-    scope.listener = listener
-    spark.listenerManager.register(listener)
-    scopes.add(scope)
-    sweepScopes()
-    result
-  }
 
   /** Exact sum: cast to decimal(20,6) (bit-identical for doubles of this
     * provenance), sum exactly, surface as rounded double.

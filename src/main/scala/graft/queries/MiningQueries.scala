@@ -41,7 +41,7 @@ object MiningQueries {
       g: String, x: String, y: String): org.apache.spark.sql.DataFrame = {
     val p = df.select(col(g).as("_g"), col(x).as("_x"), col(y).as("_y"))
     val cells = p.groupBy("_g", "_x", "_y")
-      .agg(count(lit(1)).as("cnt")).scopedPersist
+      .agg(count(lit(1)).as("cnt")).persist()
     val xTies = cells.groupBy("_g", "_x").agg(sum("cnt").as("cx"))
       .groupBy("_g").agg(sum(expr("cx * (cx - 1) div 2")).as("n1"),
         sum("cx").as("n"))
@@ -328,7 +328,7 @@ object MiningQueries {
           col("l_partkey") === col("p_partkey"))
         .select(col("o"), col("p_brand").as("b"))
       val baskets = ob.groupBy("o").agg(sort_array(collect_set("b")).as("bs"))
-        .scopedPersist
+        .persist()
       val nOrders = baskets.agg(count(lit(1)).as("n"))
       val marg = baskets.select(explode(col("bs")).as("b"))
         .groupBy("b").agg(count(lit(1)).as("nb"))
@@ -396,7 +396,7 @@ object MiningQueries {
         .select(col("o_custkey"),
           datediff(col("md"), col("last_d")).cast("long").as("rec"),
           col("freq"), col("mon"))
-        .scopedPersist
+        .persist()
       val nn = rfm.agg(count(lit(1)).as("n"))
       // exact distributed ntile(5) over (value dir, o_custkey asc)
       def quint(vcol: String, descOrd: Boolean, bucket: Column,
@@ -534,7 +534,7 @@ object MiningQueries {
           col("l_partkey") === col("p_partkey"))
         .groupBy(col("o_custkey").as("c"), col("p_brand").as("b"))
         .agg(count(lit(1)).as("r"))
-        .scopedPersist
+        .persist()
       def dsum12(c: Column): Column =
         sum(round(c, 9).cast(DecimalType(24, 12))).cast("double")
       // u-step against a broadcast brand-factor table, v-step as a
@@ -864,7 +864,7 @@ object MiningQueries {
           min("day").as("d0"), max("day").as("d1"))))
         .select(datediff(col("day"), col("d0")).cast("long").as("idx"),
           datediff(col("d1"), col("d0")).cast("long").as("maxidx"), col("x"))
-        .scopedPersist
+        .persist()
       val eval = base.filter(col("idx") > col("maxidx") - 28)
       def scoreLag(lag: Int, name: String) = {
         val f = base.select((col("idx") + lag).as("idx"), col("x").as("fx"))
@@ -1440,7 +1440,7 @@ object MiningQueries {
           round(pow(lit(2.0),
             -((col("pts") - col("tts")).cast("double") / lit(2.16e10))), 9)
             .as("w"))
-        .scopedPersist
+        .persist()
       val perPid = paired.groupBy("pid")
         .agg(count(lit(1)).as("k"),
           sum(col("w").cast(DecimalType(20, 12))).as("tw"))
@@ -1673,7 +1673,7 @@ object MiningQueries {
       val d0 = Tables.documents(s, dir)
         .select(col("source"), col("n_chars").cast("long").as("v"))
       val cen = d0.groupBy("source", "v").agg(count(lit(1)).as("c"))
-        .scopedPersist
+        .persist()
       val vals = cen.groupBy("v").agg(sum("c").as("cg"))
       val srcs = cen.groupBy("source").agg(sum("c").as("ns"))
       val tot = srcs.agg(sum("ns").as("nn"), count(lit(1)).as("m"))

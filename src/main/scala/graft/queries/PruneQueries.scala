@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.sources.Tables
-import graft.queries.Helpers.CacheScopeOps
 import graft.text.{StableHash, StableHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -104,8 +103,8 @@ object PruneQueries {
         .select(StableHash64(concat(lit("u:"), col("user_id").cast("string")))
           .as("h"))
         .distinct()
-      val a = hashes("view").scopedPersist
-      val b = hashes("purchase").scopedPersist
+      val a = hashes("view").persist()
+      val b = hashes("purchase").persist()
       val sa = a.orderBy("h").limit(k)
       val sb = b.orderBy("h").limit(k)
       val su = a.union(b).distinct().orderBy("h").limit(k)
@@ -213,7 +212,7 @@ object PruneQueries {
       // count-vs-checksum sweep: 11.0 s counted vs 3.4 s honest).
       // The cache is vocabulary-sized — bounded at any corpus scale.
       val counts = occ.groupBy("source", "term").agg(count(lit(1)).as("cnt"))
-        .scopedPersist
+        .persist()
       val totals = counts.groupBy("source")
         .agg(sum("cnt").as("total"), count(lit(1)).as("vocab"))
       counts.join(broadcast(totals), "source")

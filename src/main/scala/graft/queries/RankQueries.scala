@@ -160,7 +160,7 @@ object RankQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .groupBy("c").agg(sort_array(collect_set("p")).as("ps"))
-        .scopedPersist
+        .persist()
       val cnt = sets.select(explode(col("ps")).as("p"))
         .groupBy("p").agg(count(lit(1)).as("n"))
       val pairs = itemPairCounts(sets).filter(col("nij") >= 2)

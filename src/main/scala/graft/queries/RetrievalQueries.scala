@@ -231,7 +231,7 @@ object RetrievalQueries {
     // fan-out is bounded by rare-token frequency, not document count.
     Q("q154_setsim_join", (s, dir) => {
       val theta = 0.5
-      val sh = shingles(s, dir).scopedPersist
+      val sh = shingles(s, dir).persist()
       // The core pipeline, parameterized by which shingle table it runs
       // over: global-frequency prefix ranking, prefix-collision
       // candidates, exact-intersection verification. Prefix filtering is
@@ -277,7 +277,7 @@ object RetrievalQueries {
         // verification joins — unpersisted, the collect_set aggregate
         // would run 3×
         .agg(collect_set(col("h")).as("set"), count(lit(1)).as("n"))
-        .scopedPersist
+        .persist()
       // Exact-duplicate census (the q17/minHashSubstrate pattern, made
       // ADAPTIVE): identical shingle sets are detected by an
       // order-independent (bit_xor ∘ xxhash64)²-plus-cardinality content
@@ -320,14 +320,14 @@ object RetrievalQueries {
             count(lit(1)).as("nk"))
           .select(col("doc_id"), xxhash64(col("hs")).as("ck1"),
             xxhash64(col("hs"), lit(1)).as("ck2"), col("nk"))
-          .scopedPersist
+          .persist()
         val reps = keyed.groupBy("ck1", "ck2", "nk")
           .agg(min(col("doc_id")).as("rep"))
-          .scopedPersist
+          .persist()
         val membership = keyed.join(reps, Seq("ck1", "ck2", "nk"))
-          .select(col("doc_id"), col("rep")).scopedPersist
+          .select(col("doc_id"), col("rep")).persist()
         val shR = sh.join(reps.select(col("rep").as("doc_id")),
-          Seq("doc_id"), "left_semi").scopedPersist
+          Seq("doc_id"), "left_semi").persist()
         val sets = setsOver(shR)
         val repPairs = verifiedPairs(shR, sets)
           .select(col("da").as("ra"), col("db").as("rb"), col("n_a"),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.sources.Tables
-import graft.queries.Helpers.CacheScopeOps
 import graft.text.{StableHash, StableHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -131,7 +130,7 @@ object SketchQueries {
       // top-20, and the probe — one small frame, three consumers
       val u = EventQueries.events(s, dir)
         .groupBy("user_id").agg(count(lit(1)).as("n"))
-        .scopedPersist
+        .persist()
       val hb = u.select(col("user_id"), col("n"),
           explode(array(cmsProbes(col("user_id")): _*)).as("h"))
         .select(col("user_id"), col("n"),

@@ -180,8 +180,8 @@ object SurfaceQueries {
          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // The custom-Expression SQL surface: `stable_hash64` and
-    // `cosine_sim` (native codegen Catalyst expressions, normally
-    // injected via GraftExtensions / spark.sql.extensions) invoked from
+    // `cosine_sim` (native codegen Catalyst expressions, registered on
+    // the session by their `register` methods) invoked from
     // PLAIN SQL TEXT — the migration contract that a warehouse user's
     // SQL keeps working once the two scalar functions are registered.
     // The oracle replays both from their generated DuckDB twins, so the

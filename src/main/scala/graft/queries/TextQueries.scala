@@ -282,7 +282,7 @@ object TextQueries {
       val occ = Tables.documents(s, dir)
         .select(col("source"),
           explode(TextOps.tokens(TextOps.cleanText(col("text")))).as("term"))
-        .scopedPersist
+        .persist()
       val counts = occ.groupBy("term").agg(count(lit(1)).as("cnt"))
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(desc("cnt"), asc("term"))

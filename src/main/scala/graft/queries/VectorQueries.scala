@@ -144,7 +144,7 @@ object VectorQueries {
             lit(127.0)) * sc))
       val q = emb.filter(col("vec_id") === 0)
         .select(col("vec").as("qv"), col("dq").as("dqv"))
-      val scored = emb.crossJoin(broadcast(q)).scopedPersist
+      val scored = emb.crossJoin(broadcast(q)).persist()
       val wRank = Window.orderBy(desc("sim"), asc("vec_id"))
       val exact10 = scored
         .select(col("vec_id"), round(VectorOps.cosine(col("vec"), col("qv")), 6).as("sim"))
@@ -162,7 +162,7 @@ object VectorQueries {
           round(col("rel") / (log(col("pos") + 1) / log(lit(2.0))), 6))
         .withColumn("igain",
           round((lit(11L) - col("pos")) / (log(col("pos") + 1) / log(lit(2.0))), 6))
-        .scopedPersist
+        .persist()
       val tot = graded.agg(
         sum(col("gain").cast(org.apache.spark.sql.types.DecimalType(20, 6))).as("dcg"),
         sum(col("igain").cast(org.apache.spark.sql.types.DecimalType(20, 6))).as("idcg"))
@@ -408,7 +408,7 @@ object VectorQueries {
             lit(127.0)) * sc))
       val qs = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("vec").as("qv"), col("dq").as("dqv"))
-      val scored = emb.crossJoin(broadcast(qs)).scopedPersist
+      val scored = emb.crossJoin(broadcast(qs)).persist()
       val wRank = Window.partitionBy("qid").orderBy(desc("sim"), asc("vec_id"))
       val rel = scored
         .select(col("qid"), col("vec_id"),
@@ -502,7 +502,7 @@ object VectorQueries {
         """transform(CAST(embedding AS ARRAY<DOUBLE>),
           |  v -> CAST(CAST(v AS DECIMAL(20,9)) * 1000000000 AS BIGINT))"""
           .stripMargin).as("em"))
-        .scopedPersist
+        .persist()
       val prods = em
         .select(posexplode(col("em")).as(Seq("i", "xm")), col("em"))
         .select(col("i"), col("xm"), posexplode(col("em")).as(Seq("j", "ym")))
@@ -575,7 +575,7 @@ object VectorQueries {
         """transform(CAST(embedding AS ARRAY<DOUBLE>),
           |  v -> CAST(CAST(v AS DECIMAL(20,9)) * 1000000000 AS BIGINT))"""
           .stripMargin).as("em"))
-        .scopedPersist
+        .persist()
       // q218's generator-only pair stream + long products (see there)
       val prods = em
         .select(posexplode(col("em")).as(Seq("i", "xm")), col("em"))
@@ -587,7 +587,7 @@ object VectorQueries {
       val dims = em.select(posexplode(col("em")).as(Seq("pos", "nv")))
         .groupBy(col("pos").cast("long").as("dim"))
         .agg(sum(col("nv").cast(DecimalType(38, 0))).as("s"))
-        .scopedPersist
+        .persist()
       val da = dims.select(col("dim").as("i"), col("s").as("si"))
       val db = dims.select(col("dim").as("j"), col("s").as("sj"))
       val num = col("sxy").cast("double") / col("n") -

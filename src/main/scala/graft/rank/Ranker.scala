@@ -40,33 +40,43 @@ object Ranker {
   /** Scored candidate frame: columns (id, sim, score, price, vec) — the
     * full pipeline up to (but excluding) MMR. `embeddings` must expose
     * (id: bigint, vec: array<double>); `meta` must expose (id, title,
-    * summary, rating, review_count, price).
+    * summary, rating, review_count, price). The candidate set it reads
+    * stays persisted until the caller's `spark.catalog.clearCache()`.
     */
   def scoreCandidates(
       embeddings: DataFrame,
       meta: DataFrame,
       queryText: String,
       queryVec: Array[Double],
-      cfg: Config = Config()): DataFrame = {
-    val qTokens = queryText.toLowerCase.split("\\s+").toSeq
-    val qVec = typedLit(queryVec)
+      cfg: Config = Config()): DataFrame =
+    score(candidates(embeddings, meta, queryText, queryVec, cfg), queryText, cfg)
 
-    // similarity scan + top-K: per-partition heap, no global sort shuffle
-    val sim = round(VectorOps.cosine(col("vec"), qVec), cfg.roundScale)
-    val top = embeddings
+  /** The persisted ≤topK candidate set: similarity scan + top-K
+    * (per-partition heap, no global sort shuffle) ⋈ meta, with the
+    * lexical rerank. It feeds the price-stats aggregate, the two min-max
+    * percentile aggregates, AND the main projection — four plan subtrees
+    * that would otherwise each replay the full similarity scan + top-K.
+    * At cluster scale this is the canonical "cache the candidate set"
+    * boundary; it is k rows, not corpus rows.
+    */
+  private def candidates(
+      embeddings: DataFrame,
+      meta: DataFrame,
+      queryText: String,
+      queryVec: Array[Double],
+      cfg: Config): DataFrame = {
+    val qTokens = queryText.toLowerCase.split("\\s+").toSeq
+    val sim = round(VectorOps.cosine(col("vec"), typedLit(queryVec)), cfg.roundScale)
+    embeddings
       .withColumn("sim", sim)
       .orderBy(desc("sim"), asc("id"))
       .limit(cfg.topK)
-
-    // Persisted: this ≤topK-row frame feeds the price-stats aggregate,
-    // the two min-max percentile aggregates, AND the main projection —
-    // four plan subtrees that would otherwise each replay the full
-    // similarity scan + top-K. At cluster scale this is the canonical
-    // "cache the candidate set" boundary; it is k rows, not corpus rows.
-    val joined = top.join(broadcast(meta), Seq("id"), "left")
+      .join(broadcast(meta), Seq("id"), "left")
       .withColumn("rerank", lexicalRerank(qTokens, col("title"), col("summary")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
+  private def score(joined: DataFrame, queryText: String, cfg: Config): DataFrame = {
     // candidate price stats (rank.py:225-232): median/σ over non-null prices
     // of exactly the top-K set; budget anchor wins when truthy.
     val budget = BudgetParser.parseBudget(lit(queryText))
@@ -121,6 +131,8 @@ object Ranker {
   /** Full MMR ranking: collects the scored top-K (the reference's own
     * driver boundary), runs greedy MMR, reapplies the stable
     * price-presence partition. Output: (id, score, mmr_pos, has_price).
+    * The candidate set is released after the collect, so a long-lived
+    * session (Repl) does not accumulate one cached frame per request.
     */
   def recommend(
       spark: SparkSession,
@@ -129,8 +141,10 @@ object Ranker {
       queryText: String,
       queryVec: Array[Double],
       cfg: Config = Config()): DataFrame = {
-    val scored = scoreCandidates(embeddings, meta, queryText, queryVec, cfg)
-    val rows = scored.select("id", "score", "vec", "price").collect()
+    val joined = candidates(embeddings, meta, queryText, queryVec, cfg)
+    val rows =
+      try score(joined, queryText, cfg).select("id", "score", "vec", "price").collect()
+      finally joined.unpersist()
     val cands = rows.map { r =>
       MMR.Candidate(r.getLong(0), r.getDouble(1),
         r.getSeq[Double](2).toArray)

@@ -53,7 +53,7 @@ object Knn {
     // candidate set is ~n/2^bits per table — broadcast it so the base
     // scan stays shuffle-free (a shuffle join here would move the whole
     // corpus to rerank a sliver of it); rerank on the codegen CosineSim
-    // path (CosineFusion), not the interpreted UDF
+    // expression (VectorOps.cosine), not an interpreted UDF
     base.join(broadcast(candIds), "id")
       .select(col("id"),
         round(VectorOps.cosine(col("vec"), typedLit(query.toSeq)), roundScale).as("sim"))

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -60,12 +60,6 @@ case class HtmlUnescape(child: Expression) extends UnaryExpression {
 
 object HtmlUnescape {
   val fnName = "html_unescape"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[HtmlUnescape].getName, null, fnName,
-    "_FUNC_(s) - decode HTML character references (named + numeric)", "")
-
-  val builder: Seq[Expression] => Expression = exprs => HtmlUnescape(exprs.head)
 
   private val AMP: UTF8String = UTF8String.fromString("&")
 

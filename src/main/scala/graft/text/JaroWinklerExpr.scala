@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,10 +94,6 @@ object JaroWinkler {
     simBytes(a.getBytes, b.getBytes)
 
   val fnName = "jaro_winkler"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[JaroWinklerSim].getName, null, fnName,
-    "_FUNC_(a, b) - Jaro-Winkler similarity of two strings", "")
 
   val builder: Seq[Expression] => Expression =
     exprs => JaroWinklerSim(exprs.head, exprs(1))

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,11 +63,6 @@ object Lcp {
   }
 
   val fnName = "lcp_chars"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[LcpChars].getName, null, fnName,
-    "_FUNC_(a, aOff, b, bOff) - code-point LCP of substr(a, aOff) and substr(b, bOff)",
-    "")
 
   val builder: Seq[Expression] => Expression =
     exprs => LcpChars(exprs.head, exprs(1), exprs(2), exprs(3))

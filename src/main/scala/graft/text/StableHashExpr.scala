@@ -1,18 +1,17 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for StableHash.hash64 over a string column
   * — codegen'd (`doGenCode`), so hash-heavy scans (stratified sampling,
   * bucket assignment) stay inside whole-stage codegen instead of paying
-  * the UDF serialization boundary. Registered as SQL `stable_hash64` via
-  * GraftExtensions alongside `cosine_sim`.
+  * the UDF serialization boundary. [[StableHash64.register]] adds it to
+  * a session as SQL `stable_hash64` (q165 does, alongside `cosine_sim`).
   */
 case class StableHash64(child: Expression) extends UnaryExpression {
 
@@ -38,10 +37,6 @@ case class StableHash64(child: Expression) extends UnaryExpression {
 
 object StableHash64 {
   val fnName = "stable_hash64"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[StableHash64].getName, null, fnName,
-    "_FUNC_(s) - 64-bit StableHash (poly-31 + splitmix64) of a string", "")
 
   val builder: Seq[Expression] => Expression = exprs => StableHash64(exprs.head)
 

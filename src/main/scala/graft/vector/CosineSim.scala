@@ -1,12 +1,10 @@
 package graft.vector
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression for cosine similarity over two
   * array<double> columns, with whole-stage codegen (`doGenCode`).
@@ -106,10 +104,6 @@ case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
   val fnName = "cosine_sim"
 
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[CosineSim].getName, null, fnName,
-    "_FUNC_(a, b) - cosine similarity of two double arrays", "")
-
   val builder: Seq[Expression] => Expression =
     exprs => CosineSim(exprs.head, exprs(1))
 
@@ -117,20 +111,4 @@ object CosineSim {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       fnName, builder, "scala_udf")
-}
-
-/** Session extension wiring: `--conf spark.sql.extensions=graft.vector.
-  * GraftExtensions` (or `.withExtensions(new GraftExtensions)`) makes
-  * `cosine_sim` and `stable_hash64` available to plain SQL on every
-  * session.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier(CosineSim.fnName), CosineSim.info, CosineSim.builder))
-    e.injectFunction((FunctionIdentifier(graft.text.StableHash64.fnName),
-      graft.text.StableHash64.info, graft.text.StableHash64.builder))
-    e.injectFunction((FunctionIdentifier(graft.text.JaroWinkler.fnName),
-      graft.text.JaroWinkler.info, graft.text.JaroWinkler.builder))
-    e.injectOptimizerRule(_ => CosineFusion)
-  }
 }

@@ -14,11 +14,11 @@ class ArtifactsSpec extends SparkSpec {
     val m = Artifacts.memo[String]
     var builds = 0
     def build(): String = { builds += 1; s"artifact-$builds" }
-    assert(m.getOrElseUpdate("k")(build()) == "artifact-1")
-    assert(m.getOrElseUpdate("k")(build()) == "artifact-1", "memo must hit")
+    assert(m.getOrElseUpdate(spark, "k")(build()) == "artifact-1")
+    assert(m.getOrElseUpdate(spark, "k")(build()) == "artifact-1", "memo must hit")
     assert(builds == 1)
     Artifacts.clearAll()
-    assert(m.getOrElseUpdate("k")(build()) == "artifact-2",
+    assert(m.getOrElseUpdate(spark, "k")(build()) == "artifact-2",
       "clearAll must drop a memo it was never told about")
     assert(builds == 2)
   }
@@ -26,42 +26,10 @@ class ArtifactsSpec extends SparkSpec {
   test("clearAll clears every registered memo, not just the newest") {
     val a = Artifacts.memo[Int]
     val b = Artifacts.memo[Int]
-    a.getOrElseUpdate("x")(1); b.getOrElseUpdate("y")(2)
+    a.getOrElseUpdate(spark, "x")(1); b.getOrElseUpdate(spark, "y")(2)
     assert(a.size == 1 && b.size == 1)
     Artifacts.clearAll()
     assert(a.size == 0 && b.size == 0)
-  }
-
-  test("an unreachable memo is not retained by the registry") {
-    // the registry holds WeakReferences: a memo created outside
-    // object-level init (exactly what these tests do) must be
-    // collectable once dropped, or every test run leaks maps + cached
-    // DataFrames into the global list
-    // stabilize the registry first: earlier tests' locally-scoped memos
-    // are unreachable, and a GC landing between the `before` capture
-    // and the +1 assert would shrink the count out from under an exact
-    // equality — prune until two consecutive readings agree (what
-    // remains is strongly held: object-level vals)
-    def prunedCount(): Int = {
-      System.gc(); Thread.sleep(50); Artifacts.clearAll()
-      Artifacts.registeredMemoCount
-    }
-    var before = prunedCount()
-    var tries = 0
-    var next = prunedCount()
-    while (next != before && tries < 20) { before = next; next = prunedCount(); tries += 1 }
-    var m: Artifacts.Memo[Int] = Artifacts.memo[Int]
-    m.getOrElseUpdate("k")(1)
-    assert(Artifacts.registeredMemoCount == before + 1)
-    m = null // drop the only strong ref
-    // best-effort GC: weak refs clear promptly once unreachable, but
-    // give the collector a few rounds before judging
-    tries = 0
-    while (Artifacts.registeredMemoCount > before && tries < 20) {
-      System.gc(); Thread.sleep(50); Artifacts.clearAll(); tries += 1
-    }
-    assert(Artifacts.registeredMemoCount <= before,
-      "a dropped memo must be pruned from the registry after GC")
   }
 
   test("materialize preserves rows and truncates lineage locally") {

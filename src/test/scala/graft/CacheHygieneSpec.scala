@@ -1,23 +1,25 @@
 package graft
 
-/** The library-level cache contract (Helpers.withScopedCaches): a query
-  * that persists intermediates leaves NO persisted RDDs behind once its
-  * first consuming action completes — an embedding caller does not leak
-  * cache by running registry queries. The unpersist rides the async
-  * QueryExecutionListener bus, so assertions poll briefly.
+/** The cache contract of registry queries: a query may persist
+  * intermediates, and its caller releases them with
+  * `spark.catalog.clearCache()` after the query (Bench, Verify,
+  * PlanProbe do); build-once artifacts are released by
+  * `Artifacts.clearAll()`. After both, no persisted RDD may remain — an
+  * RDD-level persist that neither call can reach would be a leak.
   */
 class CacheHygieneSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The checkpoint blocks of dropped artifact frames (SA index, BPE
+    * census, edge table) are freed by the ContextCleaner once the frame
+    * is GC'd — nudge it while polling.
+    */
   private def awaitNoPersistentRdds(timeoutMs: Long = 10000): Boolean = {
     val deadline = System.currentTimeMillis() + timeoutMs
     var i = 0
     while (System.currentTimeMillis() < deadline) {
       if (spark.sparkContext.getPersistentRDDs.isEmpty) return true
-      // dropped build-once memo frames (SA index / BPE artifact) free
-      // their localCheckpoint blocks via the ContextCleaner, which only
-      // fires once the frame is GC'd — nudge it while polling
       if (i % 10 == 0) System.gc()
       i += 1
       Thread.sleep(100)
@@ -25,97 +27,45 @@ class CacheHygieneSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.isEmpty
   }
 
-  /** Build-once artifact memos (the SA index, the BPE merge table, the
-    * co-purchase edge table) keep checkpoint-backed frames alive BY
-    * DESIGN — they are the artifact, not a leak. This spec's contract
-    * is about SCOPED-cache leaks, so memos are dropped both before a
-    * test (order independence from prior suites) and before the
-    * after-action assertion (a graph query legitimately builds the
-    * edge memo during its action).
-    */
-  private def dropArtifactMemos(): Unit = {
-    graft.dedup.SuffixArray.clearCache()
-    graft.queries.CurationQueries.clearCache()
-    graft.queries.GraphQueries.clearCache()
+  private def releaseAll(): Unit = {
+    spark.catalog.clearCache()
+    Artifacts.clearAll()
   }
 
   private def isolate(): Unit = {
-    // scope-held frames from other suites' plan-only builds (e.g.
-    // PlanShapeSpec's static plans, never executed) strongly reference
-    // the artifact checkpoint RDDs through their LogicalRDD nodes —
-    // the memo drop alone cannot free those blocks until the scopes go
-    queries.Helpers.releaseAllScopes()
-    spark.catalog.clearCache()
-    dropArtifactMemos()
-    // with the memo maps cleared nothing can read the dropped frames'
-    // checkpoint blocks again, but their RDDs can stay strongly
-    // reachable in the shared test JVM (observed after multi-suite
-    // PlanShapeSpec runs) — force-release the debris so this spec's
-    // REAL contract, the strict after-action assertion, starts clean
+    releaseAll()
+    // earlier suites' dropped artifact frames can stay strongly
+    // reachable in the shared test JVM — force-release the debris so
+    // each test's after-action assertion starts clean
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
-  // the judge-flagged cache-heavy representatives: triangle count,
-  // set-sim join, assoc rules, CC over near-dup pairs, plus BFS (the
-  // loop-persisting query)
-  // q213/q223: round-4 scopedPersist users; q224: persists the corpus
-  // frame but returns a LOCAL result (driver-side power iteration) —
-  // the listener must still release the build-time cache
+  // the cache-heavy representatives: triangle count, set-sim join,
+  // assoc rules, CC over near-dup pairs, BFS (the loop-persisting
+  // query), substring dedup and attribution; q224 persists the corpus
+  // frame but returns a LOCAL result (power iteration on collected state)
   for (q <- Seq("q100_triangle_count", "q154_setsim_join",
       "q181_assoc_rules", "q190_label_propagation", "q182_bfs_layers",
       "q213_substring_dedup", "q223_attribution", "q224_pca_power")) {
     test(s"$q leaves no persisted RDDs after its action") {
-      isolate() // order-independent: drop table caches AND artifact memos
+      isolate()
       assert(awaitNoPersistentRdds(), "pre-existing persistent RDDs: " +
         spark.sparkContext.getPersistentRDDs.values
           .map(r => s"${r.id}:${r.name}:${r.getStorageLevel.description}")
           .mkString("; "))
       val rows = SparkEntry.queries(q)(spark, sf).count()
       assert(rows > 0)
-      dropArtifactMemos() // the build-once artifact is not a scoped leak
+      releaseAll()
       assert(awaitNoPersistentRdds(),
         s"$q left persisted RDDs: " +
           spark.sparkContext.getPersistentRDDs.values.map(_.name).mkString(", "))
     }
   }
 
-  test("an abandoned scope (frame built, never executed) is swept by later scopes") {
-    import org.apache.spark.sql.functions._
-    isolate()
-    assert(awaitNoPersistentRdds(), "pre-existing persistent RDDs")
-    import spark.implicits._
-    // build a scoped frame and NEVER run an action on it — the old
-    // behavior leaked its cache registration + listener forever
-    var abandoned: org.apache.spark.sql.DataFrame = null
-    queries.Helpers.withScopedCaches {
-      import queries.Helpers.CacheScopeOps
-      abandoned = Seq(1, 2, 3).toDF("v").scopedPersist
-      abandoned.select(sum("v"))
-    }
-    assert(abandoned.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "abandoned scope should still hold its cache before the sweep")
-    // 17 more ABANDONED scopes (> MaxScopes = 16): the cap sweep must
-    // force-release the oldest, including the first frame (distinct
-    // plans per iteration so each holds its own cache entry)
-    for (i <- 1 to 17) {
-      queries.Helpers.withScopedCaches {
-        import queries.Helpers.CacheScopeOps
-        Seq(i, i + 100).toDF(s"w$i").scopedPersist
-          .select(count(lit(1)))
-      }
-    }
-    assert(abandoned.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "the abandoned scope survived the registry cap sweep")
-    // drain the rest (session-teardown hygiene API)
-    queries.Helpers.releaseAllScopes()
-    assert(awaitNoPersistentRdds())
-  }
-
   test("scoped caches ARE used during the consuming action") {
     isolate()
     // the frame persisted by the query body must be cached while the
-    // action runs (scopedPersist is persist, not a no-op): check the
-    // physical plan contains an InMemoryTableScan
+    // action runs: check the physical plan contains an InMemoryTableScan
     // var + null-out: the frame's plan holds the edge-memo checkpoint
     // RDD strongly, and the ContextCleaner can only free those blocks
     // once the frame is unreachable
@@ -126,7 +76,7 @@ class CacheHygieneSpec extends SparkSpec {
       s"no cache scan in plan:\n$phys")
     df.count()
     df = null
-    dropArtifactMemos()
+    releaseAll()
     assert(awaitNoPersistentRdds())
   }
 }

@@ -149,18 +149,18 @@ class DedupSpec extends SparkSpec {
 
   test("suffix-array build is a per-corpus memo; clearCache resets it") {
     import spark.implicits._
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
     val docs = Seq((1L, "abab"), (2L, "baba")).toDF("doc_id", "text")
     val a = graft.dedup.SuffixArray.build(spark, "memo-spec", docs, "doc_id", "text")
     val b = graft.dedup.SuffixArray.build(spark, "memo-spec", docs, "doc_id", "text")
     assert(a eq b, "same (session, key) must reuse the built index frame")
     val c = graft.dedup.SuffixArray.build(spark, "memo-spec-2", docs, "doc_id", "text")
     assert(!(a eq c), "a different corpus key must build its own index")
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
     val d = graft.dedup.SuffixArray.build(spark, "memo-spec", docs, "doc_id", "text")
-    assert(!(a eq d), "clearCache must drop the memo")
+    assert(!(a eq d), "clearAll must drop the memo")
     assert(d.count() == 8)
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
   }
 
   test("suffix-array ranks: empty, all-null and empty-string corpora yield empty frames") {
@@ -174,14 +174,14 @@ class DedupSpec extends SparkSpec {
 
   test("adjacent-LCP annex: empty and single-suffix corpora yield empty annexes") {
     import spark.implicits._
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(graft.dedup.SuffixArray
       .adjacentLcp(spark, "annex-empty", empty, "doc_id", "text").count() == 0)
     val one = Seq((1L, "x")).toDF("doc_id", "text") // one suffix → no pairs
     assert(graft.dedup.SuffixArray
       .adjacentLcp(spark, "annex-one", one, "doc_id", "text").count() == 0)
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
   }
 
   test("adjacent-LCP annex matches brute-force adjacency incl. band cap-hit escalation") {
@@ -194,7 +194,7 @@ class DedupSpec extends SparkSpec {
     val corpus = Seq(1L -> (blk + "one"), 2L -> ("zz" + blk + "two"),
       3L -> "unrelatedshort")
     val docs = corpus.toDF("doc_id", "text")
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
     val annex = graft.dedup.SuffixArray
       .adjacentLcp(spark, "annex-brute", docs, "doc_id", "text")
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
@@ -212,7 +212,7 @@ class DedupSpec extends SparkSpec {
       "corpus must produce a band cap hit")
     assert(annex.size == exp.size, s"${annex.size} pairs vs ${exp.size}")
     assert(annex == exp)
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
   }
 
   test("annex band cascade and single-band pass agree on all three LCP strata") {
@@ -230,7 +230,7 @@ class DedupSpec extends SparkSpec {
       1L -> (mid + "tailA" + big), 2L -> (big + "x" + mid),
       3L -> "completely different text", 4L -> blk(40))
     val docs = corpus.toDF("doc_id", "text")
-    SuffixArray.clearCache()
+    Artifacts.clearAll()
     val sa = SuffixArray.ranks(docs, "doc_id", "text")
     val pairs = SuffixArray.pairScores(SuffixArray.saSorted(sa))
       .localCheckpoint(true)
@@ -247,7 +247,7 @@ class DedupSpec extends SparkSpec {
       strata.exists(_ >= SuffixArray.HeadBand),
       s"corpus must populate all three LCP strata: ${strata.sorted.reverse.take(8)}")
     assert(cascade == single)
-    SuffixArray.clearCache()
+    Artifacts.clearAll()
   }
 
   test("suffix-array ranks reproduce brute-force lexicographic order") {
@@ -330,7 +330,7 @@ class DedupSpec extends SparkSpec {
             if (rnd.nextBoolean()) i -> base else i -> txt(1 + rnd.nextInt(70))
           }
         }
-      graft.dedup.SuffixArray.clearCache()
+      Artifacts.clearAll()
       val docs = corpus.toDF("doc_id", "text")
       val got = graft.dedup.SuffixArray.ranks(docs, "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -345,7 +345,7 @@ class DedupSpec extends SparkSpec {
             "disagrees with suffix order")
       }
     }
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
   }
 
   test("signature is permutation-stable (set semantics)") {
@@ -376,7 +376,7 @@ class DedupSpec extends SparkSpec {
     val dir = graft.sources.Staging.scratchDir("contam-spec").toString
     corpus.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
 
     // brute-force replay of the declared semantics
     val sufs = corpus.flatMap { case (d, t) =>
@@ -432,7 +432,7 @@ class DedupSpec extends SparkSpec {
     val dir = graft.sources.Staging.scratchDir("spans-spec").toString
     corpus.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
 
     val sufs = corpus.flatMap { case (d, t) =>
       (1 to t.length).map(i => (d, i.toLong, t.substring(i - 1)))
@@ -481,7 +481,7 @@ class DedupSpec extends SparkSpec {
       s"clean corpus mismatch: got $gotClean\nexpected $expectedClean")
     assert(expectedClean(3L).length < corpus.toMap.apply(3L).length,
       "doc 3's internal repeat must actually shrink")
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
   }
 
   test("substring dedup matches a driver-side string-level recompute") {

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan of `src/main` that keeps the launch surface in one place:
   * one `SparkSession.builder` call (Harness), environment reads only in
-  * the mains that own them, and `spark.graft.*` key strings only in
-  * GraftConf.
+  * the mains that own them, `spark.graft.*` key strings only in
+  * GraftConf, and cached state released only by the callers'
+  * `catalog.clearCache()` and `Artifacts.clearAll()`.
   */
 class LaunchSurfaceSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -61,5 +62,18 @@ class LaunchSurfaceSpec extends AnyFunSuite {
 
   test("spark.graft.* key strings appear only in GraftConf") {
     assert(filesMatching("\"spark.graft.") === Seq("GraftConf.scala"))
+  }
+
+  test("registry runners clear the cache; no hand-rolled cache release") {
+    val runners = sources.filter { case (_, src) =>
+      src.contains("Harness.selected") || src.contains("SparkEntry.queries(")
+    }
+    assert(runners.nonEmpty)
+    runners.foreach { case (p, src) =>
+      assert(src.contains("catalog.clearCache()"), s"${name(p)} never clears the cache")
+    }
+    for (needle <- Seq("QueryExecutionListener", "WeakReference", "ThreadLocal",
+        "def clearCache"))
+      assert(filesMatching(needle).isEmpty, s"$needle in ${filesMatching(needle)}")
   }
 }

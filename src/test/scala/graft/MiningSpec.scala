@@ -88,7 +88,7 @@ class MiningSpec extends SparkSpec {
             if (r.isNullAt(4)) None else Some(r.getDouble(4))))
         }.toMap
       assert(got == brute(rows), s"seed $seed: $got vs ${brute(rows)}")
-      spark.catalog.clearCache() // helper persists outside a query scope
+      spark.catalog.clearCache() // the helper persists its intermediates
     }
   }
 

@@ -249,8 +249,8 @@ class PlanShapeSpec extends SparkSpec {
     // pair formation — dropping bkt back to a residual would regress
     // silently (the time filter still makes the output correct)
     val plan = staticPlan("q223_attribution")
-    // the pairing subtree sits behind the scopedPersist boundary —
-    // traverse into cached plans
+    // the pairing subtree sits behind a persist boundary — traverse
+    // into cached plans
     def joins(p: SparkPlan): Seq[org.apache.spark.sql.execution.joins.BaseJoinExec] =
       p.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j } ++
         p.collect {
@@ -371,7 +371,7 @@ class PlanShapeSpec extends SparkSpec {
     // the index-engine contract (Lee et al. 2022 query SA+LCP arrays,
     // not the raw corpus): once the annex is built, the consumers' own
     // plans must contain no documents.parquet scan at all
-    graft.dedup.SuffixArray.clearCache()
+    Artifacts.clearAll()
     for (q <- Seq("q232_longest_repeat", "q234_repeated_spans",
         "q235_contamination_spans")) {
       val scans = fileScans(staticPlan(q))
@@ -407,7 +407,7 @@ class PlanShapeSpec extends SparkSpec {
     // table is checkpoint-materialized, each consumer's own plan reads
     // the artifact — a lineitem scan in any consumer means the family
     // regressed to five independent edge builds
-    graft.queries.GraphQueries.clearCache()
+    Artifacts.clearAll()
     for (q <- Seq("q100_triangle_count", "q152_kcore", "q182_bfs_layers",
         "q190_label_propagation", "q197_adamic_adar")) {
       val scans = fileScans(staticPlan(q))

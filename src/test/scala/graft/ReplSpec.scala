@@ -5,7 +5,9 @@ package graft
   * display, every `rank N` guard branch (valid switch, out-of-bounds,
   * non-digit, >Int.MaxValue digit run), the RAG answer path, and exit.
   * The transcript is asserted structurally (the ranked titles are
-  * data-derived) and for determinism (two runs, identical bytes).
+  * data-derived) and for determinism (two runs, identical bytes). The
+  * session is never cleared, so each recommend must release the
+  * candidate set it persists.
   */
 class ReplSpec extends SparkSpec {
 
@@ -48,5 +50,20 @@ class ReplSpec extends SparkSpec {
 
   test("the scripted session is deterministic run-to-run") {
     assert(transcript(script) == transcript(script))
+  }
+
+  test("Ranker.recommend leaves the session's persisted RDDs as it found them") {
+    import org.apache.spark.sql.functions.col
+    val emb = sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id").as("id"), vector.VectorOps.asDouble(col("embedding")).as("vec"))
+    val meta = queries.Helpers.metaAnalog(sources.Tables.documents(spark, sf))
+    val qv = emb.filter(col("id") === 0).select("vec").head().getSeq[Double](0).toArray
+    // the scripted sessions above ran this same request: start from an
+    // empty cache so the recommend cannot reuse their candidate set
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val rows = rank.Ranker.recommend(spark, emb, meta, queries.RankQueries.QueryText, qv).collect()
+    assert(rows.length == rank.Ranker.Config().finalK)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 }

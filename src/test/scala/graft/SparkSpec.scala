@@ -1,11 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite via lazy val. */
+/** Shared local session for specs — one per suite via lazy val. Each
+  * test ends the way each query ends in Bench or Verify: the session's
+  * cached frames are dropped, so no test inherits another's cache.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  override protected def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally spark.catalog.clearCache()
 
   /** Recursive temp-fixture delete (children before parents); missing
     * paths are fine. The one cleanup idiom for every spec that stages

@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 class VectorOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  private val sf = "/root/testdata/sf0.001"
+
   test("dot, norm, cosine on known vectors") {
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))).toDF("a", "b")
     val row = df.select(
@@ -22,13 +24,26 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("native CosineSim is bit-identical to the HOF formulation") {
-    val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val emb = graft.sources.Tables.embeddings(spark, sf)
       .select(VectorOps.asDouble(col("embedding")).as("v"))
     val q = emb.limit(1).select(col("v").as("qv"))
     val both = emb.crossJoin(q).select(
       VectorOps.cosine(col("v"), col("qv")).as("native"),
       VectorOps.cosineHof(col("v"), col("qv")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
+  }
+
+  test("q25/q26 rerank on the native CosineSim path, not an interpreted UDF") {
+    for (q <- Seq("q25_ann_topk", "q26_ivf_topk")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      val plan = df.queryExecution.optimizedPlan
+      val exprs = plan.collect { case p => p.expressions }.flatten
+      assert(exprs.exists(_.exists(_.isInstanceOf[graft.vector.CosineSim])),
+        s"$q: no CosineSim in optimized plan")
+      assert(!exprs.exists(_.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF])),
+        s"$q: interpreted ScalaUDF in the rerank path")
+    }
   }
 
   test("cosine_sim registers as a SQL function") {
