@@ -1,10 +1,8 @@
 package graft
 
 import graft.qa.Retriever
-import graft.queries.{Helpers, RankQueries}
+import graft.queries.RankQueries
 import graft.rank.Ranker
-import graft.sources.Tables
-import graft.vector.VectorOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -39,21 +37,10 @@ object Repl {
     */
   def run(spark: SparkSession, dir: String,
       in: java.io.BufferedReader, out: java.io.PrintStream): Unit = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("id"),
-        VectorOps.asDouble(col("embedding")).as("vec"))
-    val meta = Helpers.metaAnalog(Tables.documents(spark, dir))
-    val qv = Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-      .select(VectorOps.asDouble(col("embedding")))
-      .head().getSeq[Double](0).toArray
-
+    val (emb, meta, qv) = RankQueries.inputs(spark, dir)
     val ranked = Ranker.recommend(
-        spark, emb, meta, RankQueries.QueryText, qv)
-      .orderBy(col("has_price").desc, col("mmr_pos").asc)
-      .collect()
-    val titles = meta
-      .join(spark.createDataFrame(ranked.map(r => Tuple1(r.getLong(0))).toSeq)
-        .toDF("id"), "id")
+      spark, emb, meta, RankQueries.QueryText, qv).collect()
+    val titles = meta.filter(col("id").isin(ranked.map(_.getLong(0)).toSeq: _*))
       .select(col("id"), col("title"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val nProducts = ranked.length

@@ -333,91 +333,41 @@ object SuffixArray {
     * never assume density.
     */
   def ranks(docs: DataFrame, docCol: String, textCol: String,
-            initK: Int = 64, maxRounds: Int = 40,
-            maxFanout: Int = 8, extBudgetChars: Long = 64L << 20): DataFrame =
-    ranksWithStats(docs, docCol, textCol, initK, maxRounds, maxFanout,
-      extBudgetChars)._1
+            initK: Int = BaseDepth): DataFrame =
+    rankSuffixes(docs, docCol, textCol, initK)._1
 
-  /** Adaptive-initK census parameters. Sampling is by PREFIX space, not
-    * by row: a suffix is sampled iff xxhash64 of its depth-16 prefix
-    * falls in a 1/[[CensusMod]] slice, so ALL suffixes sharing a
-    * sampled prefix are counted together and the within-sample
-    * collision fraction is the EXACT ambiguity of that slice — an
-    * unbiased estimator of corpus ambiguity at each depth (a uniform
-    * row sample would systematically under-count collisions). The
-    * census is one map-only corpus pass (explode + substr + hash
-    * filter, no shuffle of the full fan-out) feeding a sample-sized
-    * aggregate — measured well under 10% of the base round it sizes,
-    * which pays the same scan PLUS an initK-byte-per-row sort exchange.
+  /** [[ranks]] at [[BaseDepth]] plus the measured base-rank duplication
+    * fraction (ambiguous rows / total after depth-initK — what the
+    * annex's band cascade sizes itself by).
     */
-  private[graft] val CensusMod = 64
-  /** Below this sample size the estimate is noise — fall back to the
-    * conservative initK=64 (test-scale corpora take this path, so their
-    * pinned behavior is unchanged). */
-  private[graft] val CensusMinRows = 20000L
-  /** Choose the smallest depth whose estimated ambiguity keeps the
-    * post-base active set safely inside FROZEN mode (switch fires at
-    * 25%; margin absorbs sampling noise), so escalation after a shallow
-    * base rank touches only the ambiguous minority. */
-  private[graft] val CensusFrozenSafe = 0.20
+  private[graft] def ranksWithStats(docs: DataFrame, docCol: String,
+                                    textCol: String): (DataFrame, Double) =
+    rankSuffixes(docs, docCol, textCol, BaseDepth)
 
-  /** The adaptive-initK pre-census over `(doc_id, text)` rows: returns
-    * (chosen initK, depth-32 ambiguity estimate when the sample was
-    * large enough). Ambiguity at 16 and 32 chars is measured EXACTLY
-    * for a 1/[[CensusMod]] prefix-space slice; the 16-char survivor
-    * set only computes 32-char keys for sampled rows, so the map cost
-    * is one 16-char substr per suffix.
+  /** Base-rank prefix depth, fixed, not sized per corpus. An adaptive
+    * depth (a sampled census choosing 16, 32 or 64) was built and
+    * A/B-measured on one box, min-of-two: the base round is
+    * MATERIALIZATION-bound, not key-byte-bound (sf1 base rank 41.4 s at
+    * depth 64 vs 41.9 s at depth 32 for identical row counts), and a
+    * shallower start LOSES whenever duplication is material (more
+    * FULL-mode rounds): q235 end-to-end took 218.8 s at sf1 from the
+    * census's depth-32 pick against 187.6 s from depth 64 (sf0.1: 15.83
+    * vs 15.65 s), and the census itself cost ~1.7 s per corpus on top. A
+    * 16-char base is never safe on prose either (16-char ambiguity 0.72
+    * on the natural docs corpus). Depth 64 leaves 11.4% of the docs
+    * corpus ambiguous vs 12.4% at depth 32: nearly the same
+    * discrimination, and it saves a whole doubling round.
     */
-  private[graft] def censusInitK(spread: DataFrame,
-                                 minRows: Long = CensusMinRows): (Int, Option[Double]) = {
-    val g = spread
-      .select(col("text"),
-        explode(sequence(lit(1), length(col("text")))).as("off32"))
-      .select(col("text"), col("off32"),
-        expr("substr(text, off32, 16)").as("p16"))
-      .filter(pmod(xxhash64(col("p16")), lit(CensusMod)) === 0)
-      .select(col("p16"), expr("substr(text, off32, 32)").as("p32"))
-      .groupBy("p16", "p32")
-      .agg(count(lit(1)).as("c"))
-      .persist()
-    try {
-      val r32 = g.agg(coalesce(sum(col("c")), lit(0L)),
-        coalesce(sum(when(col("c") > 1, col("c"))), lit(0L))).head()
-      val (nS, amb32n) = (r32.getLong(0), r32.getLong(1))
-      val r16 = g.groupBy("p16").agg(sum(col("c")).as("c"))
-        .agg(coalesce(sum(when(col("c") > 1, col("c"))), lit(0L))).head()
-      val amb16n = r16.getLong(0)
-      val chosen =
-        if (nS < minRows) 64
-        else if (amb16n <= CensusFrozenSafe * nS) 16
-        else if (amb32n <= CensusFrozenSafe * nS) 32
-        else 64
-      // keep the depth-32 ambiguity estimate: when the base rank runs
-      // shallower than FirstBand(32), the annex cascade should size
-      // itself by this, not by the (over-stated) depth-k0 ambiguity
-      // the base round's own census measures
-      (chosen, if (nS >= minRows) Some(amb32n.toDouble / nS) else None)
-    } finally { g.unpersist(); () }
-  }
+  private val BaseDepth = 64
 
-  /** [[ranks]] plus the measured base-rank duplication fraction
-    * (ambiguous rows / total after depth-initK — what the annex's band
-    * cascade sizes itself by).
-    */
-  private[graft] def ranksWithStats(docs: DataFrame, docCol: String, textCol: String,
-            initK: Int = 64, maxRounds: Int = 40,
-            maxFanout: Int = 8, extBudgetChars: Long = 64L << 20,
-            censusMinRows: Long = CensusMinRows): (DataFrame, Double) = {
+  private def rankSuffixes(docs: DataFrame, docCol: String, textCol: String,
+            initK: Int, maxRounds: Int = 40,
+            maxFanout: Int = 8, extBudgetChars: Long = 64L << 20): (DataFrame, Double) = {
     val base = docs.select(col(docCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
 
     // one row per suffix, keyed by its first initK chars — a bounded
-    // (initK-byte) sort key per row, never a whole suffix. initK=64
-    // (measured): depth 64 leaves 11.4% of the docs corpus ambiguous vs
-    // 12.4% at depth 32 — nearly the same discrimination, but starting
-    // at 64 saves one whole doubling round, which outweighs the extra
-    // sort-key bytes (round cost is materialization-bound, not
-    // comparison-bound).
+    // (initK-byte) sort key per row, never a whole suffix
     val n0 = docs.sparkSession.sessionState.conf.numShufflePartitions
     // decouple the explode's parallelism from the SCAN's partitioning:
     // a compact docs file (few scan tasks, or long documents) would
@@ -430,31 +380,13 @@ object SuffixArray {
     val spread =
       if (nonEmpty.rdd.getNumPartitions < n0) nonEmpty.repartition(n0)
       else nonEmpty
-    // initK <= 0 → size the base-rank key from a pre-census instead of
-    // always paying 64 chars/row through the first exchange (~64× corpus
-    // bytes, the build's honest dominant cost): estimate ambiguity at
-    // depth 16 and 32 on a prefix-space sample (see [[CensusMod]]) and
-    // take the smallest depth that still lands the post-base active set
-    // in FROZEN mode — the existing machinery then escalates only the
-    // ambiguous classes. Ranks are a total order over suffixes, so the
-    // starting depth changes round shape, never output.
-    // A census runs whenever the base rank will be SHALLOWER than
-    // FirstBand — even for a caller-forced initK (e.g. 16): without it the published dupFrac would be the over-stated
-    // depth-k0 ambiguity, which can flip the annex cascade to
-    // HeadBand-only and forfeit the FirstBand pre-pass saving. The
-    // forced k0 is honored; only the ambiguity estimate is measured.
-    val (k0, censusAmb32) =
-      if (initK >= FirstBand) (initK, None: Option[Double])
-      else if (initK > 0)
-        (initK, censusInitK(spread, censusMinRows)._2)
-      else censusInitK(spread, censusMinRows)
     val prefixes = spread
       // sequence(1, 0) would DESCEND ([1, 0]) — empty docs must not
       // reach the explode (hence the length filter above)
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(1), length(col("text")))).as("off32"))
       .select(col("doc_id"), col("off32").cast("long").as("off"),
-        expr(s"substr(text, off32, $k0)").as("pfx"))
+        expr(s"substr(text, off32, $initK)").as("pfx"))
 
     val (state0, c0) = rankStep(prefixes, Seq("pfx"), refine = false,
       materializeInput = false)
@@ -465,13 +397,8 @@ object SuffixArray {
     if (c0.nRows == 0L) return (strip(state0), 0.0)
 
     val total = c0.nRows
-    // published duplication fraction (sizes the annex band cascade):
-    // ambiguity at depth ≥ FirstBand. When the adaptive base ran
-    // shallower than FirstBand, the base census over-states it — use
-    // the pre-census's depth-32 estimate instead.
-    val dupFrac =
-      if (k0 < FirstBand) censusAmb32.getOrElse(c0.nAmbigRows.toDouble / total)
-      else c0.nAmbigRows.toDouble / total
+    // published duplication fraction (sizes the annex band cascade)
+    val dupFrac = c0.nAmbigRows.toDouble / total
     // longest document (max offset) — rides the base census, no extra job
     val maxLen = c0.maxOff
 
@@ -496,7 +423,7 @@ object SuffixArray {
     var ambigGroups = c0.nAmbigGroups
     var carried = c0.nGroups
 
-    var k = k0.toLong
+    var k = initK.toLong
     var rounds = 0
     var noRefine = false
     while (!noRefine && nActive > 0 && k < maxLen && rounds < maxRounds) {
@@ -652,20 +579,7 @@ object SuffixArray {
   def build(spark: SparkSession, corpusKey: String, docs: => DataFrame,
             docCol: String, textCol: String): DataFrame = {
     builds.getOrElseUpdate(spark, corpusKey) {
-      // Default 64, NOT adaptive — the adaptive census (initK = 0) was
-      // built and A/B-measured (round 8, same box, min-of-two): the
-      // base round's cost is MATERIALIZATION-bound, not key-byte-bound
-      // — sf1 base rank 41.4 s at depth 64 vs 41.9 s at depth 32 for
-      // identical row counts, so the "64× corpus sort bytes" term does
-      // not surface in single-node wall time. q235 end-to-end: sf0.1
-      // 15.65 s (64) vs 15.83 s (32); sf1 187.6 s (64) vs 218.8 s (32)
-      // — a shallower start LOSES whenever duplication is material
-      // (more FULL-mode rounds) and ties elsewhere, while the census
-      // itself costs ~1.7 s/corpus. The census also showed a 16-char
-      // base is never safe on prose (amb16 = 0.72 on the natural docs
-      // corpus). On a network-shuffle cluster where bytes genuinely
-      // bill, ranksWithStats(initK = 0) re-enables the census.
-      val (df, dupFrac) = ranksWithStats(docs, docCol, textCol, initK = 64)
+      val (df, dupFrac) = ranksWithStats(docs, docCol, textCol)
       dupFracs.put(spark, corpusKey, dupFrac)
       df
     }

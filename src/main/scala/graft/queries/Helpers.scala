@@ -183,8 +183,8 @@ object Helpers {
        |${assignCte("asg", s"c$iters")}""".stripMargin
   }
 
-  /** DuckDB mirror of Features.minMaxNorm's per-row expression given
-    * precomputed lo/hi columns.
+  /** DuckDB mirror of Features.minMaxScale given precomputed lo/hi
+    * columns.
     */
   def minMaxSql(e: String, lo: String, hi: String): String =
     s"(CASE WHEN abs(($hi) - ($lo)) <= 1e-8 + 1e-5*abs($lo) THEN 0.5 " +

@@ -21,7 +21,9 @@ object RankQueries {
   val QueryText = "best value spark table under 300"
   private val qTokens = QueryText.split(" ").toSeq // parsed budget: 300.0
 
-  private def inputs(s: SparkSession, dir: String): (DataFrame, DataFrame, Array[Double]) = {
+  /** The catalog a recommend runs on: (id, vec) embeddings, the
+    * metaAnalog meta, and vector 0 as the query vector. */
+  private[graft] def inputs(s: SparkSession, dir: String): (DataFrame, DataFrame, Array[Double]) = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id").as("id"), VectorOps.asDouble(col("embedding")).as("vec"))
     val meta = metaAnalog(Tables.documents(s, dir))

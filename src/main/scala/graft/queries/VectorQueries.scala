@@ -59,12 +59,14 @@ object VectorQueries {
         |GROUP BY label, pos1 ORDER BY label, pos""".stripMargin)),
 
     // Percentile-clipped min-max normalization (rank.py:44-54) over part
-    // prices: scalar-aggregate bounds broadcast back over the scan.
+    // prices: one scalar aggregate of bounds broadcast back over the scan.
     Q("q22_minmax_price", (s, dir) => {
       val df = Tables.part(s, dir)
         .select(col("p_partkey"), col("p_retailprice").as("price"))
-      Features.minMaxNorm(df, "price", "norm_raw")
-        .select(col("p_partkey"), col("price"), round(col("norm_raw"), 6).as("norm"))
+      val b = df.select(Features.clipBounds(col("price"), "b"): _*)
+      df.crossJoin(broadcast(b))
+        .select(col("p_partkey"), col("price"),
+          round(Features.minMaxScale(col("price"), col("b_lo"), col("b_hi")), 6).as("norm"))
         .orderBy("p_partkey")
     }, Some(
       s"""WITH b AS (SELECT quantile_cont(p_retailprice, 0.01) AS lo,
@@ -95,22 +97,20 @@ object VectorQueries {
          |FROM p CROSS JOIN s ORDER BY p_partkey""".stripMargin)),
 
     // Full feature computation on the meta-analog: Bayesian rating,
-    // log1p popularity + min-max norm, price-fit (rank.py:239-256).
+    // log1p popularity + min-max norm, price-fit (rank.py:239-256). The
+    // price anchor/σ and the popularity clip bounds are one aggregate.
     Q("q24_feature_blend", (s, dir) => {
       val meta = metaAnalog(Tables.documents(s, dir))
-      val stats = meta.agg(median(col("price")).as("anchor"),
-        stddev_pop(col("price")).as("sigma"))
-      val feat = meta.crossJoin(broadcast(stats))
-        .withColumn("bayes",
-          Features.bayesianRating(col("rating"), col("review_count")) / Features.MaxStarRating)
         .withColumn("pop", Features.popularity(col("review_count")))
-        .withColumn("fit", Features.priceFit(col("price"), col("anchor"), col("sigma")))
-      Features.minMaxNorm(feat, "pop", "pop_norm")
+      val stats = meta.select(Seq(median(col("price")).as("anchor"),
+        stddev_pop(col("price")).as("sigma")) ++ Features.clipBounds(col("pop"), "pop"): _*)
+      meta.crossJoin(broadcast(stats))
         .select(col("id"),
-          round(col("bayes"), 6).as("bayes"),
+          round(Features.bayesianRating(col("rating"), col("review_count")) /
+            Features.MaxStarRating, 6).as("bayes"),
           round(col("pop"), 6).as("pop"),
-          round(col("pop_norm"), 6).as("pop_norm"),
-          round(col("fit"), 6).as("fit"))
+          round(Features.minMaxScale(col("pop"), col("pop_lo"), col("pop_hi")), 6).as("pop_norm"),
+          round(Features.priceFit(col("price"), col("anchor"), col("sigma")), 6).as("fit"))
         .orderBy("id")
     }, Some(
       s"""WITH meta AS ($metaAnalogSql),

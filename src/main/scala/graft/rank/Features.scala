@@ -1,6 +1,6 @@
 package graft.rank
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Ranking feature functions — pure column expressions mirroring the
@@ -48,27 +48,22 @@ object Features {
   def isClose(a: Column, b: Column): Column =
     abs(a - b) <= lit(1e-8) + lit(1e-5) * abs(b)
 
-  /** Percentile-clipped min-max normalization (rank.py:44-54): clip to
-    * [p1,p99] of the WHOLE input frame, scale to [0,1] with +1e-9 on the
-    * denominator; degenerate spread → constant 0.5. The percentile bounds
-    * are a 2-row scalar aggregate broadcast back over the frame (one
-    * map-side-combinable aggregation, no extra wide shuffle).
+  /** Percentile-clipped min-max scaling (rank.py:44-54): clip `x` to
+    * [lo, hi], scale to [0,1] with +1e-9 on the denominator; degenerate
+    * spread → constant 0.5. The caller computes lo/hi (the p1/p99 of the
+    * whole frame) in its own scalar aggregate, so one aggregate serves
+    * every scaled column of a plan.
     */
-  def minMaxNorm(df: DataFrame, inCol: String, outCol: String,
-                 lower: Double = 0.01, upper: Double = 0.99): DataFrame = {
-    val loName = s"__${outCol}_lo"
-    val hiName = s"__${outCol}_hi"
-    val bounds = df.agg(
-      percentile(col(inCol), lit(lower)).as(loName),
-      percentile(col(inCol), lit(upper)).as(hiName))
-    val lo = col(loName)
-    val hi = col(hiName)
-    df.crossJoin(broadcast(bounds))
-      .withColumn(outCol,
-        when(isClose(hi, lo), lit(0.5))
-          .otherwise((least(greatest(col(inCol), lo), hi) - lo) / (hi - lo + lit(Epsilon))))
-      .drop(loName, hiName)
-  }
+  def minMaxScale(x: Column, lo: Column, hi: Column): Column =
+    when(isClose(hi, lo), lit(0.5))
+      .otherwise((least(greatest(x, lo), hi) - lo) / (hi - lo + lit(Epsilon)))
+
+  /** The [p1, p99] bounds [[minMaxScale]] clips to, as two aggregate
+    * columns `<name>_lo`/`<name>_hi` for the caller's scalar aggregate.
+    */
+  def clipBounds(x: Column, name: String): Seq[Column] =
+    Seq(percentile(x, lit(0.01)).as(s"${name}_lo"),
+      percentile(x, lit(0.99)).as(s"${name}_hi"))
 
   /** Default blend weights (rank.py:259-266). */
   val Alpha = 0.4 // cosine similarity

@@ -4,20 +4,26 @@ import graft.text.{BudgetParser, TextOps}
 import graft.vector.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** The reference's recommendation query re-expressed as one declarative
   * Spark plan (reference: semantic.py:33-52 + rank.py:208-337):
   *
   *   cosine scan → top-K (TakeOrderedAndProject) → broadcast join meta →
-  *   scalar candidate stats (median/σ/percentiles, one map-side-combinable
-  *   aggregate) → feature + blend projection → [collect ≤K rows] → greedy
-  *   MMR → price-presence partition.
+  *   [persisted ≤K candidates] → ONE scalar aggregate (price median/σ and
+  *   the p1/p99 clip bounds of popularity and rerank), broadcast back by
+  *   one cross join → feature + blend projection → [collect ≤K rows] →
+  *   greedy MMR → price-presence partition, both over the collected rows.
   *
   * Everything before the MMR collect is lazy Catalyst plan: the similarity
   * scan parallelizes over the embedding table's partitions, the top-K is a
   * per-partition heap + driver merge (no full sort shuffle), and meta is a
   * broadcast join. The only driver materialization is the ≤topK candidate
-  * set — identical to the reference's own collect boundary.
+  * set — identical to the reference's own collect boundary. On sf0.1
+  * (local[4], AQE on) `scoreCandidates(...).collect()` runs 5 Spark jobs,
+  * and so does `recommend`; its ranked frame is a local relation, so
+  * collecting it runs none.
   */
 object Ranker {
   final case class Config(
@@ -53,11 +59,11 @@ object Ranker {
 
   /** The persisted ≤topK candidate set: similarity scan + top-K
     * (per-partition heap, no global sort shuffle) ⋈ meta, with the
-    * lexical rerank. It feeds the price-stats aggregate, the two min-max
-    * percentile aggregates, AND the main projection — four plan subtrees
-    * that would otherwise each replay the full similarity scan + top-K.
-    * At cluster scale this is the canonical "cache the candidate set"
-    * boundary; it is k rows, not corpus rows.
+    * lexical rerank. It feeds the one candidate-stats aggregate AND the
+    * main projection — two plan subtrees that would otherwise each replay
+    * the full similarity scan + top-K. At cluster scale this is the
+    * canonical "cache the candidate set" boundary; it is k rows, not
+    * corpus rows.
     */
   private def candidates(
       embeddings: DataFrame,
@@ -77,32 +83,27 @@ object Ranker {
   }
 
   private def score(joined: DataFrame, queryText: String, cfg: Config): DataFrame = {
-    // candidate price stats (rank.py:225-232): median/σ over non-null prices
-    // of exactly the top-K set; budget anchor wins when truthy.
-    val budget = BudgetParser.parseBudget(lit(queryText))
-    val stats = joined.agg(
-      median(col("price")).as("__price_median"),
-      stddev_pop(col("price")).as("__price_std"))
-    val withStats = joined.crossJoin(broadcast(stats))
-      .withColumn("__budget", budget)
+    // every candidate-set scalar in ONE aggregate over exactly the top-K
+    // rows, broadcast back once: the price median/σ over non-null prices
+    // (rank.py:225-232) and the clip bounds of the two min-max scaled
+    // features (rank.py:44-54). The budget anchor wins when truthy.
+    val withPop = joined.withColumn("pop", Features.popularity(col("review_count")))
+    val stats = withPop.select(Seq(median(col("price")).as("__price_median"),
+      stddev_pop(col("price")).as("__price_std")) ++
+      Features.clipBounds(col("pop"), "__pop") ++
+      Features.clipBounds(col("rerank"), "__rerank"): _*)
+    withPop.crossJoin(broadcast(stats))
+      .withColumn("__budget", BudgetParser.parseBudget(lit(queryText)))
       .withColumn("__anchor",
         when(col("__budget").isNotNull && col("__budget") =!= 0.0, col("__budget"))
           .otherwise(col("__price_median")))
-
-    val featured = withStats
-      .withColumn("bayes",
-        Features.bayesianRating(col("rating"), col("review_count")) / Features.MaxStarRating)
-      .withColumn("pop", Features.popularity(col("review_count")))
-      .withColumn("price_fit",
-        Features.priceFit(col("price"), col("__anchor"), col("__price_std")))
-
-    val normed = Features.minMaxNorm(
-      Features.minMaxNorm(featured, "pop", "pop_norm"), "rerank", "rerank_norm")
-
-    normed
       .withColumn("score",
-        round(Features.blend(col("sim"), col("bayes"), col("pop_norm"),
-          col("price_fit"), col("rerank_norm")), cfg.roundScale))
+        round(Features.blend(col("sim"),
+          Features.bayesianRating(col("rating"), col("review_count")) / Features.MaxStarRating,
+          Features.minMaxScale(col("pop"), col("__pop_lo"), col("__pop_hi")),
+          Features.priceFit(col("price"), col("__anchor"), col("__price_std")),
+          Features.minMaxScale(col("rerank"), col("__rerank_lo"), col("__rerank_hi"))),
+          cfg.roundScale))
       .select("id", "sim", "score", "price", "vec")
   }
 
@@ -130,7 +131,8 @@ object Ranker {
 
   /** Full MMR ranking: collects the scored top-K (the reference's own
     * driver boundary), runs greedy MMR, reapplies the stable
-    * price-presence partition. Output: (id, score, mmr_pos, has_price).
+    * price-presence partition. Output: (id, score, mmr_pos, has_price)
+    * in display order, as a local relation of ≤finalK rows.
     * The candidate set is released after the collect, so a long-lived
     * session (Repl) does not accumulate one cached frame per request.
     */
@@ -150,17 +152,15 @@ object Ranker {
         r.getSeq[Double](2).toArray)
     }
     val hasPrice = rows.map(r => r.getLong(0) -> !r.isNullAt(3)).toMap
-    val picked = MMR.select(cands.toSeq, cfg.finalK, cfg.lambda)
-    val out = picked.zipWithIndex.map { case (c, i) =>
-      Row(c.id, c.score, (i + 1).toLong, hasPrice(c.id))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("mmr_pos", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("has_price", org.apache.spark.sql.types.BooleanType)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toList, 1), schema)
-      .orderBy(col("has_price").desc, col("mmr_pos").asc)
+    // display order over the collected rows: the stable price-presence
+    // partition (rank.py:327-337) keeps MMR order within each block
+    val out = MMR.select(cands.toSeq, cfg.finalK, cfg.lambda).zipWithIndex
+      .map { case (c, i) => Row(c.id, c.score, (i + 1).toLong, hasPrice(c.id)) }
+      .sortBy(r => !r.getBoolean(3))
+    spark.createDataFrame(out.asJava, OutSchema)
   }
+
+  private val OutSchema = StructType(Seq(
+    StructField("id", LongType), StructField("score", DoubleType),
+    StructField("mmr_pos", LongType), StructField("has_price", BooleanType)))
 }

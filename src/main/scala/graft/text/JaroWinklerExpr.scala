@@ -95,19 +95,11 @@ object JaroWinkler {
 
   val fnName = "jaro_winkler"
 
-  val builder: Seq[Expression] => Expression =
-    exprs => JaroWinklerSim(exprs.head, exprs(1))
-
   def apply(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
       JaroWinklerSim(
         org.apache.spark.sql.GraftSqlBridge.expression(a),
         org.apache.spark.sql.GraftSqlBridge.expression(b)))
-
-  /** Imperative registration on an existing session (tests, notebooks). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "scala_udf")
 }
 
 case class JaroWinklerSim(left: Expression, right: Expression)

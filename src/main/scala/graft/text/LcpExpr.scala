@@ -64,9 +64,6 @@ object Lcp {
 
   val fnName = "lcp_chars"
 
-  val builder: Seq[Expression] => Expression =
-    exprs => LcpChars(exprs.head, exprs(1), exprs(2), exprs(3))
-
   def apply(a: Column, aOff: Column, b: Column, bOff: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
       LcpChars(
@@ -74,11 +71,6 @@ object Lcp {
         org.apache.spark.sql.GraftSqlBridge.expression(aOff),
         org.apache.spark.sql.GraftSqlBridge.expression(b),
         org.apache.spark.sql.GraftSqlBridge.expression(bOff)))
-
-  /** Imperative registration on an existing session (tests, notebooks). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "scala_udf")
 }
 
 case class LcpChars(first: Expression, second: Expression,

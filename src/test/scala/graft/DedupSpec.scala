@@ -511,69 +511,6 @@ class DedupSpec extends SparkSpec {
       assert(got(id) == dup, s"doc $id: got ${got(id)}, expected $dup")
   }
 
-  test("initK census: shallow on distinctive text, deep on duplication, tiny samples fall back") {
-    import graft.dedup.SuffixArray
-    val rnd = new scala.util.Random(64)
-    def doc(n: Int) = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
-    // ~40k suffixes of 26-letter random text: 16-char prefixes are
-    // near-unique → the census may go shallow
-    // minRows lowered to test-corpus scale (the prod default needs a
-    // ≥1.3M-suffix corpus to trust its 1/64 prefix-space sample)
-    val uniq = (1L to 400L).map(i => (i, doc(100))).toDF("doc_id", "text")
-    val (kU, ambU) =
-      SuffixArray.censusInitK(uniq.select(col("doc_id"), col("text")), minRows = 100L)
-    assert(kU == 16, s"distinctive corpus chose $kU")
-    assert(ambU.exists(_ < 0.05), s"amb32 estimate $ambU")
-    // the same text duplicated 400× → every suffix collides at any
-    // fixed depth → conservative 64
-    val shared = doc(100)
-    val dup = (1L to 400L).map(i => (i, shared)).toDF("doc_id", "text")
-    val (kD, ambD) =
-      SuffixArray.censusInitK(dup.select(col("doc_id"), col("text")), minRows = 100L)
-    assert(kD == 64, s"duplicated corpus chose $kD")
-    assert(ambD.exists(_ > 0.95), s"amb32 estimate $ambD")
-    // sub-threshold sample → fixed fallback, no estimate
-    val tiny = (1L to 3L).map(i => (i, doc(50))).toDF("doc_id", "text")
-    val (kT, ambT) = SuffixArray.censusInitK(tiny.select(col("doc_id"), col("text")))
-    assert(kT == 64 && ambT.isEmpty)
-    // the adaptive path must produce exactly the fixed path's ranks
-    val small = (1L to 30L).map(i => (i, doc(40) + shared.take(20))).toDF("doc_id", "text")
-    val fixed = SuffixArray.ranks(small, "doc_id", "text")
-      .collect().map(_.toSeq).toSet
-    val adaptive = SuffixArray.ranks(small, "doc_id", "text", initK = 0)
-      .collect().map(_.toSeq).toSet
-    assert(adaptive == fixed)
-  }
-
-  test("forced shallow initK still publishes a depth-≥FirstBand dupFrac") {
-    // round-8 advice: a caller-forced initK = 16 (initK > 0, so the
-    // adaptive census used to be skipped) must NOT publish the
-    // over-stated depth-16 ambiguity as dupFrac — that can flip the
-    // annex cascade to HeadBand-only on low-duplication corpora. The
-    // census now runs whenever k0 < FirstBand regardless of how k0 was
-    // chosen. Corpus: a 40-char header shared by every doc + a
-    // distinctive random tail → suffixes in the header are ambiguous at
-    // depth 16 (~25/99 per doc) but mostly resolved at depth 32 (~9/99),
-    // so the two estimates differ by more than 2×.
-    import graft.dedup.SuffixArray
-    val rnd = new scala.util.Random(9)
-    val header = Seq.fill(40)(('a' + rnd.nextInt(26)).toChar).mkString
-    def tail(n: Int) = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
-    val docs = (1L to 300L).map(i => (i, header + tail(59)))
-      .toDF("doc_id", "text")
-    val (_, dupShallow) = SuffixArray.ranksWithStats(
-      docs, "doc_id", "text", initK = 16, censusMinRows = 100L)
-    val (_, dupDeep) = SuffixArray.ranksWithStats(
-      docs, "doc_id", "text", initK = 64)
-    // depth-16 raw ambiguity on this corpus is ~0.25; the census's
-    // depth-32 estimate and the depth-64 base census both land ~0.09.
-    // The forced-shallow run must publish the deep-ish number.
-    assert(dupShallow < 0.15,
-      s"forced initK=16 published over-stated dupFrac $dupShallow")
-    assert(math.abs(dupShallow - dupDeep) < 0.05,
-      s"shallow ($dupShallow) and deep ($dupDeep) dupFrac disagree")
-  }
-
   test("annex cascade: every band set yields identical (lcp, head) output") {
     // round-7 advice hardening: the staged cascade must be a pure
     // performance decision — FirstBand-only (everything ≥32 escalates

@@ -41,15 +41,17 @@ class FeaturesSpec extends SparkSpec {
     assert(math.abs(over - math.exp(-900.0 / (2 * math.pow(0.6 * 30, 2)))) < 1e-12)
   }
 
-  test("minMaxNorm: [0,1] range, degenerate → 0.5") {
-    val df = Seq(1.0, 2.0, 3.0, 4.0, 100.0).toDF("x")
-    val normed = Features.minMaxNorm(df, "x", "n").collect()
+  test("minMaxScale: [0,1] range, degenerate → 0.5") {
+    def scaled(df: org.apache.spark.sql.DataFrame) =
+      df.crossJoin(df.select(Features.clipBounds(col("x"), "b"): _*))
+        .select(col("x"), Features.minMaxScale(col("x"), col("b_lo"), col("b_hi")))
+    val normed = scaled(Seq(1.0, 2.0, 3.0, 4.0, 100.0).toDF("x")).collect()
       .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     assert(normed.values.forall(v => v >= 0.0 && v <= 1.0))
     assert(normed(1.0) == 0.0)
     // degenerate: all equal → 0.5 everywhere (rank.py:51-52)
     val const = Seq(7.0, 7.0, 7.0).toDF("x")
-    assert(Features.minMaxNorm(const, "x", "n").collect()
+    assert(scaled(const).collect()
       .forall(_.getDouble(1) == 0.5))
   }
 

@@ -141,6 +141,19 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(l)
   }
 
+  test("q40 computes every candidate-set scalar in one aggregate, cross-joined back once") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val plan = staticPlan("q40_recommend_top10")
+    val scalarAggs = plan.collect {
+      case a: BaseAggregateExec
+          if a.groupingExpressions.isEmpty && a.aggregateExpressions.exists(_.mode == Final) => a
+    }
+    val crossJoins = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(scalarAggs.size == 1, plan.toString.take(6000))
+    assert(crossJoins.size == 1, plan.toString.take(6000))
+  }
+
   test("item-item CF broadcasts item counts and keeps the cohort join narrow") {
     val plan = executedPlan("q157_itemcf_recommend")
     assert(plan.contains("BroadcastHashJoin"), plan.take(4000))

@@ -66,7 +66,7 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  test("column features: priceFit in [0,1], minMaxNorm in [0,1]∪{0.5}, blend monotone in sim") {
+  test("column features: priceFit in [0,1], minMaxScale in [0,1]∪{0.5}, blend monotone in sim") {
     val rnd = new scala.util.Random(42)
     val rows = Seq.tabulate(500) { i =>
       val price = if (i % 7 == 0) None else Some(rnd.nextDouble() * 1000 - 50)
@@ -79,7 +79,8 @@ class PropertySpec extends SparkSpec {
       Features.priceFit(col("price"), col("anchor"), col("std")).as("f")).collect()
     assert(fit.forall(r => r.getDouble(0) >= 0.0 && r.getDouble(0) <= 1.0))
 
-    val normed = Features.minMaxNorm(df, "x", "n").select("n").collect()
+    val normed = df.crossJoin(df.select(Features.clipBounds(col("x"), "b"): _*))
+      .select(Features.minMaxScale(col("x"), col("b_lo"), col("b_hi"))).collect()
     assert(normed.forall { r =>
       val v = r.getDouble(0); (v >= 0.0 && v <= 1.0) || v == 0.5
     })

@@ -53,11 +53,7 @@ class ReplSpec extends SparkSpec {
   }
 
   test("Ranker.recommend leaves the session's persisted RDDs as it found them") {
-    import org.apache.spark.sql.functions.col
-    val emb = sources.Tables.embeddings(spark, sf)
-      .select(col("vec_id").as("id"), vector.VectorOps.asDouble(col("embedding")).as("vec"))
-    val meta = queries.Helpers.metaAnalog(sources.Tables.documents(spark, sf))
-    val qv = emb.filter(col("id") === 0).select("vec").head().getSeq[Double](0).toArray
+    val (emb, meta, qv) = queries.RankQueries.inputs(spark, sf)
     // the scripted sessions above ran this same request: start from an
     // empty cache so the recommend cannot reuse their candidate set
     spark.catalog.clearCache()
@@ -65,5 +61,24 @@ class ReplSpec extends SparkSpec {
     val rows = rank.Ranker.recommend(spark, emb, meta, queries.RankQueries.QueryText, qv).collect()
     assert(rows.length == rank.Ranker.Config().finalK)
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("Ranker.recommend's ranked frame is collected with no Spark job") {
+    val (emb, meta, qv) = queries.RankQueries.inputs(spark, sf)
+    val ranked = rank.Ranker.recommend(spark, emb, meta, queries.RankQueries.QueryText, qv)
+    val sc = spark.sparkContext
+    val group = "recommend-output"
+    sc.setJobGroup(group, "collect the ranked frame")
+    try {
+      assert(ranked.collect().length == rank.Ranker.Config().finalK)
+      // one known job closes the group: the status store sees a group's
+      // jobs in submission order, so once this one is visible, so is
+      // any job the collect above launched
+      sc.parallelize(Seq(1), 1).count()
+    } finally sc.clearJobGroup()
+    def jobs = sc.statusTracker.getJobIdsForGroup(group)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(jobs.length == 1, s"jobs in the group: ${jobs.mkString(", ")}")
   }
 }
