@@ -32,7 +32,7 @@ object Retriever {
     val emb = embedder.embedTokens(TextOps.tokens(TextOps.cleanText(col("chunk"))))
     val qEmb = typedLit(embedder.embed(qToks).toSeq)
     chunks.filter(col("id") === focusId)
-      .withColumn("sim", round(VectorOps.cosine(emb, qEmb), 6))
+      .withColumn("sim", VectorOps.cosineRounded(emb, qEmb))
       .select(col("field"), col("chunk"), col("sim"))
       .orderBy(desc("sim"), asc("field"))
       .limit(k)

@@ -425,7 +425,7 @@ object AnalyticsQueries {
         emb.crossJoin(broadcast(nb))
           .filter(col("nb_label") =!= col("label"))
           .select(col("vec_id"), col("nb_id"),
-            round(graft.vector.VectorOps.cosine(col("vec"), col("nb_vec")), 6).as("sim"))
+            graft.vector.VectorOps.cosineRounded(col("vec"), col("nb_vec")).as("sim"))
           // max of (sim, -nb_id) = highest sim, ties to the LOWEST nb_id
           .groupBy("vec_id")
           .agg(max(struct(col("sim"), (-col("nb_id")).as("neg_nb"))).as("m"))

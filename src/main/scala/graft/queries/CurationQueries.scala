@@ -188,7 +188,7 @@ object CurationQueries {
           round(sqrt(aggregate(
             zip_with(col("vec"), col("dq"), (x, y) => (x - y) * (x - y)),
             lit(0.0), (acc, v) => acc + v)), 6).as("l2_err"),
-          round(VectorOps.cosine(col("vec"), col("dq")), 6).as("cos_dq"))
+          VectorOps.cosineRounded(col("vec"), col("dq")).as("cos_dq"))
         .orderBy("vec_id")
     }, Some(
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),

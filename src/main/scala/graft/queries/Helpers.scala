@@ -41,6 +41,17 @@ object Helpers {
   def dsumSql(e: String): String =
     s"round(CAST(sum(CAST(($e) AS DECIMAL(20,6))) AS DOUBLE), 4)"
 
+  /** Exact micro-unit column: value → round-half-up 6dp → Long micros.
+    * Sums of these are exact integers — moment computations over them
+    * are then plain double arithmetic over identical inputs in both
+    * engines.
+    */
+  def micros(c: Column): Column =
+    (c.cast(DecimalType(20, 6)) * 1000000).cast("long")
+
+  def microsSql(e: String): String =
+    s"CAST(CAST(($e) AS DECIMAL(20,6)) * 1000000 AS BIGINT)"
+
   /** Exact mean: decimal sum cast double, divided by count, rounded. */
   def davg(c: Column): Column =
     round(sum(c.cast(DecimalType(20, 6))).cast("double") / count(lit(1)), 6)

@@ -17,12 +17,6 @@ import org.apache.spark.sql.types.DecimalType
 object MiningQueries {
   import Helpers._
 
-  private def micros(c: Column): Column =
-    (c.cast(DecimalType(20, 6)) * 1000000).cast("long")
-
-  private def microsSql(e: String): String =
-    s"CAST(CAST(($e) AS DECIMAL(20,6)) * 1000000 AS BIGINT)"
-
   /** Kendall τ-b rank agreement per group from the joint (x, y) VALUE
     * CENSUS — no pair scan (see q217's Scaladoc for the derivation):
     * tie counts n1/n2/n3 come from the marginal censuses, the

@@ -136,7 +136,7 @@ object RetrievalQueries {
       val qv = emb.filter(col("vec_id") === 0).select(col("vec").as("qv"))
       val csr = emb.crossJoin(broadcast(qv))
         .select(col("vec_id").as("doc_id"),
-          round(graft.vector.VectorOps.cosine(col("vec"), col("qv")), 6).as("sim"))
+          graft.vector.VectorOps.cosineRounded(col("vec"), col("qv")).as("sim"))
         .orderBy(desc("sim"), asc("doc_id")).limit(50)
         .select(col("doc_id"),
           row_number().over(Window.orderBy(desc("sim"), asc("doc_id")))

@@ -14,17 +14,7 @@ import org.apache.spark.sql.types.DecimalType
 object StatQueries {
   import Helpers._
 
-  /** Exact micro-unit column: value → round-half-up 6dp → Long micros.
-    * Sums of these are exact integers — the moment computations below are
-    * then plain double arithmetic over identical inputs in both engines.
-    */
   private val NanosPerDayQ172 = 86400L * 1000000000L
-
-  private def micros(c: Column): Column =
-    (c.cast(DecimalType(20, 6)) * 1000000).cast("long")
-
-  private def microsSql(e: String): String =
-    s"CAST(CAST(($e) AS DECIMAL(20,6)) * 1000000 AS BIGINT)"
 
   val all: Seq[Q] = Seq(
 

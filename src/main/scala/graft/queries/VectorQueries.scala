@@ -3,6 +3,7 @@ package graft.queries
 import graft.rank.Features
 import graft.sources.Tables
 import graft.vector.VectorOps
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -13,6 +14,44 @@ import org.apache.spark.sql.types.DecimalType
   */
 object VectorQueries {
   import Helpers._
+
+  /** PQ subspace width: the 64-dim vector splits into 4 subspaces. */
+  private val PqW = 16
+
+  /** The embedding table as (vec_id, v) plus every PQ subspace distance
+    * `d{m}_{c}` (L2² of subspace m to codebook centroid c), and the
+    * codebook itself: the first 4 vectors, configuration-sized,
+    * collected once and inlined as literals.
+    */
+  private def pqDistances(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
+    val emb = Tables.embeddings(s, dir)
+      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
+    val seeds = emb.filter(col("vec_id") < 4).orderBy("vec_id").collect()
+      .map(_.getSeq[Double](1).toArray)
+    def d2(m: Int, c: Int) = {
+      val cb = seeds(c).slice(m * PqW, m * PqW + PqW).toSeq
+      aggregate(
+        zip_with(slice(col("v"), m * PqW + 1, PqW), typedLit(cb),
+          (x, y) => (x - y) * (x - y)),
+        lit(0.0), (a, x) => a + x)
+    }
+    val withD = (0 until 4).foldLeft(emb) { (df, m) =>
+      (0 until 4).foldLeft(df) { (d, c) =>
+        d.withColumn(s"d${m}_$c", d2(m, c))
+      }
+    }
+    (withD, seeds)
+  }
+
+  /** Argmin over 4 distances, ties to the lowest index. */
+  private def argmin4(d: Int => Column): Column =
+    when(d(0) <= d(1) && d(0) <= d(2) && d(0) <= d(3), 0L)
+      .when(d(1) <= d(2) && d(1) <= d(3), 1L)
+      .when(d(2) <= d(3), 2L)
+      .otherwise(3L)
+
+  /** The PQ code of subspace m: its nearest centroid. */
+  private def pqCode(m: Int): Column = argmin4(c => col(s"d${m}_$c"))
 
   val all: Seq[Q] = Seq(
 
@@ -26,7 +65,7 @@ object VectorQueries {
         .select(col("vec").as("qv"))
       emb.crossJoin(broadcast(q))
         .select(col("vec_id"),
-          round(VectorOps.cosine(col("vec"), col("qv")), 6).as("sim"))
+          VectorOps.cosineRounded(col("vec"), col("qv")).as("sim"))
         .orderBy(desc("sim"), asc("vec_id"))
         .limit(20)
     }, Some(
@@ -147,12 +186,12 @@ object VectorQueries {
       val scored = emb.crossJoin(broadcast(q)).persist()
       val wRank = Window.orderBy(desc("sim"), asc("vec_id"))
       val exact10 = scored
-        .select(col("vec_id"), round(VectorOps.cosine(col("vec"), col("qv")), 6).as("sim"))
+        .select(col("vec_id"), VectorOps.cosineRounded(col("vec"), col("qv")).as("sim"))
         .orderBy(desc("sim"), asc("vec_id")).limit(10)
         .withColumn("epos", row_number().over(wRank))
         .select(col("vec_id"), (lit(11L) - col("epos")).as("rel"))
       val quant10 = scored
-        .select(col("vec_id"), round(VectorOps.cosine(col("dq"), col("dqv")), 6).as("sim"))
+        .select(col("vec_id"), VectorOps.cosineRounded(col("dq"), col("dqv")).as("sim"))
         .orderBy(desc("sim"), asc("vec_id")).limit(10)
         .withColumn("pos", row_number().over(wRank).cast("long"))
       val graded = quant10.join(broadcast(exact10), Seq("vec_id"), "left")
@@ -209,37 +248,14 @@ object VectorQueries {
     // broadcast k-means codebook, cf. q26's Lloyd loop). Map-only scan;
     // the oracle replays every distance from the same literals.
     Q("q122_pq_assign", { (s, dir) =>
-      val w = 16
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      val seeds = emb.filter(col("vec_id") < 4).orderBy("vec_id").collect()
-        .map(_.getSeq[Double](1).toArray)
-      def d2(m: Int, c: Int) = {
-        val cb = seeds(c).slice(m * w, m * w + w).toSeq
-        aggregate(
-          zip_with(slice(col("v"), m * w + 1, w), typedLit(cb),
-            (x, y) => (x - y) * (x - y)),
-          lit(0.0), (a, x) => a + x)
-      }
-      val withD = (0 until 4).foldLeft(emb) { (df, m) =>
-        (0 until 4).foldLeft(df) { (d, c) =>
-          d.withColumn(s"d${m}_$c", d2(m, c))
-        }
-      }
-      def code(m: Int) = {
-        def d(c: Int) = col(s"d${m}_$c")
-        when(d(0) <= d(1) && d(0) <= d(2) && d(0) <= d(3), 0L)
-          .when(d(1) <= d(2) && d(1) <= d(3), 1L)
-          .when(d(2) <= d(3), 2L)
-          .otherwise(3L)
-      }
+      val (withD, _) = pqDistances(s, dir)
       val err = (0 until 4)
         .map(m => least(col(s"d${m}_0"), col(s"d${m}_1"),
           col(s"d${m}_2"), col(s"d${m}_3")))
         .reduce(_ + _)
       withD.select(col("vec_id"),
-          code(0).as("c0"), code(1).as("c1"),
-          code(2).as("c2"), code(3).as("c3"),
+          pqCode(0).as("c0"), pqCode(1).as("c1"),
+          pqCode(2).as("c2"), pqCode(3).as("c3"),
           round(err, 6).as("recon_err"))
         .orderBy("vec_id")
     }, Some {
@@ -281,24 +297,13 @@ object VectorQueries {
     // of the 4 subspace distances, so BOTH engines reuse the identical
     // d{m}_{c} partials for cell assignment, codes, and rerank.
     Q("q160_ivfpq_search", { (s, dir) =>
-      val w = 16
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      val seeds = emb.filter(col("vec_id") < 4).orderBy("vec_id").collect()
-        .map(_.getSeq[Double](1).toArray)
-      def d2(m: Int, c: Int) = {
-        val cb = seeds(c).slice(m * w, m * w + w).toSeq
-        aggregate(
-          zip_with(slice(col("v"), m * w + 1, w), typedLit(cb),
-            (x, y) => (x - y) * (x - y)),
-          lit(0.0), (a, x) => a + x)
-      }
+      val (withD, seeds) = pqDistances(s, dir)
       // query = seed 0; ADC lookup table replayed with the SAME left
       // fold the SQL's list_sum uses, so the literals are bit-identical
       def ltVal(m: Int, c: Int): Double = {
         var d = 0.0
-        var i = m * w
-        while (i < m * w + w) {
+        var i = m * PqW
+        while (i < m * PqW + PqW) {
           val x = seeds(0)(i) - seeds(c)(i); d += x * x; i += 1
         }
         d
@@ -306,26 +311,11 @@ object VectorQueries {
       val qCellDist = (0 until 4).map(c => (0 until 4).map(m => ltVal(m, c)).sum)
       val probeCells = qCellDist.zipWithIndex.sortBy { case (d, c) => (d, c) }
         .take(2).map(_._2)
-      val withD = (0 until 4).foldLeft(emb) { (df, m) =>
-        (0 until 4).foldLeft(df) { (d, c) =>
-          d.withColumn(s"d${m}_$c", d2(m, c))
-        }
-      }
       def full(c: Int) = col(s"d0_$c") + col(s"d1_$c") + col(s"d2_$c") + col(s"d3_$c")
-      val cell = when(full(0) <= full(1) && full(0) <= full(2) && full(0) <= full(3), 0L)
-        .when(full(1) <= full(2) && full(1) <= full(3), 1L)
-        .when(full(2) <= full(3), 2L)
-        .otherwise(3L)
-      def code(m: Int) = {
-        def d(c: Int) = col(s"d${m}_$c")
-        when(d(0) <= d(1) && d(0) <= d(2) && d(0) <= d(3), 0L)
-          .when(d(1) <= d(2) && d(1) <= d(3), 1L)
-          .when(d(2) <= d(3), 2L)
-          .otherwise(3L)
-      }
+      val cell = argmin4(full)
       val adc = (0 until 4).map(m =>
           element_at(typedLit((0 until 4).map(c => ltVal(m, c))),
-            (code(m) + 1).cast("int")))
+            (pqCode(m) + 1).cast("int")))
         .reduce(_ + _)
       withD.withColumn("cell", cell)
         .filter(col("cell").isin(probeCells.map(_.toLong): _*))
@@ -412,13 +402,13 @@ object VectorQueries {
       val wRank = Window.partitionBy("qid").orderBy(desc("sim"), asc("vec_id"))
       val rel = scored
         .select(col("qid"), col("vec_id"),
-          round(VectorOps.cosine(col("vec"), col("qv")), 6).as("sim"))
+          VectorOps.cosineRounded(col("vec"), col("qv")).as("sim"))
         .withColumn("epos", row_number().over(wRank))
         .filter(col("epos") <= 10)
         .select(col("qid"), col("vec_id"), lit(1L).as("hit"))
       val cand = scored
         .select(col("qid"), col("vec_id"),
-          round(VectorOps.cosine(col("dq"), col("dqv")), 6).as("sim"))
+          VectorOps.cosineRounded(col("dq"), col("dqv")).as("sim"))
         .withColumn("pos", row_number().over(wRank).cast("long"))
         .filter(col("pos") <= 10)
       val wRun = Window.partitionBy("qid").orderBy("pos")

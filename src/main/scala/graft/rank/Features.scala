@@ -1,6 +1,7 @@
 package graft.rank
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 
 /** Ranking feature functions — pure column expressions mirroring the
@@ -51,19 +52,22 @@ object Features {
   /** Percentile-clipped min-max scaling (rank.py:44-54): clip `x` to
     * [lo, hi], scale to [0,1] with +1e-9 on the denominator; degenerate
     * spread → constant 0.5. The caller computes lo/hi (the p1/p99 of the
-    * whole frame) in its own scalar aggregate, so one aggregate serves
-    * every scaled column of a plan.
+    * whole frame) once, in its own scalar aggregate or window, for every
+    * scaled column of a plan.
     */
   def minMaxScale(x: Column, lo: Column, hi: Column): Column =
     when(isClose(hi, lo), lit(0.5))
       .otherwise((least(greatest(x, lo), hi) - lo) / (hi - lo + lit(Epsilon)))
 
   /** The [p1, p99] bounds [[minMaxScale]] clips to, as two aggregate
-    * columns `<name>_lo`/`<name>_hi` for the caller's scalar aggregate.
+    * columns `<name>_lo`/`<name>_hi` for the caller's scalar aggregate —
+    * or, given a window, as window aggregates over it.
     */
-  def clipBounds(x: Column, name: String): Seq[Column] =
-    Seq(percentile(x, lit(0.01)).as(s"${name}_lo"),
-      percentile(x, lit(0.99)).as(s"${name}_hi"))
+  def clipBounds(x: Column, name: String, over: Option[WindowSpec] = None): Seq[Column] =
+    Seq(0.01 -> "lo", 0.99 -> "hi").map { case (p, end) =>
+      val b = percentile(x, lit(p))
+      over.fold(b)(b.over).as(s"${name}_$end")
+    }
 
   /** Default blend weights (rank.py:259-266). */
   val Alpha = 0.4 // cosine similarity

@@ -192,8 +192,7 @@ object Ivf {
     }
 
   def hardNegatives(emb: DataFrame, idCol: String, labelCol: String,
-                    vecCol: String, k: Int = 64, nprobe: Int = 8,
-                    roundScale: Int = 6): DataFrame = {
+                    vecCol: String, k: Int = 64, nprobe: Int = 8): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val base = emb.select(col(idCol).cast("long").as("id"),
@@ -268,8 +267,7 @@ object Ivf {
       queriesSalted.join(indexedSalted, Seq("cell", "salt"))
         .filter(col("nb_label") =!= col("label"))
         .select(col("id"), col("nb_id"),
-          round(graft.vector.VectorOps.cosine(col("vec"), col("nb_vec")),
-            roundScale).as("sim"))
+          graft.vector.VectorOps.cosineRounded(col("vec"), col("nb_vec")).as("sim"))
         // a query probing cells that share its own indexed cell meets
         // itself only at equal label — already excluded by the filter
         .groupBy("id")
@@ -285,8 +283,7 @@ object Ivf {
 
   /** ANN top-k: probe the `nprobe` nearest cells, exact cosine rerank. */
   def topK(vecs: DataFrame, idCol: String, vecCol: String, model: Model,
-           query: Array[Double], k: Int, nprobe: Int = 4,
-           roundScale: Int = 6): DataFrame = {
+           query: Array[Double], k: Int, nprobe: Int = 4): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val probed = model.nearestCells(query.toSeq, nprobe).toSet
@@ -301,8 +298,7 @@ object Ivf {
     // base scan shuffle-free; rerank on the codegen CosineSim path
     base.join(broadcast(candIds), "id")
       .select(col("id"),
-        round(graft.vector.VectorOps.cosine(col("vec"), typedLit(query.toSeq)),
-          roundScale).as("sim"))
+        graft.vector.VectorOps.cosineRounded(col("vec"), typedLit(query.toSeq)).as("sim"))
       .orderBy(desc("sim"), asc("id"))
       .limit(k)
   }

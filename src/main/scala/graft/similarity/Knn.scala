@@ -21,11 +21,10 @@ object Knn {
 
   /** (id, sim) top-k by cosine against a literal query vector. */
   def bruteForceTopK(vecs: DataFrame, idCol: String, vecCol: String,
-                     query: Array[Double], k: Int,
-                     roundScale: Int = 6): DataFrame = {
+                     query: Array[Double], k: Int): DataFrame = {
     val q = typedLit(query)
     vecs.select(col(idCol).as("id"),
-        round(VectorOps.cosine(col(vecCol), q), roundScale).as("sim"))
+        VectorOps.cosineRounded(col(vecCol), q).as("sim"))
       .orderBy(desc("sim"), asc("id"))
       .limit(k)
   }
@@ -36,8 +35,7 @@ object Knn {
     */
   def annTopK(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
               query: Array[Double], k: Int,
-              tables: Int = 8, bitsPerTable: Int = 4,
-              roundScale: Int = 6): DataFrame = {
+              tables: Int = 8, bitsPerTable: Int = 4): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val pl = Dedup.radePlanes(dim, tables, bitsPerTable)
@@ -56,7 +54,7 @@ object Knn {
     // expression (VectorOps.cosine), not an interpreted UDF
     base.join(broadcast(candIds), "id")
       .select(col("id"),
-        round(VectorOps.cosine(col("vec"), typedLit(query.toSeq)), roundScale).as("sim"))
+        VectorOps.cosineRounded(col("vec"), typedLit(query.toSeq)).as("sim"))
       .orderBy(desc("sim"), asc("id"))
       .limit(k)
   }

@@ -271,8 +271,7 @@ object EventsStream {
     // to the oracle's sum(CAST(value AS DECIMAL(20,6))).
     val typed = events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(20, 6)) * 1000000)
-          .cast("long").as("value_micros"))
+        graft.queries.Helpers.micros(col("value")).as("value_micros"))
       .as[Event]
 
     def fn(userId: Long, it: Iterator[Event],

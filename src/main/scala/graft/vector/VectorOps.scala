@@ -36,6 +36,11 @@ object VectorOps {
         org.apache.spark.sql.GraftSqlBridge.expression(a),
         org.apache.spark.sql.GraftSqlBridge.expression(b)))
 
+  /** Cosine rounded to 6 dp: the similarity every ranking and retrieval
+    * path compares, and the scale every oracle rounds it to.
+    */
+  def cosineRounded(a: Column, b: Column): Column = round(cosine(a, b), 6)
+
   /** Higher-order-function formulation, kept as a cross-check oracle for
     * the native expression (VectorOpsSpec asserts bit-equality).
     */

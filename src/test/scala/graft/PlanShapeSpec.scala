@@ -141,17 +141,26 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(l)
   }
 
-  test("q40 computes every candidate-set scalar in one aggregate, cross-joined back once") {
+  test("q40 computes every candidate-set scalar in one unpartitioned window, uncached") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
     val plan = staticPlan("q40_recommend_top10")
+    val text = plan.toString.take(6000)
+    assert(plan.collect { case c: InMemoryTableScanExec => c }.isEmpty, text)
+    assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, text)
     val scalarAggs = plan.collect {
       case a: BaseAggregateExec
           if a.groupingExpressions.isEmpty && a.aggregateExpressions.exists(_.mode == Final) => a
     }
-    val crossJoins = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
-    assert(scalarAggs.size == 1, plan.toString.take(6000))
-    assert(crossJoins.size == 1, plan.toString.take(6000))
+    assert(scalarAggs.isEmpty, text)
+    val candidateWindows = plan.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty && w.orderSpec.isEmpty => w
+    }
+    assert(candidateWindows.size == 1, text)
+    // no join hint: meta is never forced into a broadcast
+    assert(factBroadcasts("q40_recommend_top10").isEmpty, text)
   }
 
   test("item-item CF broadcasts item counts and keeps the cohort join narrow") {

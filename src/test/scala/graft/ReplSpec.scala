@@ -6,8 +6,8 @@ package graft
   * non-digit, >Int.MaxValue digit run), the RAG answer path, and exit.
   * The transcript is asserted structurally (the ranked titles are
   * data-derived) and for determinism (two runs, identical bytes). The
-  * session is never cleared, so each recommend must release the
-  * candidate set it persists.
+  * session is never cleared, so each recommend must leave no cached
+  * frame behind.
   */
 class ReplSpec extends SparkSpec {
 
@@ -80,5 +80,23 @@ class ReplSpec extends SparkSpec {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
     assert(jobs.length == 1, s"jobs in the group: ${jobs.mkString(", ")}")
+  }
+
+  test("Ranker.scoreCandidates collects the scored candidates in at most 2 Spark jobs") {
+    val (emb, meta, qv) = queries.RankQueries.inputs(spark, sf)
+    val sc = spark.sparkContext
+    val group = "score-candidates"
+    sc.setJobGroup(group, "collect the scored candidates")
+    try {
+      val rows = rank.Ranker.scoreCandidates(
+        emb, meta, queries.RankQueries.QueryText, qv).collect()
+      assert(rows.nonEmpty && rows.length <= rank.Ranker.Config().topK)
+      // one known job closes the group, as in the test above
+      sc.parallelize(Seq(1), 1).count()
+    } finally sc.clearJobGroup()
+    def jobs = sc.statusTracker.getJobIdsForGroup(group)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(jobs.length - 1 <= 2, s"jobs in the group: ${jobs.mkString(", ")}")
   }
 }
