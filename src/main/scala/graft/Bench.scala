@@ -48,9 +48,8 @@ object Bench {
     // shared-JVM pass occasionally eats a GC/JIT storm — but hour-scale
     // scale probes (sf10 sweeps) can set 1 to spend the wall budget on
     // more configs instead of a second pass; the artifact records it
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    require(passes >= 1 && passes <= 4,
-      s"SPARK_GRAFT_PASSES must be 1..4, got $passes")
+    val passes = Harness.positiveInt("SPARK_GRAFT_PASSES",
+      sys.env.getOrElse("SPARK_GRAFT_PASSES", "2"), max = 4)
     val canary0 = BoxCanary.sample()
     val runTicks0 = cpuTicks()
     val ps = Seq.fill(passes)(onePass())

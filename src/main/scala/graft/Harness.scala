@@ -12,15 +12,14 @@ object Harness {
   /** The shared launch settings, read once from the environment. */
   final case class Settings(
       master: String,
-      parts: String,
+      parts: Int,
       sfDir: String,
       only: Option[Set[String]],
       action: String,
-      conf: Seq[(String, String)],
-      confRaw: Option[String])
+      conf: Seq[(String, String)])
 
   private[graft] def settings(env: Map[String, String]): Settings = {
-    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = positiveInt("SPARK_GRAFT_CPUS", env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val action = env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "count")
     require(action == "count" || action == "checksum",
       s"SPARK_GRAFT_BENCH_ACTION must be count|checksum, got '$action'")
@@ -35,24 +34,23 @@ object Harness {
     }
     // the three single-key aliases first, then the generic passthrough
     // (semicolon-separated key=value pairs, e.g.
-    // SPARK_GRAFT_CONF=spark.graft.hardNegatives.exactMax=0), which
-    // may override them; every spark.graft.* entry is checked here, so
-    // a bad value fails before any query runs
-    val confRaw = env.get("SPARK_GRAFT_CONF")
+    // SPARK_GRAFT_CONF=spark.graft.preEpochGuard=fail), which may
+    // override them; every spark.graft.* entry is checked here, so a
+    // bad value fails before any query runs
     val conf = Seq(
       env.get("SPARK_GRAFT_STATE_STORE").map(GraftConf.stateStore.name -> _),
       env.get("SPARK_GRAFT_MATERIALIZE").map(GraftConf.materialize.name -> _),
       env.get("SPARK_GRAFT_CHECKPOINT_DIR").map(GraftConf.checkpointDir.name -> _),
-    ).flatten ++ confRaw.toSeq.flatMap(parseConf)
+    ).flatten ++ env.get("SPARK_GRAFT_CONF").toSeq.flatMap(parseConf)
     conf.foreach { case (k, v) => GraftConf.check(k, v) }
     Settings(
       master = env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       // partition count defaults to the thread count but can be raised
       // on its own for scale probes: per-partition volume, not thread
       // count, is what leaves the memory regime at ×100 data
-      parts = env.getOrElse("SPARK_GRAFT_PARTS", cpus),
+      parts = env.get("SPARK_GRAFT_PARTS").fold(cpus)(positiveInt("SPARK_GRAFT_PARTS", _)),
       sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-      only = only, action = action, conf = conf, confRaw = confRaw)
+      only = only, action = action, conf = conf)
   }
 
   lazy val env: Settings = settings(sys.env)
@@ -90,6 +88,16 @@ object Harness {
     case "checksum" => df.agg(bit_xor(xxhash64(struct(col("*"))))).head(); ()
   }
 
+  /** A launch count in [1, max], failing with the variable named — a bare
+    * `.toInt` or a raw pass-through surfaces a typo as a Spark master-URL
+    * or SQLConf error that names neither the variable nor its value. */
+  private[graft] def positiveInt(name: String, raw: String, max: Int = Int.MaxValue): Int = {
+    val v = raw.trim.toIntOption
+    val want = if (max == Int.MaxValue) "a positive integer" else s"an integer in 1..$max"
+    require(v.exists(n => n >= 1 && n <= max), s"$name must be $want, got '$raw'")
+    v.get
+  }
+
   /** Parse the SPARK_GRAFT_CONF passthrough — semicolon-separated
     * key=value pairs — failing LOUDLY on a pair without '=' (an inline
     * destructure dies in an anonymous MatchError, which is a miserable
@@ -105,9 +113,8 @@ object Harness {
   /** Locale-independent fixed-point formatting: the f interpolator uses
     * the JVM default locale, which under e.g. de_DE emits a decimal
     * comma — invalid JSON. */
-  private[graft] def num(v: Double, digits: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-  private[graft] def num4(v: Double): String = num(v, 4)
+  private[graft] def num4(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
 
   /** Minimal JSON string-content escaper for every artifact that embeds
     * free text (conf values, oracle SQL): backslash and quote escaped,

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *    LSH banding (one mega-bucket), set-similarity prefix filtering,
   *    and connected-components dedup.
   *
-  * With the optional third argument `orders`, a third distortion is
-  * added for the relational side:
+  * The optional flags `orders` and `parts` add distortions for the
+  * relational side:
   *
   *  - orders: 30% of rows (o_orderkey % 10 < 3) are rerouted to the
   *    modal customer — the hot-entity case for customer-keyed joins,
@@ -36,10 +36,14 @@ import org.apache.spark.sql.functions._
   */
 object SkewGen {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: SkewGen <inSfDir> <outDir> [orders]")
+    val usage = "usage: SkewGen <inSfDir> <outDir> [orders] [parts]"
+    require(args.length >= 2, usage)
     val Array(in, out) = args.take(2)
-    val skewOrders = args.drop(2).contains("orders")
-    val skewParts = args.drop(2).contains("parts")
+    val flags = args.drop(2).toSet
+    val unknown = flags -- Set("orders", "parts")
+    require(unknown.isEmpty, s"SkewGen: unknown flag(s) ${unknown.mkString(", ")}; $usage")
+    val skewOrders = flags.contains("orders")
+    val skewParts = flags.contains("parts")
     val spark = Harness.session("graft-skewgen")
 
     val events = spark.read.parquet(s"$in/events.parquet")

@@ -102,6 +102,22 @@ import org.apache.spark.sql.functions._
   */
 object SuffixArray {
 
+  /** Range-route `df` by `route`, sort each partition by `route` then
+    * `tieBreak`, and tag each row with its partition id (`pid`) — the
+    * input of every per-partition streaming pass here and in q235. The
+    * partition count is EXPLICIT: AQE's partition coalescing treats a
+    * bare repartitionByRange exchange as fair game and at small data
+    * collapses the sort into one or two partitions, which turns the
+    * per-partition pass into single-task stragglers. A user-specified
+    * count is exempt from coalescing, keeping the parallelism pinned to
+    * the configured shuffle width at every data size.
+    */
+  private[graft] def rangeSorted(df: DataFrame, route: Seq[Column],
+                                 tieBreak: Seq[Column] = Nil): DataFrame =
+    df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions, route: _*)
+      .sortWithinPartitions(route ++ tieBreak: _*)
+      .withColumn("pid", spark_partition_id())
+
   /** Range-sort `df` by `keys` and annotate each row, within its
     * physical partition, with everything the position-rank stitch needs:
     * `chg`/`loc` (full-key group start flag and start position),
@@ -116,15 +132,6 @@ object SuffixArray {
     * census — it can add no further exchange.
     */
   private[graft] def sortAndFlag(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val kc = keys.map(col)
-    // EXPLICIT partition counts: AQE's partition coalescing treats a
-    // bare repartitionByRange exchange as fair game and at small data
-    // collapses the sort into one or two partitions — which turns the
-    // per-partition stitch below into single-task stragglers (the exact
-    // pathology this design exists to avoid). A user-specified count is
-    // exempt from coalescing, keeping the round's parallelism pinned to
-    // the configured shuffle width at every data size.
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
     // ONE exchange and ONE local sort per round: range-route by the
     // keys (equal keys land in one partition — the partitioner is a
     // pure function of the key), then sort each partition by the keys
@@ -149,11 +156,7 @@ object SuffixArray {
     // The stitch closure leaves whole-stage codegen for exactly one
     // narrow operator — the priced alternative was an extra corpuswide
     // exchange, and the windows it replaces were never codegen either.
-    val tieC = Seq(col("doc_id"), col("off"))
-    val sorted = df
-      .repartitionByRange(n, kc: _*)
-      .sortWithinPartitions(kc ++ tieC: _*)
-      .withColumn("pid", spark_partition_id())
+    val sorted = rangeSorted(df, keys.map(col), Seq(col("doc_id"), col("off")))
     val refine = keys.size > 1
     val inSchema = sorted.schema
     val docIdIx = inSchema.fieldIndex("doc_id")
@@ -613,9 +616,8 @@ object SuffixArray {
   private[graft] val HeadPreview = 24
 
   /** SA entries routed into SA order, SKINNY (doc_id, off, r): range
-    * partition by (r, doc_id, off) with the same explicit-count pinning
-    * as [[sortAndFlag]] (AQE must not collapse the adjacency pass into
-    * one task), locally sorted. Skinny matters: the range exchange's
+    * partition by (r, doc_id, off) through [[rangeSorted]], locally
+    * sorted. Skinny matters: the range exchange's
     * sampling pass re-executes its child, which here is just the index
     * checkpoint scan (nothing to materialize), and the one routing
     * exchange moves 24 B/suffix, not band-width rows. (The former
@@ -623,12 +625,8 @@ object SuffixArray {
     * per-partition — is gone: [[pairScores]] now streams each
     * partition directly, same as the rank stitch.)
     */
-  private[graft] def saSorted(sa: DataFrame): DataFrame = {
-    val n = sa.sparkSession.sessionState.conf.numShufflePartitions
-    sa.repartitionByRange(n, col("r"), col("doc_id"), col("off"))
-      .sortWithinPartitions("r", "doc_id", "off")
-      .withColumn("pid", spark_partition_id())
-  }
+  private[graft] def saSorted(sa: DataFrame): DataFrame =
+    rangeSorted(sa, Seq(col("r"), col("doc_id"), col("off")))
 
   /** Adjacent SKINNY pairs in SA order — (r_a, doc_a, off_a, doc_b,
     * off_b), no text. Adjacency without a corpus-wide window OR a

@@ -1,9 +1,10 @@
 package graft.queries
 
+import graft.similarity.Ivf
 import graft.sketch.KmvAgg
 import graft.sources.Tables
 import graft.text.{StableHash, StableHash64, TextOps}
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -44,6 +45,45 @@ object AnalyticsQueries {
        |    ((CAST(h AS DOUBLE) + 9.223372036854775808e18) / 1.8446744073709551616e19),
        |    4) AS est_distinct
        |FROM r WHERE rn = least(32, n) ORDER BY event_type""".stripMargin
+  }
+
+  /** q69's body. Exact n² baseline with the codegen'd cosine expression
+    * and a broadcast of the (small) vector table; the top-1 reduces via
+    * max(struct) with map-side partial aggregation, so the n² scored
+    * pairs never cross the shuffle (vs a row_number window, which ships
+    * them all). Above `exactMax` vectors (the registry passes
+    * Ivf.ExactMax; tests pass 0 to reach the ANN branch on a small
+    * corpus) it delegates to the IVF cell-join ANN path at the
+    * size-aware nprobe and its matching cell count, mirroring
+    * connectedComponents' 50M-pair auto-delegation.
+    */
+  private[graft] def hardNegatives(s: SparkSession, dir: String, exactMax: Long): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("label"),
+        graft.vector.VectorOps.asDouble(col("embedding")).as("vec"))
+    val n = Tables.embeddings(s, dir).count()
+    val top = if (n > exactMax) {
+      val nprobe = Ivf.defaultNprobe(n)
+      org.slf4j.LoggerFactory.getLogger("graft.q69").warn(
+        s"q69 delegating $n vectors to IVF ANN with nprobe=$nprobe " +
+          "(measured sf1 trade in BASELINE.md round-12 recall addendum: " +
+          "16 buys recall@1 0.534->0.700 over 8 for ~20% ANN wall)")
+      Ivf.hardNegatives(emb, "vec_id", "label", "vec",
+        k = Ivf.cellCount(n, nprobe), nprobe = nprobe)
+    } else {
+      val nb = emb.select(col("vec_id").as("nb_id"),
+        col("label").as("nb_label"), col("vec").as("nb_vec"))
+      emb.crossJoin(broadcast(nb))
+        .filter(col("nb_label") =!= col("label"))
+        .select(col("vec_id"), col("nb_id"),
+          graft.vector.VectorOps.cosineRounded(col("vec"), col("nb_vec")).as("sim"))
+        // max of (sim, -nb_id) = highest sim, ties to the LOWEST nb_id
+        .groupBy("vec_id")
+        .agg(max(struct(col("sim"), (-col("nb_id")).as("neg_nb"))).as("m"))
+        .select(col("vec_id"), (-col("m.neg_nb")).as("hard_negative"),
+          col("m.sim").as("sim"))
+    }
+    top.orderBy("vec_id")
   }
 
   private val NanosPerDay = 86400L * 1000000000L
@@ -376,64 +416,7 @@ object AnalyticsQueries {
 
     // Hard-negative mining: for every embedding, the most-similar vector
     // with a DIFFERENT label — the contrastive-training pair generator.
-    // Exact n² baseline with the codegen'd cosine expression and a
-    // broadcast of the (small) vector table; the top-1 reduces via
-    // max(struct) with map-side partial aggregation, so the n² scored
-    // pairs never cross the shuffle (vs a row_number window, which ships
-    // them all). Above `spark.graft.hardNegatives.exactMax` vectors
-    // (default 5000 — the measured exact/ANN checksum crossover sits at
-    // ≈4.4k vectors, see BASELINE.md round-10 addendum) the query
-    // auto-delegates to the IVF cell-join ANN path (Ivf.hardNegatives),
-    // mirroring connectedComponents' 50M-pair auto-delegation: exact
-    // stays the small-corpus default, so the sf0.01 oracle entry and
-    // the sf0.1 committed bench plan are byte-identical.
-    Q("q69_hard_negatives", (s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label"),
-          graft.vector.VectorOps.asDouble(col("embedding")).as("vec"))
-      val exactMax = graft.GraftConf.hardNegatives.exactMax(s)
-      val n = Tables.embeddings(s, dir).count()
-      val top = if (n > exactMax) {
-        // cell count balancing Lloyd training (3·n·k) against the probe
-        // join (nprobe·n²/k): k = √(n·nprobe/3), clamped so tiny corpora
-        // keep enough cells and the trainer's driver-side seed sample
-        // (k·50 rows) stays bounded. A fixed k would quietly re-enter
-        // the n²/k regime as the corpus grows (measured: sf3 ANN ran
-        // 5.6× sf1 with k floored at 64). nprobe is the recall/latency
-        // knob (measured tuning table in BASELINE.md round-11 recall
-        // addendum); k grows with √nprobe so raising it also refines
-        // the cells rather than only widening the probe. The default is
-        // size-aware (Ivf.defaultNprobe: 8 ≤5k vectors, 16 above — the
-        // measured sf1 trade on the balanced quantizer is recall@1
-        // 0.534 → 0.700 for ~20% ANN wall, round-12 recall addendum),
-        // and the delegation logs which value won so an operator learns
-        // the knob exists without reading this comment.
-        val nprobe = graft.GraftConf.hardNegatives.nprobe(s)
-          .getOrElse(graft.similarity.Ivf.defaultNprobe(n))
-        org.slf4j.LoggerFactory.getLogger("graft.q69").warn(
-          s"q69 delegating $n vectors to IVF ANN with nprobe=$nprobe " +
-            s"(knob: ${graft.GraftConf.hardNegatives.nprobe.name}; measured sf1 trade " +
-            "in BASELINE.md round-12 recall addendum: 16 buys recall@1 " +
-            "0.534->0.700 over 8 for ~20% ANN wall)")
-        val k = math.max(64L, math.min(4096L,
-          math.round(math.sqrt(n.toDouble * nprobe / 3)))).toInt
-        graft.similarity.Ivf.hardNegatives(emb, "vec_id", "label", "vec",
-          k = k, nprobe = nprobe)
-      } else {
-        val nb = emb.select(col("vec_id").as("nb_id"),
-          col("label").as("nb_label"), col("vec").as("nb_vec"))
-        emb.crossJoin(broadcast(nb))
-          .filter(col("nb_label") =!= col("label"))
-          .select(col("vec_id"), col("nb_id"),
-            graft.vector.VectorOps.cosineRounded(col("vec"), col("nb_vec")).as("sim"))
-          // max of (sim, -nb_id) = highest sim, ties to the LOWEST nb_id
-          .groupBy("vec_id")
-          .agg(max(struct(col("sim"), (-col("nb_id")).as("neg_nb"))).as("m"))
-          .select(col("vec_id"), (-col("m.neg_nb")).as("hard_negative"),
-            col("m.sim").as("sim"))
-      }
-      top.orderBy("vec_id")
-    }, Some(
+    Q("q69_hard_negatives", (s, dir) => hardNegatives(s, dir, Ivf.ExactMax), Some(
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec
          |           FROM embeddings),
          |p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nb_id,

@@ -691,9 +691,6 @@ object DedupQueries {
         .filter(col("lcp") >= minLcp)
         .select(col("r_a"), col("doc_a"), col("off_a"),
           col("doc_b"), col("off_b"), col("lcp"))
-      // same explicit-count pinning as the SA build: AQE must not
-      // coalesce the range sort below the per-partition run flagging
-      val nParts = s.sessionState.conf.numShufflePartitions
       // run flags as ONE streaming pass per range partition (the SA
       // stitch pattern since r14): a pair extends the current run iff
       // its LEFT row is the previous qualifying pair's RIGHT row —
@@ -702,10 +699,8 @@ object DedupQueries {
       // spark_partition_id so lag/sum windows could run per-partition;
       // the scan computes the same running values with no second
       // exchange and no WindowExec.
-      val routed = qual
-        .repartitionByRange(nParts, col("r_a"), col("doc_a"), col("off_a"))
-        .sortWithinPartitions("r_a", "doc_a", "off_a")
-        .withColumn("pid", spark_partition_id())
+      val routed = graft.dedup.SuffixArray.rangeSorted(qual,
+        Seq(col("r_a"), col("doc_a"), col("off_a")))
       val rSch = routed.schema
       val ix = Seq("r_a", "doc_a", "off_a", "doc_b", "off_b", "lcp", "pid")
         .map(rSch.fieldIndex)

@@ -96,6 +96,12 @@ object GraphQueries {
     sb.toString
   }
 
+  /** q152's cap on a broadcast removal front: 160 MB, deliberately above
+    * autoBroadcastJoinThreshold, because the front is a long-keyed
+    * semi-join build side rebuilt once per round, not a planner estimate.
+    */
+  private val FrontMaxBytes = 160L << 20
+
   val all: Seq[Q] = Seq(
 
     // Exact triangle count + global transitivity. Edges are oriented
@@ -469,15 +475,9 @@ object GraphQueries {
         // degree<k fronts carry ≤ (k−1)·|front| incident edges, and a
         // front too big to broadcast means the graph is mostly gone —
         // that one round pays the shuffled semi-join instead. The gate
-        // is bytes (8 B/vertex id), capped by conf rather than a raw
-        // row literal: spark.graft.broadcastFrontMaxBytes defaults to
-        // 160 MB — deliberately ABOVE autoBroadcastJoinThreshold's
-        // 10 MB, because this relation is a long-keyed semi-join build
-        // side rebuilt once per round, not a planner estimate; size it
-        // to executor memory on a real cluster
-        val frontCapBytes = graft.GraftConf.broadcastFrontMaxBytes(s)
+        // is bytes (8 B/vertex id) against FrontMaxBytes
         val rem =
-          if (removedCnt * 8L <= frontCapBytes) broadcast(removed)
+          if (removedCnt * 8L <= FrontMaxBytes) broadcast(removed)
           else removed
         // ONE scan of the cached edge set per round (the previous shape
         // scanned it three times: a both-endpoints census plus one

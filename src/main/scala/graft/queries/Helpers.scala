@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * several branches of its plan (e.g. q100's edge set). Those frames
   * live in the session's cache until the caller's
   * `spark.catalog.clearCache()`, which every runner of registry queries
-  * (Bench, Verify, PlanProbe, RecallProbe) calls after each query.
+  * (Bench, Verify, PlanProbe) calls after each query.
   * Build-once artifacts (suffix-array index, BPE merges, edge table)
   * are held in `Artifacts` memos and live until `Artifacts.clearAll()`.
   */

@@ -121,36 +121,33 @@ object Ivf {
       .toDF("id", "cell")
   }
 
-  /** Hard-negative mining at corpus scale: for every vector, the
-    * most-similar vector with a DIFFERENT label, searched through IVF
-    * cells instead of the exact n² cross product. Every vector is
-    * INDEXED in its single nearest cell; as a QUERY it probes its
-    * `nprobe` nearest cells; candidates meet on the cell key (a plain
-    * hash join co-partitioned by cell), so pair volume is
-    * ≈ n·nprobe·(n/k). With the caller's k = √(n·nprobe/3) — which
-    * balances training (3·n·k) against the probe join (nprobe·n²/k) —
-    * total work is Θ(n^1.5·√nprobe): superlinear but far below the
-    * exact path's n², and spread evenly across cells so it
-    * parallelizes. Approximate in the standard ANN
-    * sense: the true hardest negative is missed iff it lives outside
-    * the query's nprobe cells; a query whose probed cells hold only
-    * same-label vectors drops out of the result (measured and pinned in
-    * IvfSpec on the test corpus).
-    *
-    * Output schema matches the exact path: (idCol, hard_negative, sim),
-    * ties broken to the lowest neighbor id at equal similarity.
+  /** Corpus size above which q69 leaves its exact broadcast-n² plan for
+    * [[hardNegatives]]. The measured exact/ANN checksum crossover sits at
+    * ≈4.4k vectors (BASELINE.md round-10 addendum), so the sf0.01 oracle
+    * entry and the sf0.1 bench plan stay exact.
     */
-  /** Size-aware default for the hard-negative `nprobe` knob, applied
-    * by q69's delegation when `spark.graft.hardNegatives.nprobe` is
-    * unset. Measured at sf1 (20k vectors) on the balanced quantizer
-    * (BASELINE.md round-12 recall addendum): nprobe=16 buys recall@1
-    * 0.534 → 0.700 over 8 for ~20% more ANN wall — still ~6× cheaper
-    * than the exact scan; below the ~5k exact/ANN crossover
-    * a delegated corpus is small enough that 8 already probes a large
-    * cell fraction, so the cheaper setting stays. Pinned in IvfSpec —
-    * changing either branch changes shipped quality.
+  val ExactMax = 5000L
+
+  /** Size-aware `nprobe` for q69's delegation. Measured at sf1 (20k
+    * vectors) on the balanced quantizer (BASELINE.md round-12 recall
+    * addendum): nprobe=16 buys recall@1 0.534 → 0.700 over 8 for ~20%
+    * more ANN wall — still ~6× cheaper than the exact scan; at or below
+    * [[ExactMax]] a corpus is small enough that 8 already probes a large
+    * cell fraction, so the cheaper setting stays. Pinned
+    * in IvfSpec — changing either branch changes shipped quality.
     */
-  def defaultNprobe(n: Long): Int = if (n > 5000L) 16 else 8
+  def defaultNprobe(n: Long): Int = if (n > ExactMax) 16 else 8
+
+  /** Cell count for an n-vector corpus probed `nprobe` ways:
+    * k = √(n·nprobe/3) balances Lloyd training (3·n·k) against the probe
+    * join (nprobe·n²/k), clamped to [64, 4096] so tiny corpora keep
+    * enough cells and the trainer's driver-side seed sample (k·50 rows)
+    * stays bounded. A fixed k would quietly re-enter the n²/k regime as
+    * the corpus grows (measured: sf3 ANN ran 5.6× sf1 with k floored at
+    * 64); k grows with √nprobe, so a wider probe also refines the cells.
+    */
+  def cellCount(n: Long, nprobe: Int): Int =
+    math.max(64L, math.min(4096L, math.round(math.sqrt(n.toDouble * nprobe / 3)))).toInt
 
   /** The quantizer-collapse guard hardNegatives trains through, exposed
     * package-private so IvfSpec can pin it: dedup to one deterministic
@@ -191,8 +188,30 @@ object Ivf {
         math.ceil(math.max(exact, est) / probePairBudget).toLong)).toInt
     }
 
-  def hardNegatives(emb: DataFrame, idCol: String, labelCol: String,
-                    vecCol: String, k: Int = 64, nprobe: Int = 8): DataFrame = {
+  /** Hard-negative mining at corpus scale: for every vector, the
+    * most-similar vector with a DIFFERENT label, searched through IVF
+    * cells instead of the exact n² cross product. Every vector is
+    * INDEXED in its single nearest cell; as a QUERY it probes its
+    * `nprobe` nearest cells; candidates meet on the cell key (a plain
+    * hash join co-partitioned by cell), so pair volume is
+    * ≈ n·nprobe·(n/k). With k = [[cellCount]] — which
+    * balances training (3·n·k) against the probe join (nprobe·n²/k) —
+    * total work is Θ(n^1.5·√nprobe): superlinear but far below the
+    * exact path's n², and spread evenly across cells so it
+    * parallelizes. Approximate in the standard ANN
+    * sense: the true hardest negative is missed iff it lives outside
+    * the query's nprobe cells; a query whose probed cells hold only
+    * same-label vectors drops out of the result (measured and pinned in
+    * IvfSpec on the test corpus).
+    *
+    * Output schema matches the exact path: (idCol, hard_negative, sim),
+    * ties broken to the lowest neighbor id at equal similarity.
+    * `saltWidth` forces one global probe-join salt width in place of
+    * [[cellSaltWidths]]; only tests pass it, to show the pair set does
+    * not depend on the salt.
+    */
+  private[graft] def hardNegatives(emb: DataFrame, idCol: String, labelCol: String,
+      vecCol: String, k: Int, nprobe: Int, saltWidth: Option[Int] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val base = emb.select(col(idCol).cast("long").as("id"),
@@ -248,7 +267,7 @@ object Ivf {
         .as[(Int, Long)].collect().toMap // ≤ k ≤ 4096 rows — driver-bounded
       val qCounts = queries.groupBy("cell").count()
         .as[(Int, Long)].collect().toMap // ≤ k ≤ 4096 rows — driver-bounded
-      val widths: Map[Int, Int] = graft.GraftConf.hardNegatives.saltWidth(spark) match {
+      val widths: Map[Int, Int] = saltWidth match {
         case Some(w) => iCounts.map { case (c, _) => c -> w } // forced global
         case None    => cellSaltWidths(iCounts, qCounts, nprobe)
       }

@@ -2,10 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the SPARK_GRAFT_CONF passthrough parse and the locale-proof
-  * number formatting in the bench artifact — both failure modes here
-  * are silent-until-runtime (a MatchError mid-bench, or a decimal
-  * comma producing an unparseable artifact under a non-ROOT locale).
+/** Pins the launch parses — the SPARK_GRAFT_CONF passthrough, the
+  * numeric launch variables, SkewGen's flags — and the locale-proof
+  * number formatting in the bench artifact. Every failure mode here is
+  * silent or misattributed until runtime (a MatchError mid-bench, a
+  * Spark error that names no variable, a flag quietly ignored, or a
+  * decimal comma producing an unparseable artifact under a non-ROOT
+  * locale).
   */
 class BenchConfSpec extends AnyFunSuite {
 
@@ -27,7 +30,7 @@ class BenchConfSpec extends AnyFunSuite {
   }
 
   test("steal formatting is locale-independent") {
-    // Harness.num pins Locale.ROOT internally, so asserting the output
+    // Harness.num4 pins Locale.ROOT internally, so asserting the output
     // directly IS the locale test — no JVM-global setDefault, which
     // under sbt's parallel suites could transiently flake any
     // concurrently-running locale-sensitive formatting. The pinned
@@ -42,5 +45,27 @@ class BenchConfSpec extends AnyFunSuite {
     assert(Harness.jsonStr("""a\b"c""") === """a\\b\"c""")
     assert(Harness.jsonStr("x\ny\tz") === "x\\u000ay\\u0009z")
     assert(Harness.jsonStr("plain=value;k2=v2") === "plain=value;k2=v2")
+  }
+
+  test("a bad numeric launch variable fails at harness start, naming it") {
+    val cpus = intercept[IllegalArgumentException](
+      Harness.settings(Map("SPARK_GRAFT_CPUS" -> "abc")))
+    assert(cpus.getMessage.contains("SPARK_GRAFT_CPUS"), cpus.getMessage)
+    val parts = intercept[IllegalArgumentException](
+      Harness.settings(Map("SPARK_GRAFT_PARTS" -> "0")))
+    assert(parts.getMessage.contains("SPARK_GRAFT_PARTS"), parts.getMessage)
+    val ok = Harness.settings(Map("SPARK_GRAFT_CPUS" -> "6"))
+    assert((ok.master, ok.parts) === ("local[6]", 6))
+    assert(Harness.settings(Map("SPARK_GRAFT_PARTS" -> " 64 ")).parts === 64)
+    val passes = intercept[IllegalArgumentException](
+      Harness.positiveInt("SPARK_GRAFT_PASSES", "5", max = 4))
+    assert(passes.getMessage.contains("SPARK_GRAFT_PASSES"), passes.getMessage)
+  }
+
+  test("SkewGen rejects an unknown flag, naming it") {
+    val e = intercept[IllegalArgumentException](SkewGen.main(Array("in", "out", "order")))
+    assert(e.getMessage.contains("unknown flag(s) order;") &&
+      e.getMessage.contains("[orders] [parts]"),
+      e.getMessage)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.AnalyticsQueries
 import graft.similarity.{Ivf, Knn}
 import graft.vector.VectorOps
 import org.apache.spark.sql.functions._
@@ -55,7 +56,8 @@ class IvfSpec extends SparkSpec {
     // nprobe=16 buys recall@1 0.534 → 0.700 at sf1 for ~20% ANN wall
     // (still ~6× under the exact scan), so delegated
     // corpora above the ~5k exact/ANN crossover default to 16; at or
-    // below it (reachable only by lowering exactMax) the cheap 8 stays.
+    // below it (reachable only through a threshold below Ivf.ExactMax,
+    // as the tests here pass) the cheap 8 stays.
     // The production-floor test below exercises the n=500 branch
     // end-to-end through q69; changing either branch changes shipped
     // quality and must show up here first.
@@ -97,66 +99,41 @@ class IvfSpec extends SparkSpec {
 
   test("q69 auto-delegates above spark.graft.hardNegatives.exactMax") {
     val q = SparkEntry.queries("q69_hard_negatives")
-    // default gate (5000): 500 vectors stay on the exact broadcast-n² plan
+    // registry gate (5000): 500 vectors stay on the exact broadcast-n² plan
     val exactPlan = q(spark, "/root/testdata/sf0.001")
       .queryExecution.optimizedPlan.toString
     assert(exactPlan.contains("Join"), s"exact path lost its join:\n$exactPlan")
-    spark.conf.set("spark.graft.hardNegatives.exactMax", "0")
-    try {
-      val delegated = q(spark, "/root/testdata/sf0.001")
-      // the ANN result is materialized (lineage cut): no n² join survives
-      val plan = delegated.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("Join"), s"delegated path still joins:\n$plan")
-      assert(delegated.columns.toSeq == Seq("vec_id", "hard_negative", "sim"))
-      assert(delegated.count() > 0)
-    } finally spark.conf.unset("spark.graft.hardNegatives.exactMax")
+    val delegated = AnalyticsQueries.hardNegatives(spark, "/root/testdata/sf0.001", 0L)
+    // the ANN result is materialized (lineage cut): no n² join survives
+    val plan = delegated.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("Join"), s"delegated path still joins:\n$plan")
+    assert(delegated.columns.toSeq == Seq("vec_id", "hard_negative", "sim"))
+    assert(delegated.count() > 0)
   }
 
   test("hardNegatives at PRODUCTION parameters holds the measured quality floor") {
-    // Mirrors graft.RecallProbe: the exact n² plan grades the SHIPPED
-    // q69 delegation (k = √(n·nprobe/3) clamped [64,4096], nprobe = 8 —
-    // the size-aware default at n = 500, see Ivf.defaultNprobe) on the
+    // The exact n² plan grades the SHIPPED q69 delegation chain
+    // (k = Ivf.cellCount, nprobe = 8 — the size-aware default at n = 500,
+    // see Ivf.defaultNprobe), reached with threshold 0, on the
     // 500-vector corpus. Ivf has
     // no RNG, so the measured values are exact for this corpus —
     // recall@1 = 0.686, dropout = 0, mean sim-gap = 0.0131, max = 0.199
     // (BASELINE.md round-11 recall table); the floors carry slack so a
     // benign quantizer tweak doesn't flap the suite, but a recall
-    // regression past them is a real quality break for exactMax buyers.
-    val q = SparkEntry.queries("q69_hard_negatives")
+    // regression past them is a real quality break for delegated corpora.
     val exact = exactHardNegatives
-    spark.conf.set("spark.graft.hardNegatives.exactMax", "0")
-    try {
-      val ann = q(spark, "/root/testdata/sf0.001")
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      assert(ann.size == exact.size,
-        s"dropout at production parameters: ${exact.size - ann.size}")
-      val hits = exact.count { case (id, (_, sim)) => ann.get(id).exists(_._2 == sim) }
-      assert(hits >= (exact.size * 65) / 100,
-        s"recall@1 below floor: $hits/${exact.size}")
-      val gaps = exact.toSeq.map { case (id, (_, sim)) => sim - ann(id)._2 }
-      // ANN candidates are a subset of exact's: the gap is never negative
-      assert(gaps.forall(_ >= -1e-9))
-      assert(gaps.sum / gaps.size <= 0.02,
-        s"mean sim-gap above floor: ${gaps.sum / gaps.size}")
-    } finally spark.conf.unset("spark.graft.hardNegatives.exactMax")
-  }
-
-  test("the nprobe conf knob reaches the delegated plan and degenerates to exact") {
-    // spark.graft.hardNegatives.nprobe ≥ k makes every query probe all
-    // cells, so the FULL q69 path (conf → k formula → Ivf) must
-    // byte-match the exact plan's result, tie-breaks included — pins
-    // both the knob plumbing and the degenerate-equality contract
-    val q = SparkEntry.queries("q69_hard_negatives")
-    spark.conf.set("spark.graft.hardNegatives.exactMax", "0")
-    spark.conf.set("spark.graft.hardNegatives.nprobe", "4096")
-    try {
-      val got = q(spark, "/root/testdata/sf0.001")
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      assert(got == exactHardNegatives)
-    } finally {
-      spark.conf.unset("spark.graft.hardNegatives.exactMax")
-      spark.conf.unset("spark.graft.hardNegatives.nprobe")
-    }
+    val ann = AnalyticsQueries.hardNegatives(spark, "/root/testdata/sf0.001", 0L)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    assert(ann.size == exact.size,
+      s"dropout at production parameters: ${exact.size - ann.size}")
+    val hits = exact.count { case (id, (_, sim)) => ann.get(id).exists(_._2 == sim) }
+    assert(hits >= (exact.size * 65) / 100,
+      s"recall@1 below floor: $hits/${exact.size}")
+    val gaps = exact.toSeq.map { case (id, (_, sim)) => sim - ann(id)._2 }
+    // ANN candidates are a subset of exact's: the gap is never negative
+    assert(gaps.forall(_ >= -1e-9))
+    assert(gaps.sum / gaps.size <= 0.02,
+      s"mean sim-gap above floor: ${gaps.sum / gaps.size}")
   }
 
   test("nprobe=k degenerates to exact brute-force ranking") {
@@ -259,27 +236,13 @@ class IvfSpec extends SparkSpec {
     // byte-equality against the UNSALTED join (forced width 1): per-cell
     // salting replicates hot-cell index rows across salt keys, but every
     // (query, nb) pair still meets exactly once, on the query's salt
-    def run(): Map[Long, (Long, Double)] =
+    def run(saltWidth: Option[Int]): Map[Long, (Long, Double)] =
       Ivf.hardNegatives(heavyCellCorpus, "id", "label", "vec",
-          k = 16, nprobe = 8)
+          k = 16, nprobe = 8, saltWidth = saltWidth)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val auto = run()
-    spark.conf.set("spark.graft.hardNegatives.saltWidth", "1")
-    try assert(run() == auto)
-    finally spark.conf.unset("spark.graft.hardNegatives.saltWidth")
+    val auto = run(None)
+    assert(run(Some(1)) == auto)
     assert(auto.size == 2300) // every query keeps a cross-label negative
-  }
-
-  test("a malformed saltWidth conf fails loudly, naming the knob") {
-    spark.conf.set("spark.graft.hardNegatives.saltWidth", "eight")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Ivf.hardNegatives(dupCorpus, "id", "label", "vec", k = 8, nprobe = 2)
-          .collect()
-      }
-      assert(e.getMessage.contains("spark.graft.hardNegatives.saltWidth"),
-        s"error does not name the conf key: ${e.getMessage}")
-    } finally spark.conf.unset("spark.graft.hardNegatives.saltWidth")
   }
 
   test("duplicated-corpus recall holds the measured floor at shipped q69 parameters") {
@@ -287,7 +250,7 @@ class IvfSpec extends SparkSpec {
     // quality on a duplicate-heavy corpus (the shape that subsidized the
     // collapsed model's 0.824 before the fix). dupCorpus at the shipped
     // q69 parameter chain for n=1000 — nprobe = defaultNprobe(1000) = 8,
-    // k = max(64, √(n·nprobe/3)) = 64 (40 distinct vectors ⇒ 40 effective
+    // k = cellCount(1000, 8) = 64 (40 distinct vectors ⇒ 40 effective
     // cells). Ivf has no RNG, so measured-exact for this fixture:
     // dropout = 0, recall@1 = 0.40, mean sim-gap = 0.0341, max = 0.1067.
     // Floors carry slack for benign tweaks; a drop past them means
@@ -305,10 +268,8 @@ class IvfSpec extends SparkSpec {
         col("m.sim").as("sim"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val nprobe = Ivf.defaultNprobe(1000L)
-    val k = math.max(64L, math.min(4096L,
-      math.round(math.sqrt(1000.0 * nprobe / 3)))).toInt
     val ann = Ivf.hardNegatives(dupCorpus, "id", "label", "vec",
-        k = k, nprobe = nprobe)
+        k = Ivf.cellCount(1000L, nprobe), nprobe = nprobe)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(ann.size == exact.size,
       s"dropout on the duplicated corpus: ${exact.size - ann.size}")
@@ -322,17 +283,15 @@ class IvfSpec extends SparkSpec {
   }
 
   test("salting the probe join redistributes but never changes the pair set") {
-    // forced saltWidth values must produce byte-identical hard negatives
+    // a forced salt width must produce byte-identical hard negatives
     // (salting replicates index rows across salt keys; every (query, nb)
     // pair still meets exactly once)
-    def run(): Map[Long, (Long, Double)] =
-      Ivf.hardNegatives(dupCorpus, "id", "label", "vec", k = 16, nprobe = 4)
+    def run(saltWidth: Option[Int]): Map[Long, (Long, Double)] =
+      Ivf.hardNegatives(dupCorpus, "id", "label", "vec", k = 16, nprobe = 4,
+          saltWidth = saltWidth)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val default = run()
-    spark.conf.set("spark.graft.hardNegatives.saltWidth", "8")
-    try {
-      assert(run() == default)
-    } finally spark.conf.unset("spark.graft.hardNegatives.saltWidth")
+    val default = run(None)
+    assert(run(Some(8)) == default)
     assert(default.nonEmpty)
   }
 }
