@@ -1,5 +1,15 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 object Bench {
+  /** One query's pass: elapsed seconds (negative when it failed), the
+    * stolen CPU fraction, and the Janino compiles it paid with their
+    * time. The codegen cache is JVM-wide and outlives `clearAll`, so a
+    * later pass mostly reuses the first pass's classes. */
+  private final case class Timing(elapsed: Double, steal: Double, compiles: Long, compileMs: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.env.sfDir
     val action = Harness.env.action
@@ -15,7 +25,7 @@ object Bench {
     // artifact itself, not just a stderr line) and excluded from the
     // cross-pass min and the total — a fast time-to-exception must never
     // masquerade as a fast query
-    def onePass(): Map[String, (Double, Double)] = {
+    def onePass(): Map[String, Timing] = {
       // each pass pays exactly one suffix-array build, one BPE training
       // loop, one edge-artifact build: reuse WITHIN a pass is the
       // artifact design (index / tokenizer / edge table), but a warm
@@ -26,6 +36,8 @@ object Bench {
       graft.Artifacts.clearAll()
       selected.map { case (name, fn) =>
         val s0 = cpuTicks()
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val cNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val ok =
           try { Harness.timedAction(fn(spark, sfDir)); true } catch { case e: Throwable =>
@@ -34,10 +46,12 @@ object Bench {
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
         val steal = stealFrac(s0, cpuTicks())
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        val compileMs = (CodeGenerator.compileTime - cNs0) / 1e6
         // drop per-query persisted state so one query's cache cannot
         // pressure the next (single-JVM bench hygiene; outside the timing)
         spark.catalog.clearCache()
-        name -> ((if (ok) elapsed else -elapsed, steal))
+        name -> Timing(if (ok) elapsed else -elapsed, steal, compiles, compileMs)
       }
     }
     // absolute box-speed canary (see BoxCanary): steal can be ~0 while
@@ -86,8 +100,9 @@ object Bench {
       endSamples += 1
     }
     val canary1 = prevEnd
-    // min elapsed across passes; the reported steal is the one measured
-    // DURING the winning pass (the annotation travels with the number).
+    // min elapsed across passes; the reported steal and compiles are the
+    // ones measured DURING the winning pass (the annotation travels with
+    // the number).
     // Pairwise merge preserves the two-pass semantics: min of the
     // successful elapseds, or the slower (more negative) sentinel when
     // every pass failed.
@@ -95,15 +110,16 @@ object Bench {
       a.map { case (k, v1) =>
         val v2 = b.getOrElse(k, v1)
         val both = Seq(v1, v2)
-        val good = both.filter(_._1 >= 0)
-        k -> (if (good.nonEmpty) good.minBy(_._1) else both.minBy(_._1))
+        val good = both.filter(_.elapsed >= 0)
+        k -> (if (good.nonEmpty) good.minBy(_.elapsed) else both.minBy(_.elapsed))
       }
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v._1 }
-      .mkString("{", ",", "}")
-    val st = results.map { case (k, v) => s"\"" + k + "\":" + num4(v._2) }
-      .mkString("{", ",", "}")
-    val total = results.values.map(_._1).filter(_ >= 0).sum
+    def perQuery(f: Timing => String) =
+      results.map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    val qs = perQuery(_.elapsed.toString)
+    val st = perQuery(v => num4(v.steal))
+    val cg = perQuery(v => s"""{"compiles":${v.compiles},"ms":${num4(v.compileMs)}}""")
+    val total = results.values.map(_.elapsed).filter(_ >= 0).sum
     // "mode" tags the end-sample regime INSIDE canarySec so it survives
     // merge_bench.py's per-leg copy: untagged artifacts predate the
     // retry-until-stable end sampling and their end samples are only an
@@ -128,9 +144,13 @@ object Bench {
     // default to a DRIVER-run filename: the committed BENCH_full.json is
     // the builder's isolated min-merge artifact and must not be
     // overwritten by post-round contended runs (builder runs set
-    // SPARK_GRAFT_BENCH_OUT=BENCH_full.json explicitly)
+    // SPARK_GRAFT_BENCH_OUT=BENCH_full.json explicitly). Only the file
+    // carries the per-query codegen map, so the stdout line keeps its
+    // length: Janino compiles (a CodegenMetrics count delta) and their
+    // ms (a CodeGenerator.compileTime delta).
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_driver.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
+    val disk = s"""{"codegen":$cg,""" + line.drop(1)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), disk + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }

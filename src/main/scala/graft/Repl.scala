@@ -40,7 +40,10 @@ object Repl {
     val (emb, meta, qv) = RankQueries.inputs(spark, dir)
     val ranked = Ranker.recommend(
       spark, emb, meta, RankQueries.QueryText, qv).collect()
-    val titles = meta.filter(col("id").isin(ranked.map(_.getLong(0)).toSeq: _*))
+    // the ids are bound, not inlined, so every ranking's title lookup
+    // runs one compiled stage
+    val titles = meta
+      .filter(col("id").isin(ranked.map(r => BoundLiteral.of(r.getLong(0))).toSeq: _*))
       .select(col("id"), col("title"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val nProducts = ranked.length

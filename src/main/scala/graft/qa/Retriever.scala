@@ -1,5 +1,6 @@
 package graft.qa
 
+import graft.BoundLiteral
 import graft.embed.{Embedder, HashTfEmbedder}
 import graft.text.TextOps
 import graft.vector.VectorOps
@@ -25,13 +26,19 @@ object Retriever {
       .filter(col("chunk").isNotNull)
   }
 
-  /** Top-k chunks for a question over one focused id. */
+  /** Top-k chunks for a question over one focused id. The focus id is
+    * bound ([[graft.BoundLiteral]]), not inlined: every focus runs the
+    * same compiled stage, and the filter still reaches the parquet scan
+    * as `EqualTo`, so a request reads only the row groups that can hold
+    * the focus. The question's embedding is an array literal, which
+    * Spark already passes by reference.
+    */
   def retrieve(chunks: DataFrame, focusId: Long, question: String, k: Int = 3,
                embedder: Embedder = HashTfEmbedder(64)): DataFrame = {
     val qToks = question.toLowerCase.split("\\s+").toSeq
     val emb = embedder.embedTokens(TextOps.tokens(TextOps.cleanText(col("chunk"))))
     val qEmb = typedLit(embedder.embed(qToks).toSeq)
-    chunks.filter(col("id") === focusId)
+    chunks.filter(col("id") === BoundLiteral.of(focusId))
       .withColumn("sim", VectorOps.cosineRounded(emb, qEmb))
       .select(col("field"), col("chunk"), col("sim"))
       .orderBy(desc("sim"), asc("field"))

@@ -1,5 +1,6 @@
 package graft.rank
 
+import graft.BoundLiteral
 import graft.text.{BudgetParser, TextOps}
 import graft.vector.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -30,6 +31,15 @@ import scala.jdk.CollectionConverters._
   * `recommend`; over a 94k-row catalog the join is a sort-merge join and
   * both run 4. The ranked frame is a local relation, so collecting it
   * runs none.
+  *
+  * Request values are bound, not inlined: the query vector and the
+  * rerank vocabulary are array literals, which Spark passes by
+  * reference, and the budget is parsed on the driver
+  * (`BudgetParser.budget`) and enters the plan as a
+  * [[graft.BoundLiteral]]. So no request value reaches the generated
+  * source, and a new query reuses the compiled stages of the last. A
+  * `lit` budget would be written into the source, with every constant
+  * folded from it.
   */
 object Ranker {
   final case class Config(
@@ -61,12 +71,16 @@ object Ranker {
       queryVec: Array[Double],
       cfg: Config = Config()): DataFrame = {
     val qTokens = queryText.toLowerCase.split("\\s+").toSeq
+    // the price anchor: the budget when truthy (rank.py:231), else the
+    // candidates' price median. No budget binds as 0.0, so requests with
+    // and without one share one compiled blend stage.
+    val budget = BoundLiteral.of(
+      BudgetParser.budget(embeddings.sparkSession, queryText).getOrElse(0.0))
     // every candidate-set scalar as a window aggregate over the whole
     // ≤topK frame: the price median/σ over non-null prices
     // (rank.py:225-232) and the clip bounds of the two min-max scaled
-    // features (rank.py:44-54). The budget anchor wins when truthy. σ
-    // accumulates in the partition's row order; its last-ulp noise sits
-    // far below the score's 6-dp rounding.
+    // features (rank.py:44-54). σ accumulates in the partition's row
+    // order; its last-ulp noise sits far below the score's 6-dp rounding.
     val cands = Window.partitionBy()
     embeddings
       .withColumn("sim", VectorOps.cosineRounded(col("vec"), typedLit(queryVec)))
@@ -79,10 +93,7 @@ object Ranker {
         stddev_pop(col("price")).over(cands).as("__price_std")) ++
         Features.clipBounds(col("pop"), "__pop", Some(cands)) ++
         Features.clipBounds(col("rerank"), "__rerank", Some(cands)): _*)
-      .withColumn("__budget", BudgetParser.parseBudget(lit(queryText)))
-      .withColumn("__anchor",
-        when(col("__budget").isNotNull && col("__budget") =!= 0.0, col("__budget"))
-          .otherwise(col("__price_median")))
+      .withColumn("__anchor", when(budget =!= 0.0, budget).otherwise(col("__price_median")))
       .withColumn("score",
         round(Features.blend(col("sim"),
           Features.bayesianRating(col("rating"), col("review_count")) / Features.MaxStarRating,

@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Budget extraction from free-text queries as pure Catalyst column
   * expressions (reference: rank.py:57-129).
@@ -57,5 +58,17 @@ object BudgetParser {
         extractMoney(q, approxPattern),
         extractMoney(q, expr1Pattern),
         extractMoney(q, expr2Pattern)))
+  }
+
+  private val QuerySchema = StructType(Seq(StructField("q", StringType)))
+
+  /** The budget of one query string: [[parseBudget]] over a one-row local
+    * relation, which the optimizer evaluates on the driver, so no Spark
+    * job and no generated code run. None ⇒ no budget.
+    */
+  def budget(spark: SparkSession, query: String): Option[Double] = {
+    val r = spark.createDataFrame(java.util.List.of(Row(query)), QuerySchema)
+      .select(parseBudget(col("q"))).head()
+    if (r.isNullAt(0)) None else Some(r.getDouble(0))
   }
 }

@@ -50,4 +50,21 @@ class BudgetParserSpec extends SparkSpec {
       r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     cases2.foreach { case (m, want) => assert(got(m) == want, s"for money '$m'") }
   }
+
+  test("the budget of a bound query and the driver-side budget equal lit's on every A4 phrase") {
+    // lit folds the cascade at planning time, a bound query runs it in
+    // the generated code, BudgetParser.budget in a local relation: all
+    // three must give the same bits
+    def bits(d: Option[Double]) = d.map(java.lang.Double.doubleToRawLongBits)
+    def budget(q: org.apache.spark.sql.Column): Option[Double] = {
+      val r = spark.range(1).select(BudgetParser.parseBudget(q)).head()
+      if (r.isNullAt(0)) None else Some(r.getDouble(0))
+    }
+    cases.foreach { case (q, want) =>
+      val folded = budget(lit(q))
+      assert(folded == want, s"for query '$q'")
+      assert(bits(budget(BoundLiteral.of(q))) == bits(folded), s"for query '$q'")
+      assert(bits(BudgetParser.budget(spark, q)) == bits(folded), s"for query '$q'")
+    }
+  }
 }

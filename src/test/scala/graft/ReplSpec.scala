@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Scripted end-to-end drive of the interactive shell (reference
   * semantic.py:76-106): a fixed stdin script exercises the rank-list
   * display, every `rank N` guard branch (valid switch, out-of-bounds,
@@ -7,7 +9,8 @@ package graft
   * The transcript is asserted structurally (the ranked titles are
   * data-derived) and for determinism (two runs, identical bytes). The
   * session is never cleared, so each recommend must leave no cached
-  * frame behind.
+  * frame behind. A request whose only change is its request values (a
+  * new focus, a new budget) must reuse the generated code of the last.
   */
 class ReplSpec extends SparkSpec {
 
@@ -98,5 +101,48 @@ class ReplSpec extends SparkSpec {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
     assert(jobs.length - 1 <= 2, s"jobs in the group: ${jobs.mkString(", ")}")
+  }
+
+  /** Janino compiles in this JVM so far. The codegen cache is keyed by
+    * the generated source, so a request whose stages generate a source
+    * seen before adds none. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a Q&A request on a new focus compiles no generated code") {
+    val (emb, meta, qv) = queries.RankQueries.inputs(spark, sf)
+    val ranked = rank.Ranker.recommend(
+      spark, emb, meta, queries.RankQueries.QueryText, qv).collect().map(_.getLong(0))
+    val chunks = qa.Retriever.chunksFromMeta(meta, "id",
+      Seq("title", "summary", "rating", "review_count", "price"))
+    // ranks the scripted sessions above never focused on, so the
+    // measured focus has not been compiled into any stage yet
+    val question = "is it quiet"
+    assert(qa.Retriever.answerContext(chunks, ranked(2), question).nonEmpty)
+    val before = compiles
+    assert(qa.Retriever.answerContext(chunks, ranked(3), question).nonEmpty)
+    assert(compiles - before == 0)
+  }
+
+  test("a recommend with a new budget compiles no generated code") {
+    val (emb, meta, qv) = queries.RankQueries.inputs(spark, sf)
+    // two FIXTURES A4 phrases: a range midpoint (400) and an upper bound (800)
+    rank.Ranker.recommend(spark, emb, meta, "washer between $300 and 500", qv).collect()
+    val before = compiles
+    val rows = rank.Ranker.recommend(spark, emb, meta, "at most 800", qv).collect()
+    assert(compiles - before == 0)
+    assert(rows.length == rank.Ranker.Config().finalK)
+  }
+
+  test("the Q&A focus filter still reaches the parquet scan") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val (_, meta, _) = queries.RankQueries.inputs(spark, sf)
+    val chunks = qa.Retriever.chunksFromMeta(meta, "id", Seq("title", "price"))
+    val df = qa.Retriever.retrieve(chunks, 7L, "what is the price")
+    assert(df.collect().nonEmpty)
+    val pushed = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f.metadata.getOrElse("PushedFilters", "")
+    }
+    assert(pushed.exists(_.contains("EqualTo(doc_id,7)")), pushed.mkString("; "))
   }
 }
