@@ -3,7 +3,7 @@ package graft.queries
 import graft.similarity.Ivf
 import graft.sketch.KmvAgg
 import graft.sources.Tables
-import graft.text.{StableHash, StableHash64, TextOps}
+import graft.text.{StableHash, StableHash64}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -153,15 +153,7 @@ object AnalyticsQueries {
     // screen primitive run before any eval-set release.
     Q("q65_decontaminate", (s, dir) => {
       val docs = Tables.documents(s, dir)
-      val sh = docs
-        .select(col("doc_id"),
-          split(TextOps.cleanText(col("text")), " ").as("toks"))
-        .filter(size(col("toks")) >= 5)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(toks) - 5), i -> concat_ws(' ', slice(toks, i + 1, 5)))"))
-          .as("shingle"))
-        .select(col("doc_id"), StableHash64(col("shingle")).as("sh"))
-        .distinct()
+      val sh = RetrievalQueries.shingles(docs, "sh")
       // deliberately NOT persisted: the doc_id % 20 filters push below
       // the distinct to the SCAN on both consumers, so the "shared"
       // frame really costs 100% + 5%, not 2× — persisting it was
@@ -593,15 +585,7 @@ object AnalyticsQueries {
     // trajectory is partition-order-free; only the normalization
     // divides, identically in both engines.
     Q("q207_hits", (s, dir) => {
-      // orders/part are fact-scaled — no broadcast hints (AQE decides)
-      val w = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-        .join(Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.part(s, dir)
-          .select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
+      val w = customerBrandLines(s, dir)
         .groupBy(col("o_custkey").as("c"), col("p_brand").as("b"))
         .agg(count(lit(1)).as("w"))
         .persist()

@@ -171,19 +171,9 @@ object CurationQueries {
     // Symmetric int8 embedding quantization: per-vector absmax scale,
     // round-half-up to [-127,127], then reconstruction error and cosine
     // drift of the dequantized vector. The storage lever for ANN at scale
-    // (4x smaller vectors); per-row map-only, no shuffle. The scale is
-    // bound once per row (array_repeat) so the lambda never re-evaluates
-    // the absmax per element.
+    // (4x smaller vectors); per-row map-only, no shuffle.
     Q("q83_quantize_int8", (s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))
-        .withColumn("scale",
-          array_max(transform(col("vec"), x => abs(x))) / 127.0)
-      val dq = zip_with(col("vec"),
-        array_repeat(col("scale"), size(col("vec"))),
-        (x, sc) => least(greatest(floor(x / sc + 0.5), lit(-127.0)),
-          lit(127.0)) * sc)
-      emb.withColumn("dq", dq)
+      VectorQueries.int8Quantized(s, dir)
         .select(col("vec_id"), round(col("scale"), 6).as("scale"),
           round(sqrt(aggregate(
             zip_with(col("vec"), col("dq"), (x, y) => (x - y) * (x - y)),

@@ -37,6 +37,31 @@ object DedupQueries {
     s"""list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
        |  ELSE list_transform(range(1, len(toks)-1), i -> array_to_string(toks[i:i+2], ' ')) END)""".stripMargin
 
+  /** The brute-force oracles' corpus (q17, q43, q169): `corpus`, its
+    * token lists `t` and shingle sets `sh`.
+    */
+  private val corpusShinglesSql =
+    s"""corpus AS ($dupCorpusSql),
+       |t AS (SELECT id, ${tokensSql(cleanTextSql("text"))} AS toks FROM corpus),
+       |sh AS (SELECT id, $shinglesSql AS shingles FROM t)""".stripMargin
+
+  /** Brute-force twin of the MinHash clusters (q43, q169): every pair at
+    * shingle-Jaccard ≥ 0.5, closed transitively into `reach(id, r)`.
+    */
+  private val clusterReachSql =
+    s"""$corpusShinglesSql,
+       |pairs AS (
+       |  SELECT a.id AS id_a, b.id AS id_b
+       |  FROM sh a JOIN sh b ON a.id < b.id
+       |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+       |    (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles))) >= 0.5),
+       |e AS (SELECT id_a AS a, id_b AS b FROM pairs
+       |  UNION SELECT id_b, id_a FROM pairs),
+       |reach(id, r) AS (
+       |  SELECT id, id FROM corpus
+       |  UNION
+       |  SELECT e.b, reach.r FROM reach JOIN e ON reach.id = e.a)""".stripMargin
+
   /** Adjacent suffix-array pairs with their longest-common-prefix — the
     * shared substrate of q232 (longest-repeat report), q234 (the
     * per-document cut list) and q235 (contamination spans). This is the
@@ -67,20 +92,27 @@ object DedupQueries {
     * (half-open 1-based char ranges [span_start, span_end)), shared
     * with q236 which applies it. Every suffix whose adjacent-SA LCP ≥
     * minLcp sits in a repeated span; BOTH occurrences are emitted
-    * in-row (no second pass over the pairs) and overlapping intervals
-    * merge under a per-doc window (running max of ends → new-group
-    * flags → running sum) — skew-bounded by document length, never
-    * corpus-sized.
+    * in-row (no second pass over the pairs) and merged by [[mergeSpans]].
     */
   private def mergedRepeatSpans(s: org.apache.spark.sql.SparkSession,
-                                dir: String, minLcp: Int): DataFrame = {
-    val spans = saAdjacentLcp(s, dir)
+                                dir: String, minLcp: Int): DataFrame =
+    mergeSpans(saAdjacentLcp(s, dir)
       .filter(col("lcp") >= minLcp)
       .select(explode(array(
         struct(col("doc_a").as("doc_id"), col("off_a").as("s0")),
         struct(col("doc_b").as("doc_id"), col("off_b").as("s0")))).as("x"),
         col("lcp"))
-      .select(col("x.doc_id"), col("x.s0"), (col("x.s0") + col("lcp")).as("e0"))
+      .select(col("x.doc_id"), col("x.s0"), (col("x.s0") + col("lcp")).as("e0")))
+
+  /** Per-document interval union: spans `(doc_id, s0, e0)` →
+    * `(doc_id, gid, span_start, span_end)`, one row per maximal merged
+    * interval. A span opens a new group unless it starts at or before
+    * the running max of the earlier ends (so touching intervals merge);
+    * running max of ends → new-group flags → running sum, under a
+    * per-doc window — skew-bounded by document length, never
+    * corpus-sized. The merge of q234, q235 and q236.
+    */
+  private[graft] def mergeSpans(spans: DataFrame): DataFrame = {
     val wDoc = Window.partitionBy("doc_id").orderBy("s0", "e0")
     val wPrev = wDoc.rowsBetween(Window.unboundedPreceding, -1)
     spans
@@ -94,6 +126,83 @@ object DedupQueries {
       .agg(min(col("s0")).as("span_start"), max(col("e0")).as("span_end"))
   }
 
+  /** Merged spans as the q234/q235 output rows. */
+  private def spanList(merged: DataFrame): DataFrame =
+    merged.select(col("doc_id"), col("span_start"), col("span_end"),
+        (col("span_end") - col("span_start")).as("span_len"))
+      .orderBy("doc_id", "span_start")
+
+  /** Oracle twin of the suffix array: every 1-based suffix offset of
+    * every document, in `suf`.
+    */
+  private val sufSql =
+    """suf AS (
+      |  SELECT doc_id, unnest(generate_series(1, length(text))) AS off, text
+      |  FROM documents)""".stripMargin
+
+  /** `suf` plus `ord`: each suffix with its successor in suffix-array
+    * order (doc_b, off_b, text_b) and its 1-based SA position `rn`.
+    */
+  private val saOrderSql =
+    s"""$sufSql,
+       |ord AS (
+       |  SELECT doc_id, off, text,
+       |    lead(doc_id) OVER w AS doc_b, lead(off) OVER w AS off_b,
+       |    lead(text) OVER w AS text_b,
+       |    row_number() OVER w AS rn
+       |  FROM suf
+       |  WINDOW w AS (ORDER BY substr(text, CAST(off AS INT)), doc_id, off))""".stripMargin
+
+  /** Brute-force oracle of the adjacent-LCP annex: `scored` holds every
+    * SA-adjacent pair with its longest common prefix `lcp` (q232, q234,
+    * q236).
+    */
+  private val saAdjacentLcpSql =
+    s"""$saOrderSql,
+       |pairs AS (
+       |  SELECT doc_id AS doc_a, off AS off_a, doc_b, off_b, text AS text_a,
+       |    substr(text, CAST(off AS INT)) AS sa, substr(text_b, CAST(off_b AS INT)) AS sb
+       |  FROM ord WHERE doc_b IS NOT NULL),
+       |scored AS (
+       |  SELECT doc_a, off_a, doc_b, off_b, text_a,
+       |    coalesce(list_position(list_transform(list_zip(
+       |        regexp_split_to_array(sa, ''), regexp_split_to_array(sb, '')),
+       |      z -> coalesce(z[1], '') = coalesce(z[2], '')), false) - 1,
+       |      least(length(sa), length(sb))) AS lcp
+       |  FROM pairs)""".stripMargin
+
+  /** Oracle twin of [[mergeSpans]] over a preceding `spans(doc_id, s0,
+    * e0)` CTE: `grp` tags each span with its merged-group id `gid`.
+    */
+  private val spanGroupsSql =
+    """flagged AS (
+      |  SELECT doc_id, s0, e0,
+      |    CASE WHEN s0 <= max(e0) OVER (PARTITION BY doc_id ORDER BY s0, e0
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) THEN 0 ELSE 1 END AS ng
+      |  FROM spans),
+      |grp AS (
+      |  SELECT doc_id, s0, e0, sum(ng) OVER (PARTITION BY doc_id ORDER BY s0, e0
+      |    ROWS UNBOUNDED PRECEDING) AS gid
+      |  FROM flagged)""".stripMargin
+
+  /** `grp` over both occurrences of every ≥100-char repeat (q234, q236). */
+  private val repeatGroupsSql =
+    s"""$saAdjacentLcpSql,
+       |spans AS (
+       |  SELECT doc_a AS doc_id, off_a AS s0, off_a + lcp AS e0
+       |  FROM scored WHERE lcp >= 100
+       |  UNION ALL
+       |  SELECT doc_b, off_b, off_b + lcp FROM scored WHERE lcp >= 100),
+       |$spanGroupsSql""".stripMargin
+
+  /** The merged groups of `grp` as span rows — [[spanList]]'s twin. */
+  private val spanListSql =
+    """SELECT doc_id, CAST(min(s0) AS BIGINT) AS span_start,
+      |  CAST(max(e0) AS BIGINT) AS span_end,
+      |  CAST(max(e0) - min(s0) AS BIGINT) AS span_len
+      |FROM grp GROUP BY doc_id, gid
+      |ORDER BY doc_id, span_start""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // MinHash + banded LSH candidates, exact shingle-Jaccard verify.
@@ -104,9 +213,7 @@ object DedupQueries {
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b")
     }, Some(
-      s"""WITH corpus AS ($dupCorpusSql),
-         |t AS (SELECT id, ${tokensSql(cleanTextSql("text"))} AS toks FROM corpus),
-         |sh AS (SELECT id, $shinglesSql AS shingles FROM t)
+      s"""WITH $corpusShinglesSql
          |SELECT a.id AS id_a, b.id AS id_b,
          | round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
          |   (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles))), 6) AS jaccard
@@ -152,20 +259,7 @@ object DedupQueries {
         .select(col("id"), coalesce(col("label"), col("id")).as("cluster"))
         .orderBy("id")
     }, Some(
-      s"""WITH RECURSIVE corpus AS ($dupCorpusSql),
-         |t AS (SELECT id, ${tokensSql(cleanTextSql("text"))} AS toks FROM corpus),
-         |sh AS (SELECT id, $shinglesSql AS shingles FROM t),
-         |pairs AS (
-         |  SELECT a.id AS id_a, b.id AS id_b
-         |  FROM sh a JOIN sh b ON a.id < b.id
-         |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-         |    (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles))) >= 0.5),
-         |e AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM corpus
-         |  UNION
-         |  SELECT e.b, reach.r FROM reach JOIN e ON reach.id = e.a)
+      s"""WITH RECURSIVE $clusterReachSql
          |SELECT id, min(r) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin)),
 
     // Embedding near-dup: random-hyperplane LSH candidates, exact cosine
@@ -276,20 +370,7 @@ object DedupQueries {
           col("keep_len"), (col("n_members") - 1).as("n_dropped"))
         .orderBy("cluster")
     }, Some(
-      s"""WITH RECURSIVE corpus AS ($dupCorpusSql),
-         |t AS (SELECT id, ${tokensSql(cleanTextSql("text"))} AS toks FROM corpus),
-         |sh AS (SELECT id, $shinglesSql AS shingles FROM t),
-         |pairs AS (
-         |  SELECT a.id AS id_a, b.id AS id_b
-         |  FROM sh a JOIN sh b ON a.id < b.id
-         |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-         |    (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles))) >= 0.5),
-         |e AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM corpus
-         |  UNION
-         |  SELECT e.b, reach.r FROM reach JOIN e ON reach.id = e.a),
+      s"""WITH RECURSIVE $clusterReachSql,
          |cl AS (SELECT c.id, CAST(length(c.text) AS BIGINT) AS len,
          |         m.cluster
          |       FROM corpus c JOIN
@@ -526,7 +607,6 @@ object DedupQueries {
     // doc_id/off in both engines). The final row_number runs over the
     // already-limited 300-row frame — bounded, not corpus-sized.
     Q("q231_suffix_array", (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir)
       // build-once index: q232 (and any later SA consumer) reuses this
       // exact build — the suite pays one Ω(n) construction per corpus
@@ -543,9 +623,7 @@ object DedupQueries {
           expr("substr(text, CAST(off AS INT), 16)").as("head"))
         .orderBy("sa_rank")
     }, Some(
-      """WITH suf AS (
-        |  SELECT doc_id, unnest(generate_series(1, length(text))) AS off, text
-        |  FROM documents)
+      s"""WITH $sufSql
         |SELECT row_number() OVER (
         |    ORDER BY substr(text, CAST(off AS INT)), doc_id, off) AS sa_rank,
         |  doc_id, CAST(off AS BIGINT) AS off,
@@ -567,26 +645,7 @@ object DedupQueries {
         .orderBy(desc("lcp"), col("doc_a"), col("off_a"), col("doc_b"), col("off_b"))
         .limit(20)
     }, Some(
-      """WITH suf AS (
-        |  SELECT doc_id, unnest(generate_series(1, length(text))) AS off, text
-        |  FROM documents),
-        |ord AS (
-        |  SELECT doc_id, off, text,
-        |    lead(doc_id) OVER w AS doc_b, lead(off) OVER w AS off_b,
-        |    lead(text) OVER w AS text_b
-        |  FROM suf
-        |  WINDOW w AS (ORDER BY substr(text, CAST(off AS INT)), doc_id, off)),
-        |pairs AS (
-        |  SELECT doc_id AS doc_a, off AS off_a, doc_b, off_b, text AS text_a,
-        |    substr(text, CAST(off AS INT)) AS sa, substr(text_b, CAST(off_b AS INT)) AS sb
-        |  FROM ord WHERE doc_b IS NOT NULL),
-        |scored AS (
-        |  SELECT doc_a, off_a, doc_b, off_b, text_a,
-        |    coalesce(list_position(list_transform(list_zip(
-        |        regexp_split_to_array(sa, ''), regexp_split_to_array(sb, '')),
-        |      z -> coalesce(z[1], '') = coalesce(z[2], '')), false) - 1,
-        |      least(length(sa), length(sb))) AS lcp
-        |  FROM pairs)
+      s"""WITH $saAdjacentLcpSql
         |SELECT CAST(lcp AS BIGINT) AS lcp, doc_a, CAST(off_a AS BIGINT) AS off_a,
         |  doc_b, CAST(off_b AS BIGINT) AS off_b,
         |  substr(text_a, CAST(off_a AS INT), CAST(least(lcp, 24) AS INT)) AS head
@@ -610,50 +669,10 @@ object DedupQueries {
     // max of span ends → new-group flags → running sum), skew-bounded
     // by document length, never corpus-sized.
     Q("q234_repeated_spans", (s, dir) => {
-      mergedRepeatSpans(s, dir, minLcp = 100)
-        .select(col("doc_id"), col("span_start"), col("span_end"),
-          (col("span_end") - col("span_start")).as("span_len"))
-        .orderBy("doc_id", "span_start")
+      spanList(mergedRepeatSpans(s, dir, minLcp = 100))
     }, Some(
-      """WITH suf AS (
-        |  SELECT doc_id, unnest(generate_series(1, length(text))) AS off, text
-        |  FROM documents),
-        |ord AS (
-        |  SELECT doc_id, off, text,
-        |    lead(doc_id) OVER w AS doc_b, lead(off) OVER w AS off_b,
-        |    lead(text) OVER w AS text_b
-        |  FROM suf
-        |  WINDOW w AS (ORDER BY substr(text, CAST(off AS INT)), doc_id, off)),
-        |pairs AS (
-        |  SELECT doc_id AS doc_a, off AS off_a, doc_b, off_b,
-        |    substr(text, CAST(off AS INT)) AS sa, substr(text_b, CAST(off_b AS INT)) AS sb
-        |  FROM ord WHERE doc_b IS NOT NULL),
-        |scored AS (
-        |  SELECT doc_a, off_a, doc_b, off_b,
-        |    coalesce(list_position(list_transform(list_zip(
-        |        regexp_split_to_array(sa, ''), regexp_split_to_array(sb, '')),
-        |      z -> coalesce(z[1], '') = coalesce(z[2], '')), false) - 1,
-        |      least(length(sa), length(sb))) AS lcp
-        |  FROM pairs),
-        |spans AS (
-        |  SELECT doc_a AS doc_id, off_a AS s0, off_a + lcp AS e0
-        |  FROM scored WHERE lcp >= 100
-        |  UNION ALL
-        |  SELECT doc_b, off_b, off_b + lcp FROM scored WHERE lcp >= 100),
-        |flagged AS (
-        |  SELECT doc_id, s0, e0,
-        |    CASE WHEN s0 <= max(e0) OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) THEN 0 ELSE 1 END AS ng
-        |  FROM spans),
-        |grp AS (
-        |  SELECT doc_id, s0, e0, sum(ng) OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |    ROWS UNBOUNDED PRECEDING) AS gid
-        |  FROM flagged)
-        |SELECT doc_id, CAST(min(s0) AS BIGINT) AS span_start,
-        |  CAST(max(e0) AS BIGINT) AS span_end,
-        |  CAST(max(e0) - min(s0) AS BIGINT) AS span_len
-        |FROM grp GROUP BY doc_id, gid
-        |ORDER BY doc_id, span_start""".stripMargin)),
+      s"""WITH $repeatGroupsSql
+        |$spanListSql""".stripMargin)),
 
     // Cross-corpus contamination spans — Lee et al. 2022's test-set
     // decontamination: find every TRAIN character range that appears
@@ -683,7 +702,6 @@ object DedupQueries {
     // window, no exchange keyed on run id before partial aggregation;
     // the per-doc interval merge is skew-bounded by document length.
     Q("q235_contamination_spans", (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val minLcp = 100
       val isEval: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         d => d % 10 === 0
@@ -780,32 +798,10 @@ object DedupQueries {
         .filter(col("has_eval") === 1L && !isEval(col("doc_id")))
         .select(col("doc_id"), col("off").as("s0"),
           (col("off") + col("cmin")).as("e0"))
-      // per-train-doc maximal cut intervals — q234's merge shape
-      val wDoc = Window.partitionBy("doc_id").orderBy("s0", "e0")
-      val wPrev = wDoc.rowsBetween(Window.unboundedPreceding, -1)
-      spans
-        .withColumn("pmax", max(col("e0")).over(wPrev))
-        .withColumn("ng",
-          when(col("pmax").isNull || col("s0") > col("pmax"), 1L)
-            .otherwise(0L))
-        .withColumn("gid", sum(col("ng")).over(
-          wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("doc_id"), col("gid"))
-        .agg(min(col("s0")).as("span_start"), max(col("e0")).as("span_end"))
-        .select(col("doc_id"), col("span_start"), col("span_end"),
-          (col("span_end") - col("span_start")).as("span_len"))
-        .orderBy("doc_id", "span_start")
+      // per-train-doc maximal cut intervals — q234's merge
+      spanList(mergeSpans(spans))
     }, Some(
-      """WITH suf AS (
-        |  SELECT doc_id, unnest(generate_series(1, length(text))) AS off, text
-        |  FROM documents),
-        |ord AS (
-        |  SELECT doc_id, off, text,
-        |    lead(doc_id) OVER w AS doc_b, lead(off) OVER w AS off_b,
-        |    lead(text) OVER w AS text_b,
-        |    row_number() OVER w AS rn
-        |  FROM suf
-        |  WINDOW w AS (ORDER BY substr(text, CAST(off AS INT)), doc_id, off)),
+      s"""WITH $saOrderSql,
         |pairs AS (
         |  SELECT rn, doc_id AS doc_a, off AS off_a, doc_b, off_b,
         |    coalesce(list_position(list_transform(list_zip(
@@ -834,20 +830,8 @@ object DedupQueries {
         |  SELECT m.doc_id, m.off AS s0, m.off + s.cmin AS e0
         |  FROM members m JOIN stats s USING (run_id)
         |  WHERE s.has_eval = 1 AND m.doc_id % 10 <> 0),
-        |fl2 AS (
-        |  SELECT doc_id, s0, e0,
-        |    CASE WHEN s0 <= max(e0) OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) THEN 0 ELSE 1 END AS ng
-        |  FROM spans),
-        |grp AS (
-        |  SELECT doc_id, s0, e0, sum(ng) OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |    ROWS UNBOUNDED PRECEDING) AS gid
-        |  FROM fl2)
-        |SELECT doc_id, CAST(min(s0) AS BIGINT) AS span_start,
-        |  CAST(max(e0) AS BIGINT) AS span_end,
-        |  CAST(max(e0) - min(s0) AS BIGINT) AS span_len
-        |FROM grp GROUP BY doc_id, gid
-        |ORDER BY doc_id, span_start""".stripMargin)),
+        |$spanGroupsSql
+        |$spanListSql""".stripMargin)),
 
     // Apply the repeated-span cut list: emit the CLEANED CORPUS — the
     // artifact a training pipeline actually feeds the tokenizer.
@@ -902,40 +886,7 @@ object DedupQueries {
           col("ct").as("clean_text"))
         .orderBy("doc_id")
     }, Some(
-      """WITH suf AS (
-        |  SELECT doc_id, unnest(generate_series(1, length(text))) AS off, text
-        |  FROM documents),
-        |ord AS (
-        |  SELECT doc_id, off, text,
-        |    lead(doc_id) OVER w AS doc_b, lead(off) OVER w AS off_b,
-        |    lead(text) OVER w AS text_b
-        |  FROM suf
-        |  WINDOW w AS (ORDER BY substr(text, CAST(off AS INT)), doc_id, off)),
-        |pairs AS (
-        |  SELECT doc_id AS doc_a, off AS off_a, doc_b, off_b,
-        |    substr(text, CAST(off AS INT)) AS sa, substr(text_b, CAST(off_b AS INT)) AS sb
-        |  FROM ord WHERE doc_b IS NOT NULL),
-        |scored AS (
-        |  SELECT doc_a, off_a, doc_b, off_b,
-        |    coalesce(list_position(list_transform(list_zip(
-        |        regexp_split_to_array(sa, ''), regexp_split_to_array(sb, '')),
-        |      z -> coalesce(z[1], '') = coalesce(z[2], '')), false) - 1,
-        |      least(length(sa), length(sb))) AS lcp
-        |  FROM pairs),
-        |spans AS (
-        |  SELECT doc_a AS doc_id, off_a AS s0, off_a + lcp AS e0
-        |  FROM scored WHERE lcp >= 100
-        |  UNION ALL
-        |  SELECT doc_b, off_b, off_b + lcp FROM scored WHERE lcp >= 100),
-        |flagged AS (
-        |  SELECT doc_id, s0, e0,
-        |    CASE WHEN s0 <= max(e0) OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) THEN 0 ELSE 1 END AS ng
-        |  FROM spans),
-        |grp AS (
-        |  SELECT doc_id, s0, e0, sum(ng) OVER (PARTITION BY doc_id ORDER BY s0, e0
-        |    ROWS UNBOUNDED PRECEDING) AS gid
-        |  FROM flagged),
+      s"""WITH $repeatGroupsSql,
         |merged AS (
         |  SELECT doc_id, min(s0) AS ms, max(e0) AS me
         |  FROM grp GROUP BY doc_id, gid),

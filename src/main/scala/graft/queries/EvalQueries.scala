@@ -37,6 +37,22 @@ object EvalQueries {
   def scoredDf(s: SparkSession, dir: String): DataFrame = scored(s, dir)
   def scoredCteSql: String = scoredCte
 
+  /** Logits of the probabilities 0.1 … 0.9: the edges of the fixed
+    * score bins of q143 and q145.
+    */
+  private val logitEdges = (1 to 9).map(i => math.log(i / 10.0 / (1.0 - i / 10.0)))
+
+  /** Bin 0-9 of the margin `z`: the number of edges it reaches, so bin
+    * membership derives from the exact margin, never a rounded score.
+    */
+  private def logitBin: Column = logitEdges.foldLeft(lit(0L)) { (acc, e) =>
+    acc + when(col("z") >= e, 1L).otherwise(0L)
+  }
+
+  /** DuckDB twin of [[logitBin]] (an INTEGER; callers cast). */
+  private val logitBinSql = logitEdges
+    .map(e => s"(CASE WHEN z >= $e THEN 1 ELSE 0 END)").mkString("(", " + ", ")")
+
   /** The matching DuckDB CTE: `sc` with (vec_id, y, z). */
   private def scoredCte: String =
     """w AS (SELECT CAST(embedding AS DOUBLE[]) AS w FROM embeddings
@@ -217,12 +233,8 @@ object EvalQueries {
     // Bin membership derives from the exact margin via bin-edge logits —
     // a rounded probability never lands a row in the wrong bin.
     Q("q143_calibration", (s, dir) => {
-      val edges = (1 to 9).map(i => math.log(i / 10.0 / (1.0 - i / 10.0)))
-      val bin = edges.foldLeft(lit(0L)) { (acc, e) =>
-        acc + when(col("z") >= e, 1L).otherwise(0L)
-      }
       val b = scored(s, dir)
-        .withColumn("bin", bin)
+        .withColumn("bin", logitBin)
         .withColumn("score", round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6))
         .groupBy("bin")
         .agg(count(lit(1)).as("n"), sum("y").as("n_pos"),
@@ -235,11 +247,8 @@ object EvalQueries {
             abs(col("acc") - col("conf")), 9).as("ece_term"))
         .orderBy("bin")
     }, Some {
-      val edges = (1 to 9).map(i => math.log(i / 10.0 / (1.0 - i / 10.0)))
-      val binSql = edges.map(e => s"(CASE WHEN z >= $e THEN 1 ELSE 0 END)")
-        .mkString("(", " + ", ")")
       s"""WITH $scoredCte,
-         |sb AS (SELECT y, CAST($binSql AS BIGINT) AS bin,
+         |sb AS (SELECT y, CAST($logitBinSql AS BIGINT) AS bin,
          |         round(1.0 / (1.0 + exp(-z)), 6) AS score FROM sc),
          |b AS (SELECT bin, count(*) AS n, CAST(sum(y) AS BIGINT) AS n_pos,
          |        ${Helpers.davgSql("score")} AS conf
@@ -289,12 +298,8 @@ object EvalQueries {
     // q94's KS): fixed margin bins, PSI = Σ (p_a − p_b)·ln(p_a/p_b)
     // over 6dp-rounded shares summed as exact decimals.
     Q("q145_psi_drift", (s, dir) => {
-      val edges = (1 to 9).map(i => math.log(i / 10.0 / (1.0 - i / 10.0)))
-      val bin = edges.foldLeft(lit(0L)) { (acc, e) =>
-        acc + when(col("z") >= e, 1L).otherwise(0L)
-      }
       val b = scored(s, dir)
-        .withColumn("bin", bin)
+        .withColumn("bin", logitBin)
         .withColumn("grp", pmod(col("vec_id"), lit(2L)))
         .groupBy("bin")
         .agg(sum(when(col("grp") === 0L, 1L).otherwise(0L)).as("ca"),
@@ -309,11 +314,8 @@ object EvalQueries {
             .as("psi_term"))
         .orderBy("bin")
     }, Some {
-      val edges = (1 to 9).map(i => math.log(i / 10.0 / (1.0 - i / 10.0)))
-      val binSql = edges.map(e => s"(CASE WHEN z >= $e THEN 1 ELSE 0 END)")
-        .mkString("(", " + ", ")")
       s"""WITH $scoredCte,
-         |sb AS (SELECT CAST($binSql AS BIGINT) AS bin, vec_id % 2 AS grp
+         |sb AS (SELECT CAST($logitBinSql AS BIGINT) AS bin, vec_id % 2 AS grp
          |       FROM sc),
          |b AS (SELECT bin,
          |        CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,

@@ -27,6 +27,20 @@ object EventQueries {
   private def epochSec(c: org.apache.spark.sql.Column) =
     (c - pmod(c, lit(NanosPerSec))) / NanosPerSec
 
+  /** DuckDB twin of the batch sessionization (q35, q127): `x` flags each
+    * event that opens a session — the user's first, or one more than 30
+    * minutes after the previous.
+    */
+  private val sessionStartsSql =
+    """x AS (
+      |  SELECT user_id, event_id, epoch_ns(ts) AS tns, value,
+      |    CASE WHEN lag(epoch_ns(ts)) OVER w IS NULL
+      |         OR epoch_ns(ts) - lag(epoch_ns(ts)) OVER w > 1800000000000
+      |         THEN 1 ELSE 0 END AS new_sess
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
+      |)""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // Hourly tumbling aggregate + JSON extraction pushed into the scan
@@ -132,14 +146,7 @@ object EventQueries {
           col("duration_sec"), round(col("value_sum"), 4).as("value_sum"))
         .orderBy("user_id", "session_start")
     }, Some(
-      """WITH x AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) AS tns, value,
-        |    CASE WHEN lag(epoch_ns(ts)) OVER w IS NULL
-        |         OR epoch_ns(ts) - lag(epoch_ns(ts)) OVER w > 1800000000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
-        |),
+      s"""WITH $sessionStartsSql,
         |s AS (
         |  SELECT user_id, tns, value,
         |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY tns, event_id) AS sess_id
@@ -203,14 +210,7 @@ object EventQueries {
           round(col("total_dur_sec").cast("double") / col("n_sessions"), 6)
             .as("avg_duration_sec"))
     }, Some(
-      """WITH x AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) AS tns,
-        |    CASE WHEN lag(epoch_ns(ts)) OVER w IS NULL
-        |         OR epoch_ns(ts) - lag(epoch_ns(ts)) OVER w > 1800000000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
-        |),
+      s"""WITH $sessionStartsSql,
         |s AS (SELECT user_id, tns,
         |        sum(new_sess) OVER (PARTITION BY user_id ORDER BY tns, event_id)
         |          AS sess_id

@@ -70,6 +70,28 @@ object GraphQueries {
   private def coEdges(s: SparkSession, dir: String): DataFrame =
     coEdgeWeights(s, dir).select("u", "v")
 
+  /** Support-≥2 edge floor (q190, q197): only part pairs co-purchased in
+    * at least two orders — the same sparsifier as q157's similarity
+    * floor.
+    */
+  private def repeatedCoEdges(s: SparkSession, dir: String): DataFrame =
+    coEdgeWeights(s, dir).filter(col("w") >= 2).select("u", "v")
+
+  /** Both orientations of an undirected edge set: (u, v) → (a, b) rows. */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("u").as("a"), col("v").as("b")),
+        struct(col("v").as("a"), col("u").as("b")))).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+
+  /** Oracle twin of [[repeatedCoEdges]] as `e` and of [[bothWays]] as `adj`. */
+  private def repeatedAdjCte: String =
+    """op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      |e AS (SELECT a.p AS u, b.p AS v
+      |      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
+      |      GROUP BY a.p, b.p HAVING count(*) >= 2),
+      |adj AS (SELECT u AS a, v AS b FROM e UNION ALL SELECT v, u FROM e)""".stripMargin
+
   private def coEdgesCte: String =
     """op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       |e AS (SELECT DISTINCT a.p AS u, b.p AS v
@@ -208,11 +230,7 @@ object GraphQueries {
       // two-long-column cache is columnar, codegen-friendly, and
       // allocation-free; the canonical edges are already distinct, so
       // the count-based degree ≡ the old set size.
-      val adj = coEdges(s, dir)
-        .select(explode(array(
-          struct(col("u").as("a"), col("v").as("b")),
-          struct(col("v").as("a"), col("u").as("b")))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
+      val adj = bothWays(coEdges(s, dir))
         .repartition(col("a"))
         .persist()
       val seed = adj.groupBy("a").agg(count(lit(1)).as("dg"))
@@ -279,17 +297,9 @@ object GraphQueries {
     // aggregates. Emits the top-10 communities by size.
     Q("q190_label_propagation", (s, dir) => {
       // support-≥2 edge floor: the raw co-purchase graph is near-complete
-      // and min-label floods it to one community in a round — the floor
-      // keeps only repeated co-purchases (the same sparsifier as q157's
-      // similarity floor), giving a partition worth a census
-      val e = coEdgeWeights(s, dir)
-        .filter(col("w") >= 2).select("u", "v")
-        .persist()
-      val adj = e.select(explode(array(
-          struct(col("u").as("a"), col("v").as("b")),
-          struct(col("v").as("a"), col("u").as("b")))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .persist()
+      // and min-label floods it to one community in a round
+      val e = repeatedCoEdges(s, dir).persist()
+      val adj = bothWays(e).persist()
       var lab = adj.select(col("a").as("x")).distinct()
         .withColumn("l", col("x"))
       for (_ <- 1 to 2) {
@@ -341,11 +351,7 @@ object GraphQueries {
           col("modularity"))
         .orderBy(desc("size"), asc("community"))
     }, Some(
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         |e AS (SELECT a.p AS u, b.p AS v
-         |      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-         |      GROUP BY a.p, b.p HAVING count(*) >= 2),
-         |adj AS (SELECT u AS a, v AS b FROM e UNION ALL SELECT v, u FROM e),
+      s"""WITH $repeatedAdjCte,
          |n0 AS (SELECT DISTINCT a AS x FROM adj),
          |l0 AS (SELECT x, x AS l FROM n0),
          |l1 AS (SELECT l0.x, least(l0.l, coalesce(min(nb.l), l0.l)) AS l
@@ -387,13 +393,8 @@ object GraphQueries {
     // (q100's degree orientation doesn't apply: wedges need BOTH
     // directions at the center). Top-20 predicted links.
     Q("q197_adamic_adar", (s, dir) => {
-      val e = coEdgeWeights(s, dir)
-        .filter(col("w") >= 2).select("u", "v")
-        .persist()
-      val adj = e.select(explode(array(
-          struct(col("u").as("a"), col("v").as("b")),
-          struct(col("v").as("a"), col("u").as("b")))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
+      val e = repeatedCoEdges(s, dir).persist()
+      val adj = bothWays(e)
       // per-center sorted neighbor list + degree; the C(deg,2) wedge
       // expansion goes through the bounded-chunk pair stream (a hub
       // center's quadratic fan-out would otherwise evaluate in ONE
@@ -416,11 +417,7 @@ object GraphQueries {
       cand.join(e, Seq("u", "v"), "left_anti")
         .orderBy(desc("aa"), asc("u"), asc("v")).limit(20)
     }, Some(
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         |e AS (SELECT a.p AS u, b.p AS v
-         |      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-         |      GROUP BY a.p, b.p HAVING count(*) >= 2),
-         |adj AS (SELECT u AS a, v AS b FROM e UNION ALL SELECT v, u FROM e),
+      s"""WITH $repeatedAdjCte,
          |deg AS (SELECT a AS w, count(*) AS d FROM adj GROUP BY a),
          |wedge AS (SELECT x.a AS w, x.b AS u, y.b AS v
          |  FROM adj x JOIN adj y ON x.a = y.a AND x.b < y.b

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Tables
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,13 +23,25 @@ final case class Q(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None)
 
-/** Cross-engine determinism helpers.
+/** Cross-engine determinism helpers, and the fragments several query
+  * modules share.
   *
   * Doubles summed in different orders differ in the last ulps, so any
   * aggregate that feeds a hash comparison goes through exact decimal
   * arithmetic (identical in Spark and DuckDB) and is rounded on output.
   * Every query also carries a total ORDER BY (ties broken by key) so row
   * order is reproducible on both engines.
+  *
+  * Shared here: the exact aggregates (`dsum`, `micros`, `davg` with
+  * their SQL twins; `exactMoments` with `momentsAsDouble`); the
+  * DuckDB mirrors of the text, vector and ranking operators
+  * (`cleanTextSql`, `cosineSql`, `lloydSql`, `minMaxSql`, …); the
+  * purchase-fact joins `customerBrandLines` and `nationBrandLines`;
+  * `metaAnalog`; and `chunkedPairs`. A fragment that one module owns
+  * stays there (e.g. `DedupQueries.mergeSpans`,
+  * `VectorQueries.int8Quantized`, `RetrievalQueries.shingles`,
+  * `SketchQueries.cmsEstimates`); `LaunchSurfaceSpec`'s copy lint keeps
+  * each one defined once.
   */
 object Helpers {
 
@@ -51,6 +64,26 @@ object Helpers {
 
   def microsSql(e: String): String =
     s"CAST(CAST(($e) AS DECIMAL(20,6)) * 1000000 AS BIGINT)"
+
+  /** Exact second moments of two integer columns in one map-side-
+    * combinable aggregate: n, Σx, Σy, Σxy, Σx², Σy² summed as
+    * DECIMAL(38,0), so every sum is exact and identical on any
+    * partitioning (q44, q149, q175). [[momentsAsDouble]] reads them back.
+    */
+  def exactMoments(df: DataFrame, x: Column, y: Column): DataFrame =
+    df.agg(
+      count(lit(1)).as("n"),
+      sum(x.cast(DecimalType(38, 0))).as("sx"),
+      sum(y.cast(DecimalType(38, 0))).as("sy"),
+      sum((x * y).cast(DecimalType(38, 0))).as("sxy"),
+      sum((x * x).cast(DecimalType(38, 0))).as("sxx"),
+      sum((y * y).cast(DecimalType(38, 0))).as("syy"))
+
+  /** The six sums of [[exactMoments]] as doubles: (n, sx, sy, sxy, sxx, syy). */
+  def momentsAsDouble: (Column, Column, Column, Column, Column, Column) = (
+    col("n").cast("double"), col("sx").cast("double"),
+    col("sy").cast("double"), col("sxy").cast("double"),
+    col("sxx").cast("double"), col("syy").cast("double"))
 
   /** Exact mean: decimal sum cast double, divided by count, rounded. */
   def davg(c: Column): Column =
@@ -242,6 +275,38 @@ object Helpers {
       | CASE WHEN doc_id % 4 = 0 THEN NULL ELSE (doc_id * 37) % 1000 END AS review_count,
       | CASE WHEN doc_id % 7 = 0 THEN NULL ELSE round(n_chars/10.0, 2) END AS price
       |FROM documents""".stripMargin
+
+  /** Purchase lines with their customer and brand: lineitem ⋈ orders ⋈
+    * part in that join order (q185, q207). All three are fact-scaled, so
+    * no broadcast hint: AQE broadcasts at small SF and shuffle-joins at
+    * 100 TB.
+    */
+  def customerBrandLines(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_partkey"))
+      .join(Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .join(Tables.part(s, dir)
+        .select(col("p_partkey"), col("p_brand")),
+        col("l_partkey") === col("p_partkey"))
+
+  /** Purchase lines with the buyer's nation and the brand: lineitem ⋈
+    * orders ⋈ customer ⋈ part in that join order (q186, q211), no
+    * broadcast hints for the same reason.
+    */
+  def nationBrandLines(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_partkey"))
+      .join(Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .join(Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_nationkey")),
+        col("o_custkey") === col("c_custkey"))
+      .join(Tables.part(s, dir)
+        .select(col("p_partkey"), col("p_brand")),
+        col("l_partkey") === col("p_partkey"))
 
   /** Chunk width for [[chunkedPairs]] — ≤ ChunkB²/2 pair structs per
     * generator evaluation (~131k structs ≈ a few MB), the per-task

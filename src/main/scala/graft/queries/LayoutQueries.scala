@@ -322,18 +322,21 @@ object LayoutQueries {
     // Small-file compaction — the operational layout problem every
     // 100 TB lake hits: a fragmented write (repartition(64) → 64 files,
     // round-robin so no partition is empty) is compacted with
-    // coalesce(4) (a NARROW dependency: files merge without a shuffle).
-    // The audit scans both layouts back and proves losslessness with
-    // exact counts and decimal sums; file counts are part of the
-    // contract (deterministic by construction) — the pattern behind
-    // OPTIMIZE/auto-compaction jobs.
+    // repartition(4) → 4 files. Not coalesce(4): a narrow coalesce can
+    // only merge the scan's partitions, and a scan that packs the 64
+    // small files into fewer than 4 splits (2 at 2 cores) would write
+    // fewer files; a by-number repartition always yields exactly 4,
+    // and AQE does not coalesce it. The audit scans both layouts back
+    // and proves losslessness with exact counts and decimal sums; file
+    // counts are part of the contract (deterministic by construction)
+    // — the pattern behind OPTIMIZE/auto-compaction jobs.
     Q("q161_compaction", (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
       val li = Tables.lineitem(s, dir).select("l_orderkey", "l_quantity")
       val frag = Staging.scratchDir("frag").toString
       val comp = Staging.scratchDir("comp").toString
       li.repartition(64).write.mode("overwrite").parquet(frag)
-      s.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(comp)
+      s.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(comp)
       def audit(path: String, stage: String) =
         s.read.parquet(path)
           .withColumn("f", input_file_name()) // project first: not legal

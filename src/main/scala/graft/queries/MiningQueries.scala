@@ -95,18 +95,8 @@ object MiningQueries {
       val ranked = p
         .join(broadcast(rank2("x")), "x")
         .join(broadcast(rank2("y")), "y")
-      val agg = ranked.agg(
-        count(lit(1)).as("n"),
-        sum(col("r_x").cast(DecimalType(38, 0))).as("sx"),
-        sum(col("r_y").cast(DecimalType(38, 0))).as("sy"),
-        sum((col("r_x") * col("r_y")).cast(DecimalType(38, 0))).as("sxy"),
-        sum((col("r_x") * col("r_x")).cast(DecimalType(38, 0))).as("sxx"),
-        sum((col("r_y") * col("r_y")).cast(DecimalType(38, 0))).as("syy"))
-      val (n, sx, sy, sxy, sxx, syy) = (
-        col("n").cast("double"), col("sx").cast("double"),
-        col("sy").cast("double"), col("sxy").cast("double"),
-        col("sxx").cast("double"), col("syy").cast("double"))
-      agg.select(col("n"),
+      val (n, sx, sy, sxy, sxx, syy) = momentsAsDouble
+      exactMoments(ranked, col("r_x"), col("r_y")).select(col("n"),
         round((n * sxy - sx * sy) /
           (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6)
           .as("spearman_rho"))
@@ -516,16 +506,7 @@ object MiningQueries {
     // partitioning (the honest distributed form of MLlib's ALS — same
     // dataflow per iteration, here with an exact-arithmetic contract).
     Q("q185_als_rank1", (s, dir) => {
-      // orders and part are fact-scaled — no broadcast hint; AQE
-      // broadcasts at small SF and falls back to shuffle joins at 100 TB
-      val r = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-        .join(Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.part(s, dir)
-          .select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
+      val r = customerBrandLines(s, dir)
         .groupBy(col("o_custkey").as("c"), col("p_brand").as("b"))
         .agg(count(lit(1)).as("r"))
         .persist()
@@ -585,19 +566,8 @@ object MiningQueries {
     // rounding enters the sum), effective-brand count = 1/HHI. One
     // shuffle on (nation, brand); dims broadcast.
     Q("q186_hhi_concentration", (s, dir) => {
-      // orders/customer/part all scale with the data — no broadcast
-      // hints (AQE decides); only nation below is a true 25-row dim
-      val cells = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-        .join(Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.customer(s, dir)
-          .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(Tables.part(s, dir)
-          .select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
+      // only nation below is a true 25-row dim (broadcast)
+      val cells = nationBrandLines(s, dir)
         .groupBy(col("c_nationkey"), col("p_brand"))
         .agg(count(lit(1)).as("nb"))
       cells.groupBy("c_nationkey")

@@ -7,6 +7,7 @@ import graft.similarity.Knn
 import graft.sources.Tables
 import graft.text.StableHash
 import graft.vector.VectorOps
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,6 +17,32 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
   import Helpers._
+
+  /** The 256-byte windows of every audio payload with their RMS energy,
+    * taken from the window's exact integer sum of squared deviations
+    * (q117, q205).
+    */
+  private def audioRms(s: SparkSession, dir: String): DataFrame =
+    Multimodal.audioWindows(
+        Multimodal.mediaFromDocuments(Tables.documents(s, dir))
+          .filter(col("kind") === "audio"))
+      .withColumn("rms",
+        round(sqrt(col("sum_sq").cast("double") / col("n_bytes")), 6))
+
+  /** DuckDB twin of [[audioRms]]: `e(id, win_idx, rms)`. */
+  private val audioRmsSql =
+    """media AS (
+      |  SELECT doc_id AS id, text FROM documents
+      |  WHERE (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] = 'audio'),
+      |w AS (SELECT id, unnest(range(0, length(text), 256)) AS start, text
+      |      FROM media),
+      |win AS (SELECT id, start // 256 AS win_idx,
+      |          substr(text, CAST(start + 1 AS INT), 256) AS frame FROM w),
+      |e AS (SELECT id, win_idx, round(sqrt(CAST(list_sum(list_transform(
+      |          string_split(frame, ''), c -> CAST((ascii(c) - 128)
+      |            * (ascii(c) - 128) AS BIGINT))) AS DOUBLE)
+      |          / length(frame)), 6) AS rms
+      |      FROM win)""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -204,11 +231,7 @@ object PipelineQueries {
     // audio third of the multimodal triple (q97 image, q96 video);
     // narrow flatMap + one per-clip combine.
     Q("q117_audio_energy", (s, dir) => {
-      Multimodal.audioWindows(
-          Multimodal.mediaFromDocuments(Tables.documents(s, dir))
-            .filter(col("kind") === "audio"))
-        .withColumn("rms",
-          round(sqrt(col("sum_sq").cast("double") / col("n_bytes")), 6))
+      audioRms(s, dir)
         .groupBy("id")
         .agg(count(lit(1)).as("n_windows"),
           davg(col("rms")).as("avg_rms"),
@@ -216,18 +239,7 @@ object PipelineQueries {
           sum(when(col("rms") < 30.0, 1L).otherwise(0L)).as("n_silent"))
         .orderBy("id")
     }, Some(
-      s"""WITH media AS (
-         |  SELECT doc_id AS id, text FROM documents
-         |  WHERE (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] = 'audio'),
-         |w AS (SELECT id, unnest(range(0, length(text), 256)) AS start, text
-         |      FROM media),
-         |win AS (SELECT id, start // 256 AS win_idx,
-         |          substr(text, CAST(start + 1 AS INT), 256) AS frame FROM w),
-         |e AS (SELECT id, round(sqrt(CAST(list_sum(list_transform(
-         |          string_split(frame, ''), c -> CAST((ascii(c) - 128)
-         |            * (ascii(c) - 128) AS BIGINT))) AS DOUBLE)
-         |          / length(frame)), 6) AS rms
-         |      FROM win)
+      s"""WITH $audioRmsSql
          |SELECT id, count(*) AS n_windows, ${davgSql("rms")} AS avg_rms,
          |  max(rms) AS peak_rms,
          |  CAST(sum(CASE WHEN rms < 30.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_silent
@@ -240,11 +252,7 @@ object PipelineQueries {
     // one per clip. The segment census every audio-curation pipeline
     // needs (speech runs, longest run, active share).
     Q("q205_vad_segments", (s, dir) => {
-      val win = Multimodal.audioWindows(
-          Multimodal.mediaFromDocuments(Tables.documents(s, dir))
-            .filter(col("kind") === "audio"))
-        .withColumn("rms",
-          round(sqrt(col("sum_sq").cast("double") / col("n_bytes")), 6))
+      val win = audioRms(s, dir)
       val active = win.filter(col("rms") >= 30.0)
         .withColumn("island", col("win_idx") - row_number().over(
           Window.partitionBy("id").orderBy("win_idx")))
@@ -262,18 +270,7 @@ object PipelineQueries {
             .as("active_share"))
         .orderBy("id")
     }, Some(
-      s"""WITH media AS (
-         |  SELECT doc_id AS id, text FROM documents
-         |  WHERE (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] = 'audio'),
-         |w AS (SELECT id, unnest(range(0, length(text), 256)) AS start, text
-         |      FROM media),
-         |win AS (SELECT id, start // 256 AS win_idx,
-         |          substr(text, CAST(start + 1 AS INT), 256) AS frame FROM w),
-         |e AS (SELECT id, win_idx, round(sqrt(CAST(list_sum(list_transform(
-         |          string_split(frame, ''), c -> CAST((ascii(c) - 128)
-         |            * (ascii(c) - 128) AS BIGINT))) AS DOUBLE)
-         |          / length(frame)), 6) AS rms
-         |      FROM win),
+      s"""WITH $audioRmsSql,
          |act AS (SELECT id, win_idx,
          |    win_idx - row_number() OVER (PARTITION BY id ORDER BY win_idx)
          |      AS island

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,6 +11,15 @@ import org.apache.spark.sql.functions._
   */
 object RelationalQueries {
   import Helpers._
+
+  /** orders ⋈ customer ⋈ nation ⋈ region, the two dims broadcast below
+    * the shuffle join (q05, q08).
+    */
+  private def ordersByRegion(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
 
   val all: Seq[Q] = Seq(q110, q125, q126, q206, q211) ++ Seq(
 
@@ -102,13 +112,7 @@ object RelationalQueries {
     // Order priority by region: two broadcast dims chained below a
     // shuffle join, count-only aggregate.
     Q("q05_priority_by_region", (s, dir) => {
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      o.join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+      ordersByRegion(s, dir)
         .groupBy("r_name", "o_orderpriority")
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
         .orderBy("r_name", "o_orderpriority")
@@ -194,16 +198,10 @@ object RelationalQueries {
     // grouping nulls coalesced to 'ALL' so null-ordering semantics never
     // enter the comparison.
     Q("q08_rollup_priority", (s, dir) => {
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
       // SQL ROLLUP: the Dataset rollup API false-positives Spark's
       // ambiguous-self-join detector under this join shape (Expand
       // re-tags the grouping attributes); GROUP BY ROLLUP does not.
-      o.join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+      ordersByRegion(s, dir)
         .select(col("r_name"), col("o_orderpriority"), col("o_totalprice"))
         .createOrReplaceTempView("q08_joined")
       s.sql(
@@ -364,19 +362,7 @@ object RelationalQueries {
   // before the exchange, and its buffers spill. Output exploded back
   // to rows.
   private def q211: Q = Q("q211_group_topk_agg", (s, dir) => {
-    // orders/customer/part are fact-scaled — no broadcast hints; AQE
-    // broadcasts when a side fits and shuffle-joins at 100 TB
-    val cells = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey"))
+    val cells = nationBrandLines(s, dir)
       .groupBy(col("c_nationkey"), col("p_brand"))
       .agg(count(lit(1)).as("cnt"))
     cells.groupBy("c_nationkey")

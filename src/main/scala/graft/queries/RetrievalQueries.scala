@@ -29,18 +29,19 @@ object RetrievalQueries {
        |  SELECT doc_id, unnest(${tokensSql(cleanTextSql("text"))}) AS term
        |  FROM documents) WHERE length(term) >= 3)""".stripMargin
 
-  /** The q65 shingle shape (5-gram, StableHash64, distinct per doc) as
-    * signed 64-bit keys — identical ordering on both engines.
+  /** Distinct 5-token word shingles per document as signed 64-bit
+    * StableHash64 keys `(doc_id, <hash>)` — identical ordering on both
+    * engines (q65, q154).
     */
-  private def shingles(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
+  private[queries] def shingles(docs: DataFrame, hash: String): DataFrame =
+    docs
       .select(col("doc_id"),
         split(TextOps.cleanText(col("text")), " ").as("toks"))
       .filter(size(col("toks")) >= 5)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(toks) - 5), i -> concat_ws(' ', slice(toks, i + 1, 5)))"))
         .as("shingle"))
-      .select(col("doc_id"), StableHash64(col("shingle")).as("h"))
+      .select(col("doc_id"), StableHash64(col("shingle")).as(hash))
       .distinct()
 
   private def shinglesCte: String =
@@ -231,7 +232,7 @@ object RetrievalQueries {
     // fan-out is bounded by rare-token frequency, not document count.
     Q("q154_setsim_join", (s, dir) => {
       val theta = 0.5
-      val sh = shingles(s, dir).persist()
+      val sh = shingles(Tables.documents(s, dir), "h").persist()
       // The core pipeline, parameterized by which shingle table it runs
       // over: global-frequency prefix ranking, prefix-collision
       // candidates, exact-intersection verification. Prefix filtering is

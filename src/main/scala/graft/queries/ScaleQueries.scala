@@ -406,16 +406,10 @@ object ScaleQueries {
       val u = EventQueries.events(s, dir)
         .groupBy("user_id").agg(count(lit(1)).as("n"))
       val top = u.orderBy(desc("n"), col("user_id")).limit(20)
-      top.select(col("user_id"), col("n"),
+      SketchQueries.cmsEstimates(top.select(col("user_id"), col("n"),
           explode(array(probes: _*)).as("h"))
         .select(col("user_id"), col("n"),
-          col("h.j").as("j"), col("h.bucket").as("bucket"))
-        .join(broadcast(cms), Seq("j", "bucket"))
-        .groupBy("user_id", "n")
-        .agg(min("cnt").as("cms_est"))
-        .select(col("user_id"), col("n").as("n_exact"), col("cms_est"),
-          (col("cms_est") - col("n")).as("overcount"))
-        .orderBy(desc("n_exact"), col("user_id"))
+          col("h.j").as("j"), col("h.bucket").as("bucket")), cms)
     }, Some(SketchQueries.cmsOracleSql)),
 
     // Exact-k deterministic per-group sample (complement of q56's

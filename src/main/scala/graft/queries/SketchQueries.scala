@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.sources.Tables
 import graft.text.{StableHash, StableHash64}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -24,6 +25,18 @@ object SketchQueries {
         pmod(StableHash64(concat(lit(s"cms$j:"), user.cast("string"))),
           lit(128L)).as("bucket"))
     }
+
+  /** The CMS point estimate (min over the 4 rows' counters) of each
+    * probed user `(user_id, n, j, bucket)` against the sketch `cms(j,
+    * bucket, cnt)`, next to the exact count — q98 and q116's output.
+    */
+  private[queries] def cmsEstimates(probed: DataFrame, cms: DataFrame): DataFrame =
+    probed.join(broadcast(cms), Seq("j", "bucket"))
+      .groupBy("user_id", "n")
+      .agg(min("cnt").as("cms_est"))
+      .select(col("user_id"), col("n").as("n_exact"), col("cms_est"),
+        (col("cms_est") - col("n")).as("overcount"))
+      .orderBy(desc("n_exact"), col("user_id"))
 
   /** DuckDB replay of the CMS top-20 estimate table — the oracle for both
     * q98 (batch) and q116 (streaming; stream ≡ batch is the claim).
@@ -137,13 +150,7 @@ object SketchQueries {
           col("h.j").as("j"), col("h.bucket").as("bucket"))
       val cms = hb.groupBy("j", "bucket").agg(sum("n").as("cnt"))
       val top = u.orderBy(desc("n"), col("user_id")).limit(20)
-      top.join(hb.drop("n"), "user_id")
-        .join(broadcast(cms), Seq("j", "bucket"))
-        .groupBy("user_id", "n")
-        .agg(min("cnt").as("cms_est"))
-        .select(col("user_id"), col("n").as("n_exact"), col("cms_est"),
-          (col("cms_est") - col("n")).as("overcount"))
-        .orderBy(desc("n_exact"), col("user_id"))
+      cmsEstimates(top.join(hb.drop("n"), "user_id"), cms)
     }, Some(cmsOracleSql)),
 
     // HyperLogLog distinct-user cardinality per event type: m=64

@@ -16,6 +16,18 @@ object StatQueries {
 
   private val NanosPerDayQ172 = 86400L * 1000000000L
 
+  /** Oracle twin of [[Helpers.exactMoments]] over a preceding `m(x, y)`
+    * CTE (q44, q149): the sums in `a`, and in `d` as doubles with the
+    * count as `nd`.
+    */
+  private val momentsSql =
+    """a AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
+      |  sum(x*y) AS sxy, sum(x*x) AS sxx, sum(y*y) AS syy FROM m),
+      |d AS (SELECT CAST(n AS BIGINT) AS n, CAST(n AS DOUBLE) AS nd,
+      |  CAST(sx AS DOUBLE) AS sx, CAST(sy AS DOUBLE) AS sy,
+      |  CAST(sxy AS DOUBLE) AS sxy, CAST(sxx AS DOUBLE) AS sxx,
+      |  CAST(syy AS DOUBLE) AS syy FROM a)""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // Pearson correlation + population covariance of price vs size via
@@ -28,18 +40,8 @@ object StatQueries {
       val p = Tables.part(s, dir).select(
         micros(col("p_retailprice")).as("x"),
         micros(col("p_size").cast("double")).as("y"))
-      val agg = p.agg(
-        count(lit(1)).as("n"),
-        sum(col("x").cast(DecimalType(38, 0))).as("sx"),
-        sum(col("y").cast(DecimalType(38, 0))).as("sy"),
-        sum((col("x") * col("y")).cast(DecimalType(38, 0))).as("sxy"),
-        sum((col("x") * col("x")).cast(DecimalType(38, 0))).as("sxx"),
-        sum((col("y") * col("y")).cast(DecimalType(38, 0))).as("syy"))
-      val (n, sx, sy, sxy, sxx, syy) = (
-        col("n").cast("double"), col("sx").cast("double"),
-        col("sy").cast("double"), col("sxy").cast("double"),
-        col("sxx").cast("double"), col("syy").cast("double"))
-      agg.select(col("n"),
+      val (n, sx, sy, sxy, sxx, syy) = momentsAsDouble
+      exactMoments(p, col("x"), col("y")).select(col("n"),
         round((n * sxy - sx * sy) /
           (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6).as("corr"),
         round((sxy / n - (sx / n) * (sy / n)) / 1e12, 4).as("covar_pop"),
@@ -47,12 +49,7 @@ object StatQueries {
     }, Some(
       s"""WITH m AS (SELECT ${microsSql("p_retailprice")} AS x,
          |  ${microsSql("CAST(p_size AS DOUBLE)")} AS y FROM part),
-         |a AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |  sum(x*y) AS sxy, sum(x*x) AS sxx, sum(y*y) AS syy FROM m),
-         |d AS (SELECT CAST(n AS BIGINT) AS n, CAST(n AS DOUBLE) AS nd,
-         |  CAST(sx AS DOUBLE) AS sx, CAST(sy AS DOUBLE) AS sy,
-         |  CAST(sxy AS DOUBLE) AS sxy, CAST(sxx AS DOUBLE) AS sxx,
-         |  CAST(syy AS DOUBLE) AS syy FROM a)
+         |$momentsSql
          |SELECT n,
          | round((nd*sxy - sx*sy) / (sqrt(nd*sxx - sx*sx) * sqrt(nd*syy - sy*sy)), 6) AS corr,
          | round((sxy/nd - (sx/nd)*(sy/nd)) / 1e12, 4) AS covar_pop,
@@ -398,10 +395,7 @@ object StatQueries {
         col("tsx").cast("double"), col("tsy").cast("double"),
         col("tsxy").cast("double"), col("tsxx").cast("double"))
       val theta = (tn * tsxy - tsx * tsy) / (tn * tsxx - tsx * tsx)
-      val (n, sx, sy, sxy, sxx, syy) = (col("n").cast("double"),
-        col("sx").cast("double"), col("sy").cast("double"),
-        col("sxy").cast("double"), col("sxx").cast("double"),
-        col("syy").cast("double"))
+      val (n, sx, sy, sxy, sxx, syy) = momentsAsDouble
       val meanPre = sx / n / 1e6
       val meanPost = sy / n / 1e6
       val varPost = (syy / n - (sy / n) * (sy / n)) / 1e12
@@ -890,18 +884,8 @@ object StatQueries {
       val p = Tables.part(s, dir).select(
         micros(col("p_size").cast("double")).as("x"),
         micros(col("p_retailprice")).as("y"))
-      val agg = p.agg(
-        count(lit(1)).as("n"),
-        sum(col("x").cast(DecimalType(38, 0))).as("sx"),
-        sum(col("y").cast(DecimalType(38, 0))).as("sy"),
-        sum((col("x") * col("y")).cast(DecimalType(38, 0))).as("sxy"),
-        sum((col("x") * col("x")).cast(DecimalType(38, 0))).as("sxx"),
-        sum((col("y") * col("y")).cast(DecimalType(38, 0))).as("syy"))
-      val (n, sx, sy, sxy, sxx, syy) = (
-        col("n").cast("double"), col("sx").cast("double"),
-        col("sy").cast("double"), col("sxy").cast("double"),
-        col("sxx").cast("double"), col("syy").cast("double"))
-      agg.select(col("n"),
+      val (n, sx, sy, sxy, sxx, syy) = momentsAsDouble
+      exactMoments(p, col("x"), col("y")).select(col("n"),
         round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6).as("slope"),
         round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n / lit(1e6), 6)
           .as("intercept"),
@@ -910,12 +894,7 @@ object StatQueries {
     }, Some(
       s"""WITH m AS (SELECT ${microsSql("CAST(p_size AS DOUBLE)")} AS x,
          |  ${microsSql("p_retailprice")} AS y FROM part),
-         |a AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         |  sum(x*y) AS sxy, sum(x*x) AS sxx, sum(y*y) AS syy FROM m),
-         |d AS (SELECT CAST(n AS BIGINT) AS n, CAST(n AS DOUBLE) AS nd,
-         |  CAST(sx AS DOUBLE) AS sx, CAST(sy AS DOUBLE) AS sy,
-         |  CAST(sxy AS DOUBLE) AS sxy, CAST(sxx AS DOUBLE) AS sxx,
-         |  CAST(syy AS DOUBLE) AS syy FROM a)
+         |$momentsSql
          |SELECT n,
          | round((nd*sxy - sx*sy) / (nd*sxx - sx*sx), 6) AS slope,
          | round((sy - (nd*sxy - sx*sy) / (nd*sxx - sx*sx) * sx) / nd / 1e6, 6)

@@ -53,6 +53,74 @@ object VectorQueries {
   /** The PQ code of subspace m: its nearest centroid. */
   private def pqCode(m: Int): Column = argmin4(c => col(s"d${m}_$c"))
 
+  /** Oracle twin of [[pqDistances]]: the 16 `d{m}_{c}` columns over a
+    * row vector `v`. The oracle cannot see the collected codebook, so it
+    * re-derives the same literals from the same rows (vec_id < 4).
+    */
+  private val pqDistancesSql: String = {
+    val cb = (c: Int, m: Int) =>
+      s"(SELECT CAST(embedding AS DOUBLE[])[${m * 16 + 1}:${m * 16 + 16}] " +
+        s"FROM embeddings WHERE vec_id = $c)"
+    def d2(m: Int, c: Int) =
+      s"list_sum(list_transform(list_zip(v[${m * 16 + 1}:${m * 16 + 16}], " +
+        s"${cb(c, m)}), p -> (p[1]-p[2])*(p[1]-p[2])))"
+    (for (m <- 0 until 4; c <- 0 until 4)
+      yield s"${d2(m, c)} AS d${m}_$c").mkString(",\n  ")
+  }
+
+  /** Oracle twin of [[pqCode]]: subspace m's nearest centroid. */
+  private def pqCodeSql(m: Int): String =
+    s"CASE WHEN d${m}_0 <= d${m}_1 AND d${m}_0 <= d${m}_2 AND d${m}_0 <= d${m}_3 THEN 0 " +
+      s"WHEN d${m}_1 <= d${m}_2 AND d${m}_1 <= d${m}_3 THEN 1 " +
+      s"WHEN d${m}_2 <= d${m}_3 THEN 2 ELSE 3 END"
+
+  /** Symmetric int8 quantization of every embedding (q83, q95, q156):
+    * (vec_id, vec, scale, dq) with a per-vector absmax scale, values
+    * rounded half-up to [-127, 127] and dequantized in `dq`. The scale
+    * is bound once per row (array_repeat), so the lambda never
+    * re-evaluates the absmax per element.
+    */
+  private[queries] def int8Quantized(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))
+      .withColumn("scale",
+        array_max(transform(col("vec"), x => abs(x))) / 127.0)
+      .withColumn("dq", zip_with(col("vec"),
+        array_repeat(col("scale"), size(col("vec"))),
+        (x, sc) => least(greatest(floor(x / sc + 0.5), lit(-127.0)),
+          lit(127.0)) * sc))
+
+  /** Oracle twin of [[int8Quantized]] for q95 and q156: `dqv(vec_id, vec,
+    * dq)` after the `v` and `sc` CTEs.
+    */
+  private val int8QuantSql: String = {
+    val quant = "list_transform(vec, x -> " +
+      "least(greatest(floor(x / scale + 0.5), -127.0), 127.0) * scale)"
+    s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+       |sc AS (SELECT vec_id, vec,
+       |         list_max(list_transform(vec, x -> abs(x))) / 127.0 AS scale FROM v),
+       |dqv AS (SELECT vec_id, vec, $quant AS dq FROM sc)""".stripMargin
+  }
+
+  /** Embeddings as exact nano-integer arrays `em` (q218, q224). */
+  private def nanoEmbeddings(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).select(expr(
+      """transform(CAST(embedding AS ARRAY<DOUBLE>),
+        |  v -> CAST(CAST(v AS DECIMAL(20,9)) * 1000000000 AS BIGINT))"""
+        .stripMargin).as("em"))
+
+  /** Per upper-triangle cell (i, j ≥ i): the row count `n` and the exact
+    * Σ x_i·x_j as `sxy` — a generator-only pair stream with LONG
+    * products and a DECIMAL running sum (q218, q224; see q218).
+    */
+  private def upperPairSums(em: DataFrame): DataFrame =
+    em.select(posexplode(col("em")).as(Seq("i", "xm")), col("em"))
+      .select(col("i"), col("xm"), posexplode(col("em")).as(Seq("j", "ym")))
+      .filter(col("j") >= col("i"))
+      .groupBy(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
+      .agg(count(lit(1)).as("n"),
+        sum((col("xm") * col("ym")).cast(DecimalType(38, 0))).as("sxy"))
+
   val all: Seq[Q] = Seq(
 
     // Brute-force cosine top-k against a query vector: one scan, a
@@ -173,14 +241,7 @@ object VectorQueries {
     // broadcast join, and decimal-exact gain sums.
     Q("q95_ndcg_quant", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))
-        .withColumn("scale",
-          array_max(transform(col("vec"), x => abs(x))) / 127.0)
-        .withColumn("dq", zip_with(col("vec"),
-          array_repeat(col("scale"), size(col("vec"))),
-          (x, sc) => least(greatest(floor(x / sc + 0.5), lit(-127.0)),
-            lit(127.0)) * sc))
+      val emb = int8Quantized(s, dir)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("vec").as("qv"), col("dq").as("dqv"))
       val scored = emb.crossJoin(broadcast(q)).persist()
@@ -210,12 +271,7 @@ object VectorQueries {
           round(col("dcg").cast("double") / col("idcg").cast("double"), 6).as("ndcg"))
         .orderBy("pos")
     }, Some {
-      val quant = "list_transform(vec, x -> " +
-        "least(greatest(floor(x / scale + 0.5), -127.0), 127.0) * scale)"
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-         |sc AS (SELECT vec_id, vec,
-         |         list_max(list_transform(vec, x -> abs(x))) / 127.0 AS scale FROM v),
-         |dqv AS (SELECT vec_id, vec, $quant AS dq FROM sc),
+      s"""WITH $int8QuantSql,
          |q AS (SELECT vec AS qv, dq AS dqv FROM dqv WHERE vec_id = 0),
          |ex AS (SELECT vec_id, round(${cosineSql("vec", "qv")}, 6) AS sim
          |       FROM dqv CROSS JOIN q ORDER BY sim DESC, vec_id LIMIT 10),
@@ -259,25 +315,12 @@ object VectorQueries {
           round(err, 6).as("recon_err"))
         .orderBy("vec_id")
     }, Some {
-      // the oracle cannot see the collected codebook, so it re-derives
-      // the same literals from the same rows (vec_id < 4) via SQL
-      val cb = (c: Int, m: Int) =>
-        s"(SELECT CAST(embedding AS DOUBLE[])[${m * 16 + 1}:${m * 16 + 16}] " +
-          s"FROM embeddings WHERE vec_id = $c)"
-      def d2(m: Int, c: Int) =
-        s"list_sum(list_transform(list_zip(v[${m * 16 + 1}:${m * 16 + 16}], " +
-          s"${cb(c, m)}), p -> (p[1]-p[2])*(p[1]-p[2])))"
-      val dcols = (for (m <- 0 until 4; c <- 0 until 4)
-        yield s"${d2(m, c)} AS d${m}_$c").mkString(",\n  ")
-      def codeSql(m: Int) =
-        s"CAST(CASE WHEN d${m}_0 <= d${m}_1 AND d${m}_0 <= d${m}_2 AND d${m}_0 <= d${m}_3 THEN 0 " +
-          s"WHEN d${m}_1 <= d${m}_2 AND d${m}_1 <= d${m}_3 THEN 1 " +
-          s"WHEN d${m}_2 <= d${m}_3 THEN 2 ELSE 3 END AS BIGINT) AS c$m"
+      def codeSql(m: Int) = s"CAST(${pqCodeSql(m)} AS BIGINT) AS c$m"
       val errSql = (0 until 4)
         .map(m => s"least(d${m}_0, d${m}_1, d${m}_2, d${m}_3)").mkString(" + ")
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |d AS (SELECT vec_id,
-         |  $dcols
+         |  $pqDistancesSql
          |FROM v)
          |SELECT vec_id, ${(0 until 4).map(codeSql).mkString(", ")},
          |  round($errSql, 6) AS recon_err
@@ -328,23 +371,11 @@ object VectorQueries {
         .select(col("rank"), col("vec_id"), col("cell"),
           col("approx_d2"), col("exact_d2"))
     }, Some {
-      val cb = (c: Int, m: Int) =>
-        s"(SELECT CAST(embedding AS DOUBLE[])[${m * 16 + 1}:${m * 16 + 16}] " +
-          s"FROM embeddings WHERE vec_id = $c)"
-      def d2(m: Int, c: Int) =
-        s"list_sum(list_transform(list_zip(v[${m * 16 + 1}:${m * 16 + 16}], " +
-          s"${cb(c, m)}), p -> (p[1]-p[2])*(p[1]-p[2])))"
-      val dcols = (for (m <- 0 until 4; c <- 0 until 4)
-        yield s"${d2(m, c)} AS d${m}_$c").mkString(",\n  ")
       def full(c: Int) = s"(d0_$c + d1_$c + d2_$c + d3_$c)"
       val cellSql =
         s"CAST(CASE WHEN ${full(0)} <= ${full(1)} AND ${full(0)} <= ${full(2)} AND ${full(0)} <= ${full(3)} THEN 0 " +
           s"WHEN ${full(1)} <= ${full(2)} AND ${full(1)} <= ${full(3)} THEN 1 " +
           s"WHEN ${full(2)} <= ${full(3)} THEN 2 ELSE 3 END AS BIGINT)"
-      def codeCase(m: Int) =
-        s"CASE WHEN d${m}_0 <= d${m}_1 AND d${m}_0 <= d${m}_2 AND d${m}_0 <= d${m}_3 THEN 0 " +
-          s"WHEN d${m}_1 <= d${m}_2 AND d${m}_1 <= d${m}_3 THEN 1 " +
-          s"WHEN d${m}_2 <= d${m}_3 THEN 2 ELSE 3 END"
       // the query's ADC lookup table: the d{m}_{c} row evaluated at the
       // query vector (vec_id = 0), bound once in CTE `lt`
       val qcells = (0 until 4)
@@ -353,7 +384,7 @@ object VectorQueries {
       // per-subspace CASE picking the lt scalar by code
       val adc = (0 until 4).map { m =>
         val pick = (0 until 4).map(c =>
-          s"WHEN (${codeCase(m)}) = $c THEN (SELECT lt FROM lt WHERE m = $m AND c = $c)")
+          s"WHEN (${pqCodeSql(m)}) = $c THEN (SELECT lt FROM lt WHERE m = $m AND c = $c)")
           .mkString(" ")
         s"(CASE $pick END)"
       }.mkString(" + ")
@@ -362,7 +393,7 @@ object VectorQueries {
         .mkString(" UNION ALL ")
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |d AS MATERIALIZED (SELECT vec_id,
-         |  $dcols
+         |  $pqDistancesSql
          |FROM v),
          |lt AS MATERIALIZED ($ltRows),
          |qc AS ($qcells),
@@ -388,14 +419,7 @@ object VectorQueries {
     Q("q156_mrr_map", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.types.DecimalType
-      val emb = Tables.embeddings(s, dir)
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))
-        .withColumn("scale",
-          array_max(transform(col("vec"), x => abs(x))) / 127.0)
-        .withColumn("dq", zip_with(col("vec"),
-          array_repeat(col("scale"), size(col("vec"))),
-          (x, sc) => least(greatest(floor(x / sc + 0.5), lit(-127.0)),
-            lit(127.0)) * sc))
+      val emb = int8Quantized(s, dir)
       val qs = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("vec").as("qv"), col("dq").as("dqv"))
       val scored = emb.crossJoin(broadcast(qs)).persist()
@@ -428,12 +452,7 @@ object VectorQueries {
           round(sum("h").cast("double") / 10.0, 6).as("recall"))
         .orderBy("qid")
     }, Some {
-      val quant = "list_transform(vec, x -> " +
-        "least(greatest(floor(x / scale + 0.5), -127.0), 127.0) * scale)"
-      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-         |sc AS (SELECT vec_id, vec,
-         |         list_max(list_transform(vec, x -> abs(x))) / 127.0 AS scale FROM v),
-         |dqv AS (SELECT vec_id, vec, $quant AS dq FROM sc),
+      s"""WITH $int8QuantSql,
          |q AS (SELECT vec_id AS qid, vec AS qv, dq AS dqv FROM dqv WHERE vec_id < 10),
          |ex AS (SELECT qid, vec_id, row_number() OVER
          |         (PARTITION BY qid ORDER BY sim DESC, vec_id) AS epos
@@ -488,18 +507,8 @@ object VectorQueries {
     // order-independent and exact, with doubles only in the final
     // closed form. Per-dim totals join back broadcast (d rows).
     Q("q218_embedding_covariance", (s, dir) => {
-      val em = Tables.embeddings(s, dir).select(expr(
-        """transform(CAST(embedding AS ARRAY<DOUBLE>),
-          |  v -> CAST(CAST(v AS DECIMAL(20,9)) * 1000000000 AS BIGINT))"""
-          .stripMargin).as("em"))
-        .persist()
-      val prods = em
-        .select(posexplode(col("em")).as(Seq("i", "xm")), col("em"))
-        .select(col("i"), col("xm"), posexplode(col("em")).as(Seq("j", "ym")))
-        .filter(col("j") >= col("i"))
-        .groupBy(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
-        .agg(count(lit(1)).as("n"),
-          sum((col("xm") * col("ym")).cast(DecimalType(38, 0))).as("sxy"))
+      val em = nanoEmbeddings(s, dir).persist()
+      val prods = upperPairSums(em)
       val dims = em.select(posexplode(col("em")).as(Seq("pos", "nv")))
         .groupBy(col("pos").cast("long").as("dim"))
         .agg(sum(col("nv").cast(DecimalType(38, 0))).as("s"),
@@ -561,19 +570,8 @@ object VectorQueries {
     // DECIMAL(38,18) cast — so the driver iterates bit-identically to
     // the DuckDB twin's unrolled CTE hops.
     Q("q224_pca_power", (s, dir) => {
-      val em = Tables.embeddings(s, dir).select(expr(
-        """transform(CAST(embedding AS ARRAY<DOUBLE>),
-          |  v -> CAST(CAST(v AS DECIMAL(20,9)) * 1000000000 AS BIGINT))"""
-          .stripMargin).as("em"))
-        .persist()
-      // q218's generator-only pair stream + long products (see there)
-      val prods = em
-        .select(posexplode(col("em")).as(Seq("i", "xm")), col("em"))
-        .select(col("i"), col("xm"), posexplode(col("em")).as(Seq("j", "ym")))
-        .filter(col("j") >= col("i"))
-        .groupBy(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
-        .agg(count(lit(1)).as("n"),
-          sum((col("xm") * col("ym")).cast(DecimalType(38, 0))).as("sxy"))
+      val em = nanoEmbeddings(s, dir).persist()
+      val prods = upperPairSums(em)
       val dims = em.select(posexplode(col("em")).as(Seq("pos", "nv")))
         .groupBy(col("pos").cast("long").as("dim"))
         .agg(sum(col("nv").cast(DecimalType(38, 0))).as("s"))

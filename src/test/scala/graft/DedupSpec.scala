@@ -484,6 +484,36 @@ class DedupSpec extends SparkSpec {
     Artifacts.clearAll()
   }
 
+  test("mergeSpans is the union of half-open intervals per document") {
+    // doc 1 touches (e0 = next s0), doc 2 nests, doc 3 repeats one
+    // interval, doc 4 has a single one, doc 5 has a gap of one char
+    // between two groups
+    val spans = Seq(
+      (1L, 1L, 4L), (1L, 4L, 6L), (1L, 6L, 9L),
+      (2L, 10L, 30L), (2L, 12L, 15L), (2L, 20L, 30L),
+      (3L, 5L, 8L), (3L, 5L, 8L), (3L, 5L, 8L),
+      (4L, 7L, 8L),
+      (5L, 1L, 3L), (5L, 4L, 6L), (5L, 2L, 3L))
+    // brute force: cover every char position, then read off the maximal
+    // runs of covered positions as [first, last + 1)
+    val expected = spans.groupBy(_._1).toSeq.flatMap { case (d, ss) =>
+      val covered = ss.flatMap { case (_, s0, e0) => s0 until e0 }.distinct.sorted
+      covered.foldLeft(List.empty[(Long, Long)]) {
+        case ((s0, e0) :: t, p) if p == e0 => (s0, p + 1) :: t
+        case (acc, p) => (p, p + 1) :: acc
+      }.map { case (s0, e0) => (d, s0, e0) }
+    }.toSet
+    val got = graft.queries.DedupQueries
+      .mergeSpans(spans.toDF("doc_id", "s0", "e0"))
+      .collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("span_start"),
+        r.getAs[Long]("span_end")))
+      .toSet
+    assert(got == expected)
+    assert(expected.filter(_._1 == 1L) == Set((1L, 1L, 9L)), "touching spans merge")
+    assert(expected.count(_._1 == 5L) == 2)
+  }
+
   test("substring dedup matches a driver-side string-level recompute") {
     // independent oracle: gram STRINGS (no hashes) + brute interval
     // union — also guards against a StableHash gram collision

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * one `SparkSession.builder` call (Harness), environment reads only in
   * the mains that own them, `spark.graft.*` key strings only in
   * GraftConf, and cached state released only by the callers'
-  * `catalog.clearCache()` and `Artifacts.clearAll()`.
+  * `catalog.clearCache()` and `Artifacts.clearAll()`. It also keeps
+  * every code fragment in one place: no six code lines are copied.
   */
 class LaunchSurfaceSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -62,6 +63,25 @@ class LaunchSurfaceSpec extends AnyFunSuite {
 
   test("spark.graft.* key strings appear only in GraftConf") {
     assert(filesMatching("\"spark.graft.") === Seq("GraftConf.scala"))
+  }
+
+  test("no run of 6 code lines appears twice in src/main (copy lint)") {
+    // lines are stripped; blank lines, comment lines and lines of only
+    // brackets, commas and semicolons are skipped. A copied fragment
+    // belongs in one definition (Helpers, or the module that owns it).
+    val window = 6
+    def code(l: String): Boolean = l.nonEmpty && !l.startsWith("//") &&
+      !l.startsWith("*") && !l.startsWith("/**") && !l.forall("()[]{},;".contains(_))
+    val starts = sources.flatMap { case (p, src) =>
+      val kept = src.linesIterator.zipWithIndex
+        .map { case (l, i) => (l.strip, i + 1) }
+        .filter(l => code(l._1)).toSeq
+      kept.sliding(window).filter(_.size == window)
+        .map(w => w.map(_._1) -> s"${root.relativize(p)}:${w.head._2}")
+    }
+    val copies = starts.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).mkString(" = ")).toSeq.sorted
+    if (copies.nonEmpty) fail(copies.mkString("copied windows:\n", "\n", ""))
   }
 
   test("registry runners clear the cache; no hand-rolled cache release") {

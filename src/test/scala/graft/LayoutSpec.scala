@@ -30,6 +30,17 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("q161 compacts to exactly 4 files when the scan packs fragments into fewer splits") {
+    // minPartitionNum=1 lets the scan pack the 64 small fragment files
+    // into fewer than 4 splits, as a 2-core session does by default
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try {
+      val files = SparkEntry.queries("q161_compaction")(spark, sf).collect()
+        .map(r => r.getAs[String]("stage") -> r.getAs[Long]("n_files")).toMap
+      assert(files === Map("1_fragmented" -> 64L, "2_compacted" -> 4L))
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+  }
+
   test("debounce keeps at most n_total and at least one event per type") {
     val rows = SparkEntry.queries("q72_debounce")(spark, sf).collect()
     assert(rows.nonEmpty)
