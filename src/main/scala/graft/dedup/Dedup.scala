@@ -154,12 +154,6 @@ object Dedup {
         sequence(lit(0), size(toks) - n),
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
 
-  /** Exact token/shingle-set Jaccard between two pre-distinct arrays. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b))
-    inter.cast("double") / (size(a) + size(b) - inter)
-  }
-
   // ------------------------------------------------------------- MinHash
 
   /** 128-bit content key of a sorted-distinct hash array — two
@@ -359,7 +353,7 @@ object Dedup {
     * absent from the output (an empty pair list yields an empty frame).
     * Callers that need identity labels for singletons left-join the
     * corpus against this frame and coalesce to the vertex's own id, as
-    * q43 does.
+    * q43 and q169 do (DedupQueries.clusterLabels).
     *
     * The verified near-dup pair list is orders of magnitude smaller than
     * the corpus (dup rate × corpus, skinny id pairs) — at 100 TB of
@@ -426,7 +420,9 @@ object Dedup {
     * — (id, label) with label = component minimum, only vertices present
     * in `pairs` are labeled — but the edge list never crosses the driver,
     * so it is the 100 TB path when the pair list itself is huge
-    * (reference semantics: the dedup cluster step of dedup.py).
+    * (reference semantics: the dedup cluster step of dedup.py). Query
+    * code reaches it only through [[connectedComponents]]' size switch,
+    * above `maxDriverPairs` (LaunchSurfaceSpec holds `src/main` to that).
     *
     * Each round is two rounds of shuffles over a skinny (child, parent)
     * long-pair frame that SHRINKS geometrically: large-star hangs every
@@ -446,8 +442,9 @@ object Dedup {
     * drops their references; the sets shrink geometrically, so peak
     * storage is ~2× the first round's skinny long-pair frame.
     */
-  def connectedComponentsDistributed(pairs: DataFrame, aCol: String,
-                                     bCol: String, maxRounds: Int = 50): DataFrame = {
+  private[graft] def connectedComponentsDistributed(
+      pairs: DataFrame, aCol: String, bCol: String,
+      maxRounds: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
     val verts = pairs
       .select(explode(array(col(aCol).cast("long"), col(bCol).cast("long"))).as("id"))
@@ -567,20 +564,12 @@ object Dedup {
 
   // -------------------------------------------------- hyperplane LSH
 
-  /** Deterministic pseudo-random hyperplanes (seeded java.util.Random —
-    * stable across JVMs), shared by bucket computation and ANN search.
-    */
-  def planes(dim: Int, tables: Int, bitsPerTable: Int,
-             seed: Long = 42L): Array[Array[Array[Double]]] = {
-    val rnd = new java.util.Random(seed)
-    Array.fill(tables, bitsPerTable, dim)(rnd.nextGaussian())
-  }
-
   /** Rademacher (±1) hyperplanes derived from StableHash bits: the
     * sign-projection LSH family with a bit-exact DuckDB twin (no RNG, no
-    * libm — the gaussian family's Box-Muller would hit cross-engine
+    * libm — a gaussian family's Box-Muller would hit cross-engine
     * cos/log ulp differences). Sign(t,j,i) = parity of
-    * hash64("t:j:i"). Used by the oracle-checked ANN path (q25).
+    * hash64("t:j:i"). The one plane family: the oracle-checked ANN path
+    * (q25) and the embedding near-dup candidates (q19) both use it.
     */
   def radePlanes(dim: Int, tables: Int, bitsPerTable: Int): Array[Array[Array[Double]]] =
     Array.tabulate(tables, bitsPerTable, dim) { (t, j, i) =>
@@ -635,7 +624,7 @@ object Dedup {
                      tables: Int = 8, bitsPerTable: Int = 4): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val pl = planes(dim, tables, bitsPerTable)
+    val pl = radePlanes(dim, tables, bitsPerTable)
     val base = vecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
 
     // Persisted for the same reason as the MinHash band rows: the bucket

@@ -3,7 +3,7 @@ package graft.queries
 import graft.dedup.Dedup
 import graft.sources.Tables
 import graft.text.{StableHash, StableHash64, TextOps}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -203,6 +203,21 @@ object DedupQueries {
       |FROM grp GROUP BY doc_id, gid
       |ORDER BY doc_id, span_start""".stripMargin
 
+  /** The corpus's `id`, the caller's `extra` columns and `cluster`, the
+    * canonical (minimum) id of the doc's near-dup cluster (q43, q169).
+    * Edges are the LINEAR star+rep list — the same components as the
+    * full pair graph (Dedup.minHashClusterEdges) without materializing
+    * the C(g,2) pairs of an exact-duplicate group. Docs in no pair are
+    * their own cluster, so `label` (the components' own column) is null
+    * for them; it stays in the frame for the caller to drop.
+    */
+  private def clusterLabels(corpus: DataFrame, extra: Column*): DataFrame = {
+    val pairs = Dedup.minHashClusterEdges(corpus, "id", "text", threshold = 0.5)
+    corpus.select(col("id") +: extra: _*)
+      .join(Dedup.connectedComponents(pairs, "id_a", "id_b"), Seq("id"), "left")
+      .withColumn("cluster", coalesce(col("label"), col("id")))
+  }
+
   val all: Seq[Q] = Seq(
 
     // MinHash + banded LSH candidates, exact shingle-Jaccard verify.
@@ -248,22 +263,16 @@ object DedupQueries {
     // recursive-CTE transitive closure over the brute-force pair list.
     // Docs in no pair are their own cluster.
     Q("q43_dedup_clusters", (s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      // the LINEAR star+rep edge list — same components as the full pair
-      // graph (Dedup.minHashClusterEdges) without materializing the
-      // C(g,2) pairs of an exact-duplicate group
-      val pairs = Dedup.minHashClusterEdges(corpus, "id", "text", threshold = 0.5)
-      val clustered = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      corpus.select(col("id"))
-        .join(clustered, Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("cluster"))
+      clusterLabels(dupCorpus(Tables.documents(s, dir)))
+        .select(col("id"), col("cluster"))
         .orderBy("id")
     }, Some(
       s"""WITH RECURSIVE $clusterReachSql
          |SELECT id, min(r) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin)),
 
-    // Embedding near-dup: random-hyperplane LSH candidates, exact cosine
-    // verify ≥ 0.99. Corpus = embeddings + perturbed copies; margin
+    // Embedding near-dup: Rademacher-hyperplane LSH candidates (the
+    // Dedup.radePlanes family q25 uses), exact cosine verify ≥ 0.99.
+    // Corpus = embeddings + perturbed copies; margin
     // analysis: original pairs max out at cosine 0.513, perturbed copies
     // sit in [0.9983, 0.9986] — no boundary sensitivity. 8 tables × 12
     // bits: true-pair (θ/π≈0.0175) per-table match 0.98255¹² ≈ 0.81 →
@@ -350,13 +359,8 @@ object DedupQueries {
     // join (identical semantics in both engines, no arg_max tie
     // ambiguity); cluster state never exceeds one row per cluster.
     Q("q169_dedup_keep_best", (s, dir) => {
-      val corpus = dupCorpus(Tables.documents(s, dir))
-      val pairs = Dedup.minHashClusterEdges(corpus, "id", "text", threshold = 0.5)
-      val clustered = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      val withC = corpus
-        .select(col("id"), length(col("text")).cast("long").as("len"))
-        .join(clustered, Seq("id"), "left")
-        .withColumn("cluster", coalesce(col("label"), col("id")))
+      val withC = clusterLabels(dupCorpus(Tables.documents(s, dir)),
+          length(col("text")).cast("long").as("len"))
         // persisted: feeds both the census and the argmax probe — without
         // it the whole LSH+connected-components pipeline runs twice
         .persist()

@@ -124,6 +124,30 @@ object GraphQueries {
     */
   private val FrontMaxBytes = 160L << 20
 
+  /** q229's burst labels. Linking each order to the customer's previous
+    * one when the gap is ≤ 7 days makes every connected component a run
+    * of consecutive orders in (o_orderdate, o_orderkey) order — an
+    * island. So the lag window that finds the gaps also labels them: a
+    * break flag (no previous order, or a gap that is null or > 7), its
+    * running sum as the island id, and min(o_orderkey) per island. One
+    * exchange on o_custkey, no edge frame, no join, no iteration; a
+    * whale customer costs one task either way, as the lag already does.
+    */
+  private[graft] def orderBursts(orders: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    val gap = datediff(to_date(col("o_orderdate")),
+      to_date(lag(col("o_orderdate"), 1).over(w)))
+    orders
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+        when(gap <= 7, 0).otherwise(1).as("brk"))
+      .withColumn("island", sum(col("brk")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select(col("o_orderkey"), min(col("o_orderkey")).over(
+        Window.partitionBy("o_custkey", "island")).as("burst"))
+      .orderBy("o_orderkey")
+  }
+
   val all: Seq[Q] = Seq(
 
     // Exact triangle count + global transitivity. Edges are oriented
@@ -518,35 +542,11 @@ object GraphQueries {
 
     // Temporal burst clustering: orders of one customer chain into a
     // "burst" while consecutive gaps stay ≤ 7 days; each order is labeled
-    // with its burst's minimum orderkey. The chains are connected
-    // components of per-customer consecutive-order edges — built with ONE
-    // lag window on (custkey) and labeled by the fully-distributed
-    // large-star/small-star contraction (Dedup.connectedComponentsDistributed,
-    // Kiveris et al. 2014). Chains are PATH graphs — the worst case for
-    // star contraction — so this is the registry's convergence-depth
-    // exercise of the 100 TB CC engine (the driver union-find path is
-    // oracle-covered by q43); the edge list never crosses the driver.
-    // Oracle: the same recursive-CTE min-label closure q43 uses.
-    Q("q229_order_bursts", (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val o = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      val e = o
-        .withColumn("prev_key", lag(col("o_orderkey"), 1).over(w))
-        .withColumn("gap", datediff(to_date(col("o_orderdate")),
-          to_date(lag(col("o_orderdate"), 1).over(w))))
-        .filter(col("prev_key").isNotNull && col("gap") <= 7)
-        .select(col("o_orderkey").as("a"), col("prev_key").as("b"))
-      val labels = graft.dedup.Dedup.connectedComponentsDistributed(e, "a", "b")
-        .select(col("id").as("o_orderkey"), col("label").as("burst"))
-      o.select(col("o_orderkey"))
-        .join(labels, Seq("o_orderkey"), "left")
-        .select(col("o_orderkey"),
-          coalesce(col("burst"), col("o_orderkey")).as("burst"))
-        .orderBy("o_orderkey")
-    }, Some(
-      """WITH RECURSIVE lagged AS (
+    // with its burst's minimum orderkey (gaps-and-islands, see
+    // orderBursts). Oracle: the recursive-CTE min-label closure q43 uses,
+    // over the same per-customer consecutive-order edges.
+    Q("q229_order_bursts", (s, dir) => orderBursts(Tables.orders(s, dir)),
+      Some("""WITH RECURSIVE lagged AS (
         |  SELECT o_orderkey,
         |    lag(o_orderkey) OVER (PARTITION BY o_custkey
         |      ORDER BY o_orderdate, o_orderkey) AS prev_key,

@@ -36,6 +36,12 @@ class LaunchSurfaceSpec extends AnyFunSuite {
     assert(sites === Seq("Harness.scala"))
   }
 
+  test("the star-contraction CC engine is called only from Dedup (behind the size switch)") {
+    // private[graft] still admits graft.queries; query code must go
+    // through Dedup.connectedComponents, which delegates past 50M pairs
+    assert(filesMatching("connectedComponentsDistributed(") === Seq("Dedup.scala"))
+  }
+
   test("engine packages never read the environment") {
     val readers = sources.filter { case (_, src) =>
       src.contains("sys.env") || src.contains("System.getenv")

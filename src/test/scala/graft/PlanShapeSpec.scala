@@ -424,6 +424,47 @@ class PlanShapeSpec extends SparkSpec {
       s"run-keyed exchange over un-aggregated rows: ${raw.map(_.nodeName)}")
   }
 
+  test("order bursts label islands in one window pass: no join, no checkpoint, one hash exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val p = staticPlan("q229_order_bursts")
+    assert(p.collect { case j: BaseJoinExec => j }.isEmpty, p.toString.take(4000))
+    // a checkpointed or cached frame surfaces as an RDD or in-memory scan
+    assert(p.collect {
+      case r: RDDScanExec => r
+      case m: InMemoryTableScanExec => m
+    }.isEmpty, p.toString.take(4000))
+    val hashKeys = p.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning =>
+        h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+      }
+    assert(hashKeys == Seq(Seq("o_custkey")), p.toString.take(4000))
+  }
+
+  test("q229 builds and counts in 3 Spark jobs at sf0.001") {
+    // jobs launched while building the frame count too: an iterative
+    // labeling (per-round checkpoints, signature and set-check jobs)
+    // runs them there, and the star contraction ran 30 here
+    val sc = spark.sparkContext
+    sc.setJobGroup("q229-count", "build and count q229")
+    try SparkEntry.queries("q229_order_bursts")(spark, sf).count()
+    finally sc.clearJobGroup()
+    // a marker job in its own group: the status store sees jobs in
+    // submission order, so once the marker is visible, so is every job
+    // the build and count above launched
+    sc.setJobGroup("q229-marker", "close the count")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("q229-marker").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    val jobs = sc.statusTracker.getJobIdsForGroup("q229-count")
+    assert(jobs.length == 3, s"jobs in the group: ${jobs.mkString(", ")}")
+  }
+
   test("graph family serves edges from the build-once artifact, never rescanning lineitem") {
     // same contract as the SA annex: once the weighted co-purchase edge
     // table is checkpoint-materialized, each consumer's own plan reads

@@ -1,7 +1,11 @@
 package graft
 
+import java.time.LocalDateTime
+
 import graft.queries.{GraphQueries, SketchQueries}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** Driver-side brute-force cross-checks for the sketch and graph
   * operators at sf0.001 — independent of the DuckDB oracle, these pin
@@ -140,5 +144,42 @@ class SketchGraphSpec extends SparkSpec {
     val got = q("q103_mad_anomaly")
       .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("n_outliers")).toMap
     assert(got == expected)
+  }
+
+  test("order bursts equal connected components of the lag edges") {
+    import spark.implicits._
+    def at(day: Int, hour: Int = 0) = Some(LocalDateTime.of(2024, 1, 1, hour, 0).plusDays(day))
+    val orders = Seq(
+      // a one-order customer
+      (50L, 1L, at(0)),
+      // gaps of exactly 7 (linked) and 8 days (a new burst); the first
+      // burst's minimum key is its second order
+      (10L, 2L, at(0)), (5L, 2L, at(7)), (7L, 2L, at(15)),
+      // equal dates: the order key orders them
+      (30L, 3L, at(40)), (20L, 3L, at(40)), (25L, 3L, at(40)), (40L, 3L, at(60)),
+      // gaps count calendar days: 7 (6 by the clock), then 8
+      (70L, 4L, at(80, 23)), (71L, 4L, at(87, 1)), (72L, 4L, at(95)),
+      // a null date links to nothing; keys not monotone in date
+      (80L, 5L, None), (82L, 5L, at(100)), (81L, 5L, at(102)))
+      .toDF("o_orderkey", "o_custkey", "o_orderdate")
+    val got = GraphQueries.orderBursts(orders).collect()
+    assert(got.map(_.getLong(0)).toSeq == got.map(_.getLong(0)).toSeq.sorted)
+    val bursts = got.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the same lag edges labeled by the union-find connected components
+    val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    val edges = orders
+      .withColumn("prev_key", lag(col("o_orderkey"), 1).over(w))
+      .withColumn("gap", datediff(to_date(col("o_orderdate")),
+        to_date(lag(col("o_orderdate"), 1).over(w))))
+      .filter(col("prev_key").isNotNull && col("gap") <= 7)
+      .select(col("o_orderkey").as("a"), col("prev_key").as("b"))
+    val cc = graft.dedup.Dedup.connectedComponents(edges, "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val keys = orders.select("o_orderkey").as[Long].collect()
+    assert(got.length == keys.length)
+    assert(bursts == keys.map(k => k -> cc.getOrElse(k, k)).toMap)
+    assert(bursts == Map(50L -> 50L, 10L -> 5L, 5L -> 5L, 7L -> 7L,
+      30L -> 20L, 20L -> 20L, 25L -> 20L, 40L -> 40L,
+      70L -> 70L, 71L -> 70L, 72L -> 72L, 80L -> 80L, 82L -> 81L, 81L -> 81L))
   }
 }
